@@ -11,34 +11,55 @@ its publish/resume machinery:
   stage 3  1-NN regrid to the output lattice (J1)              [JOIN/RESAMPLE]
   stage 4  derive + mask + sink — polygon mask (J5), north-up
            flip + float32 + nodata at the edge (K1) to a REAL
-           GeoTIFF, the grid to REAL NetCDF-3 (K4), stations
-           to a REAL GeoPackage layer (K2)                     [SINK]
-  publish  dir-index JSON (K6) + per-partition lineage commit
-           through the versioned manifest (T1/F10): killing the
-           job mid-run and re-invoking completes only missing
-           (variable, day) partitions — tested.
+           GeoTIFF, the grid to REAL NetCDF-3 (K4) and a REAL
+           GeoPackage coverage (K3)                            [SINK]
+  publish  dir-index JSON (K6) from the committed manifest + per-partition
+           lineage commit through the versioned manifest (T1/F10): killing
+           the job mid-run and re-invoking completes only missing
+           (variable, day) partitions — tested. Each partition's input
+           fingerprint covers the events files (path, size, mtime), the
+           variable and the lattice, so a corrected input re-runs it.
 
-Everything heavy is distributed (Spark agg + cell-ring regrid join); only
-the dimension-sized final raster grid is collected for the file write,
-exactly the reference's per-day export unit.
+Like the reference, each day raster is computed ONCE and every output is
+written from it. Each stage is executed once and collected once:
+  - the aggregated field (dimension-sized: ≤ 512 scatter points here) is
+    executed by the one collect that also sizes it for the kNN strategy
+    (operators/knn._pick_strategy) and carries its values;
+  - regrid + mask over the lattice (`regrid_to_lattice`) is one map-only
+    Spark job, collected once as Arrow;
+  - that one table feeds the GeoTIFF, GeoPackage and NetCDF-3 sinks (one
+    numpy grid) and is the partition's lineage payload (an Arrow-backed
+    frame, so the lineage write never re-executes the plan).
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lineage import run_partitioned
 from ..operators.pip import pip_fixed
 from ..operators.regrid import lattice, regrid_nearest_join
-from ..sources.sinks import export_field_netcdf3, export_raster_geotiff
+from ..sources.sinks import (
+    cells_grid,
+    export_field_netcdf3,
+    export_raster_geotiff,
+    manifest_index_json,
+)
 
 # output lattice (the reference's 0.04-degree viewer lattice, scaled to
 # the sandbox fixture): a small window over the study area
 LAT0, LON0, STEP, N_LON, N_LAT = 32.0, -126.0, 0.5, 16, 12
+# the lattice stage is map-only: below this many cells per task, task
+# launch cost outweighs the parallelism (a 16x12 day raster is one task)
+LATTICE_CELLS_PER_TASK = 65_536
 
 
 def field_for_day(
@@ -85,6 +106,51 @@ def field_from_netcdf(
     )
 
 
+def regrid_to_lattice(
+    spark: SparkSession,
+    src: DataFrame,
+    values: tuple[str, ...] = ("value",),
+    mask: bool = True,
+    lon0: float = LON0,
+    lat0: float = LAT0,
+    step: float = STEP,
+    n_lon: int = N_LON,
+    n_lat: int = N_LAT,
+) -> pa.Table:
+    """Stage 3 (+ the J5 mask), shared by every day-raster builder: 1-NN
+    regrid of the source field onto the output lattice — values[0] is the
+    regridded value, the rest ride the same neighbor — then the polygon
+    mask, as ONE map-only Spark job collected once as Arrow. Columns:
+    query_id, gi, gj, lon, lat, *values[, polygon_id]."""
+    tasks = -(-n_lon * n_lat // LATTICE_CELLS_PER_TASK)
+    tgt = lattice(spark, lon0, lat0, step, n_lon, n_lat, partitions=tasks)
+    nn = regrid_nearest_join(
+        src, tgt, value_col=values[0], res=6, max_ring=8, carry=values[1:]
+    )
+    cols = ["query_id", "gi", "gj", "lon", "lat", *values]
+    if mask:
+        nn, cols = pip_fixed(nn), cols + ["polygon_id"]
+    return nn.select(*cols).toArrow()
+
+
+def lineage_payload(spark: SparkSession, cells: pa.Table) -> DataFrame:
+    """A partition's lineage payload: an Arrow-backed frame over the
+    collected lattice, written as one file — the lineage write never
+    re-executes the plan that produced it."""
+    return spark.createDataFrame(cells).coalesce(1)
+
+
+def masked_cells(cells: pa.Table) -> pa.Table:
+    """(i, j, mean_val) of a masked lattice: cells outside every study
+    polygon → NULL (nodata at the sink)."""
+    inside = pc.is_valid(cells["polygon_id"])
+    return pa.table({
+        "i": cells["gi"],
+        "j": cells["gj"],
+        "mean_val": pc.if_else(inside, cells["value"], None),
+    })
+
+
 def build_day_raster_from_netcdf(
     spark: SparkSession, nc_path: str, variable: str, day: str, out_dir: str
 ) -> "np.ndarray":
@@ -92,23 +158,12 @@ def build_day_raster_from_netcdf(
     daily: NetCDF granules IN, masked north-up GeoTIFF OUT,
     write_daily_average.py:632-709). Stages 3-4 of build_day_raster over a
     NetCDF-ingested source field; returns the north-up array written."""
-    src = field_from_netcdf(spark, nc_path, variable)
-    tgt = lattice(spark, LON0, LAT0, STEP, N_LON, N_LAT, partitions=8)
-    regridded = regrid_nearest_join(src, tgt, res=6, max_ring=8).join(
-        tgt.select("query_id", "gi", "gj", "lon", "lat"), "query_id"
-    )
-    masked = pip_fixed(regridded).withColumn(
-        "value_masked",
-        F.when(F.col("polygon_id").isNotNull(), F.col("value")),
-    )
-    cells = masked.select(
-        F.col("gi").alias("i"), F.col("gj").alias("j"),
-        F.col("value_masked").alias("mean_val"),
-    )
+    cells = regrid_to_lattice(spark, field_from_netcdf(spark, nc_path, variable))
     os.makedirs(out_dir, exist_ok=True)
     return export_raster_geotiff(
-        cells, os.path.join(out_dir, f"{variable}_{day}_from_nc.tif"),
-        west=LON0, south=LAT0, dx=STEP, dy=STEP, n_i=N_LON, n_j=N_LAT,
+        cells_grid(masked_cells(cells), N_LON, N_LAT),
+        os.path.join(out_dir, f"{variable}_{day}_from_nc.tif"),
+        west=LON0, south=LAT0, dx=STEP, dy=STEP,
     )
 
 
@@ -116,26 +171,15 @@ def build_day_raster(
     spark: SparkSession, sf_dir: str, variable: str, day: str, out_dir: str
 ) -> DataFrame:
     """Stages 3-4 for one (variable, day): regrid to the lattice, polygon
-    mask, export real GeoTIFF + NetCDF; returns the lattice rows written
-    (the partition's parquet payload for the lineage table)."""
-    src = field_for_day(spark, sf_dir, variable, day)
-    tgt = lattice(spark, LON0, LAT0, STEP, N_LON, N_LAT, partitions=8)
-    regridded = regrid_nearest_join(src, tgt, res=6, max_ring=8).join(
-        tgt.select("query_id", "gi", "gj", "lon", "lat"), "query_id"
-    )
-    # J5: mask cells outside every study polygon → null (nodata at sink)
-    masked = pip_fixed(regridded).withColumn(
-        "value_masked",
-        F.when(F.col("polygon_id").isNotNull(), F.col("value")),
-    )
-    cells = masked.select(
-        F.col("gi").alias("i"), F.col("gj").alias("j"),
-        F.col("value_masked").alias("mean_val"),
-    )
+    mask, export real GeoTIFF + GeoPackage + NetCDF from one collected
+    grid; returns the lattice rows written (the partition's parquet payload
+    for the lineage table) as an Arrow-backed frame."""
+    cells = regrid_to_lattice(spark, field_for_day(spark, sf_dir, variable, day))
+    grid = cells_grid(masked_cells(cells), N_LON, N_LAT)
     os.makedirs(out_dir, exist_ok=True)
     northup = export_raster_geotiff(
-        cells, os.path.join(out_dir, f"{variable}_{day}.tif"),
-        west=LON0, south=LAT0, dx=STEP, dy=STEP, n_i=N_LON, n_j=N_LAT,
+        grid, os.path.join(out_dir, f"{variable}_{day}.tif"),
+        west=LON0, south=LAT0, dx=STEP, dy=STEP,
     )
     # K3: the same raster appended as a 2D-gridded-coverage subdataset in
     # the day's GeoPackage (the reference's third raster container)
@@ -147,13 +191,24 @@ def build_day_raster(
         field_name=variable,
     )
     export_field_netcdf3(
-        cells, os.path.join(out_dir, f"{variable}_{day}.nc"),
+        grid, os.path.join(out_dir, f"{variable}_{day}.nc"),
         lons=np.array([LON0 + i * STEP for i in range(N_LON)]),
         lats=np.array([LAT0 + j * STEP for j in range(N_LAT)]),
         var_name=variable,
     )
-    return masked.select(
-        "query_id", "gi", "gj", "lon", "lat", "value", "polygon_id"
+    return lineage_payload(spark, cells)
+
+
+def input_fingerprint(sf_dir: str) -> str:
+    """What a day partition's output depends on besides its key: the path,
+    size and mtime of every events file, and the lattice constants."""
+    root = os.path.join(sf_dir, "events.parquet")
+    files = [root] if os.path.isfile(root) else sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
+    )
+    stats = [(f, os.stat(f).st_size, os.stat(f).st_mtime_ns) for f in files]
+    return json.dumps(
+        {"events": stats, "lattice": [LAT0, LON0, STEP, N_LON, N_LAT]}
     )
 
 
@@ -165,19 +220,22 @@ def run_daily_job(
     days: tuple[str, ...] = ("2024-01-02", "2024-01-03"),
 ) -> dict:
     """The full daily driver: one lineage partition per (variable, day),
-    resumable/idempotent via the manifest anti-join; writes the dir-index
-    JSON at the end (ref: write_daily_average.py:662-663)."""
-    from ..sources.sinks import dir_index_json
-
+    resumable/idempotent via the manifest anti-join (a partition re-runs
+    when its input fingerprint changed); writes the dir-index JSON of the
+    committed partitions at the end (ref: write_daily_average.py:662-663)."""
     keys = [f"{v}__{d}" for v in variables for d in days]
+    inputs = input_fingerprint(sf_dir)
+
+    def fingerprint(key: str) -> str:
+        return hashlib.sha1(f"{inputs}|{key}".encode()).hexdigest()
 
     def build(s: SparkSession, key: str) -> DataFrame:
         v, d = key.split("__")
         return build_day_raster(s, sf_dir, v, d, os.path.join(out_root, "rasters"))
 
-    summary = run_partitioned(spark, out_root, keys, build)
+    summary = run_partitioned(spark, out_root, keys, build, fingerprint=fingerprint)
     idx_path = os.path.join(out_root, "index.json")
     with open(idx_path, "w") as fh:
-        fh.write(dir_index_json(out_root))
+        fh.write(manifest_index_json(out_root))
     summary["index_json"] = idx_path
     return summary

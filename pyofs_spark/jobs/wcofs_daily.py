@@ -18,10 +18,12 @@ composition:
            (grid side broadcasts; u/v meet in one (i,j) shuffle)
   stage 3  dir/mag              JVM-side atan2/hypot (C5 kernel semantics:
            dir = (atan2(e, n) + π)·180/π, mag = hypot — wcofs.py:629-633)
-  stage 4  1-NN regrid          operators/regrid.regrid_nearest_join
-           (cell-ring join; exactly kernels.regrid_nearest)
+  stage 4  1-NN regrid          jobs/daily.regrid_to_lattice — the same
+           one-job lattice stage as the daily job (exactly
+           kernels.regrid_nearest), collected once
   stage 5  sinks                real GeoTIFF (K1) + GPKG 2D-gridded
-           coverage (K3), north-up/float32/nodata
+           coverage (K3), north-up/float32/nodata, all from that one
+           collected table
   publish  lineage manifest commit per day (T1/F10) — kill + re-invoke
            completes only missing days; tested in tests/test_wcofs_daily.py
 
@@ -42,14 +44,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lineage import run_partitioned
-from ..operators.regrid import lattice, regrid_nearest_join
 from ..sources.grids import (
     WCOFS_POLE,
     build_curvilinear_grid,
     variable_grid_map,
 )
 from ..sources.scan import read_netcdf3_grid
-from ..sources.sinks import export_raster_geotiff
+from ..sources.sinks import cells_grid, export_raster_geotiff
+from .daily import lineage_payload, regrid_to_lattice
 
 # fixture geometry: a coarse rotated-pole window over the WCOFS domain
 # (test-scaled; the production grid only changes these numbers)
@@ -179,49 +181,34 @@ def build_wcofs_day(
     n_lon: int,
     n_lat: int,
 ) -> DataFrame:
-    """Stages 4-5 for one day: 1-NN regrid dir/mag to the viewer lattice,
-    export mag + dir GeoTIFFs and a GPKG coverage. Returns the lattice
-    rows (the day's lineage-partition payload)."""
-    pts = rotated_dirmag_for_day(spark, nc_dir, day, grid)
-    tgt = lattice(spark, lon0, lat0, lstep, n_lon, n_lat, partitions=8)
-    nn = regrid_nearest_join(
-        pts, tgt, value_col="mag", res=6, max_ring=8
-    )
-    # the 1-NN assignment is shared: direction rides the same neighbor.
-    # persist: the day's lattice feeds FOUR actions (mag tif, dir tif,
-    # GPKG coverage array, lineage parquet write) — uncached, each would
-    # recompute the whole scan->rotate->regrid lineage. The cache is
-    # dimension-sized (one day's viewer raster); run_wcofs_daily releases
-    # it when the next day's partition starts.
-    out = (
-        nn.join(pts.select("point_id", "direction"), "point_id", "left")
-        .join(tgt.select("query_id", "gi", "gj", "lon", "lat"), "query_id")
-        .select("query_id", "gi", "gj", "lon", "lat", "mag", "direction")
-        .persist()
+    """Stages 4-5 for one day: 1-NN regrid dir/mag to the viewer lattice
+    (direction rides mag's neighbor) as one collected lattice stage, then
+    mag + dir GeoTIFFs and a GPKG coverage from that one table. Returns the
+    lattice rows (the day's lineage-partition payload) as an Arrow-backed
+    frame."""
+    cells = regrid_to_lattice(
+        spark, rotated_dirmag_for_day(spark, nc_dir, day, grid),
+        values=("mag", "direction"), mask=False,
+        lon0=lon0, lat0=lat0, step=lstep, n_lon=n_lon, n_lat=n_lat,
     )
     os.makedirs(out_dir, exist_ok=True)
-    arrays = {}
-    for vname in ("mag", "direction"):
-        arrays[vname] = export_raster_geotiff(
-            out.select(
-                F.col("gi").alias("i"), F.col("gj").alias("j"),
-                F.col(vname).alias("mean_val"),
-            ),
+    arrays = {
+        vname: export_raster_geotiff(
+            cells_grid(cells, n_lon, n_lat, "gi", "gj", vname),
             os.path.join(out_dir, f"wcofs_{vname}_{day}.tif"),
             west=lon0, south=lat0, dx=lstep, dy=lstep,
-            n_i=n_lon, n_j=n_lat,
         )
+        for vname in ("mag", "direction")
+    }
     from ..sources.gpkg import write_gpkg_raster
 
-    # the GPKG coverage reuses the mag export's north-up array — same
-    # grid, no second materialization
     write_gpkg_raster(
         os.path.join(out_dir, f"wcofs_{day}.gpkg"), "mag_cov",
         arrays["mag"],
         west=lon0, north=lat0 + n_lat * lstep, dx=lstep, dy=lstep,
         field_name="mag",
     )
-    return out
+    return lineage_payload(spark, cells)
 
 
 def run_wcofs_daily(
@@ -259,23 +246,13 @@ def run_wcofs_daily(
     else:
         lat0, lon0, lstep, n_lon, n_lat = lattice_spec
 
-    prev: list[DataFrame] = []
-
     def build(s: SparkSession, day: str) -> DataFrame:
-        # release the previous day's persisted lattice (its lineage
-        # parquet is already written once run_partitioned calls us again)
-        while prev:
-            prev.pop().unpersist()
-        df = build_wcofs_day(
+        return build_wcofs_day(
             s, nc_dir, day, grid, os.path.join(out_root, "rasters"),
             lat0, lon0, lstep, n_lon, n_lat,
         )
-        prev.append(df)
-        return df
 
     summary = run_partitioned(spark, out_root, days, build)
-    while prev:
-        prev.pop().unpersist()
     summary["lattice"] = {
         "lat0": float(lat0), "lon0": float(lon0), "step": float(lstep),
         "n_lon": int(n_lon), "n_lat": int(n_lat),

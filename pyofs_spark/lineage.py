@@ -280,6 +280,18 @@ class Manifest:
         return removed
 
 
+def parquet_rows(path: str) -> int:
+    """Row count of a written parquet directory from its files' footers —
+    metadata only, no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+
+
 def run_partitioned(
     spark: SparkSession,
     out_root: str,
@@ -312,7 +324,7 @@ def run_partitioned(
         df = build_partition(spark, key)
         path = os.path.join(out_root, f"part_key={key}")
         df.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
+        n = parquet_rows(path)
         wall = time.time() - t0
         log.record(key, fingerprint(key), n, wall)  # metrics sink
         manifest.commit(  # snapshot publish — makes the partition visible

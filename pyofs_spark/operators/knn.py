@@ -32,6 +32,8 @@ operators/skew.py pre-splits hot buckets.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -46,8 +48,25 @@ def _sql_str(s: str) -> str:
     return "'" + str(s).replace("'", "''") + "'"
 
 
+def _sql_value(v, dtype: str) -> str:
+    """Exact SQL literal of one collected numeric value, typed as its source
+    column (NaN/inf go through their string form; flit cannot spell them)."""
+    if v is None:
+        lit = "NULL"
+    elif isinstance(v, float):
+        lit = flit(v) if math.isfinite(v) else _sql_str(repr(v))
+    else:
+        lit = repr(v)
+    return f"CAST({lit} AS {dtype})"
+
+
 def _inline_topk_sql(
-    rows: list[tuple], k: int, point_key: str, lon_sql: str, lat_sql: str
+    rows: list[tuple],
+    k: int,
+    point_key: str,
+    lon_sql: str,
+    lat_sql: str,
+    with_index: bool = False,
 ) -> str:
     """topk expression over a literal point list as ONE generated SQL string.
 
@@ -55,13 +74,18 @@ def _inline_topk_sql(
     — identical semantics to the Column-by-Column construction (struct
     ordering is lexicographic by field: dist2 then point id), but a single
     F.expr parse instead of ~8 py4j round-trips per point (guide §1/§5:
-    measured 0.85 s of pure driver time per invocation at 13 points)."""
+    measured 0.85 s of pure driver time per invocation at 13 points).
+
+    with_index appends each point's position in `rows` as a last struct
+    field `_i` (after the point id, so it never changes the order)."""
     terms = ", ".join(
         "named_struct('dist2', "
-        f"(({lon_sql}) - {flit(px)}) * (({lon_sql}) - {flit(px)})"
-        f" + (({lat_sql}) - {flit(py)}) * (({lat_sql}) - {flit(py)}), "
-        f"{_sql_str(point_key)}, {_sql_str(pid)})"
-        for pid, px, py in rows
+        f"(({lon_sql}) - {flit(r[1])}) * (({lon_sql}) - {flit(r[1])})"
+        f" + (({lat_sql}) - {flit(r[2])}) * (({lat_sql}) - {flit(r[2])}), "
+        f"{_sql_str(point_key)}, {_sql_str(r[0])}"
+        + (f", '_i', {i}" if with_index else "")
+        + ")"
+        for i, r in enumerate(rows)
     )
     return f"slice(sort_array(array({terms})), 1, {k})"
 
@@ -76,9 +100,62 @@ INLINE_POINTS_THRESHOLD = 512  # below this, fold points into the plan (no shuff
 BRUTE_POINTS_THRESHOLD = 20_000  # below this, broadcast brute-force wins
 
 
+def _pick_strategy(points: DataFrame, cols: tuple[str, ...]) -> tuple[str, list | None]:
+    """Size the points side and pick the strategy from the measured size
+    (*To Partition, or Not to Partition*, SIGMOD 2021). One
+    limit(INLINE_POINTS_THRESHOLD + 1) collect both measures the side and,
+    when it is inline-sized, IS the fetch of its rows (`cols`); count()
+    runs only past the inline threshold. Returns (strategy, rows or None)."""
+    rows = points.select(*cols).limit(INLINE_POINTS_THRESHOLD + 1).collect()
+    if len(rows) <= INLINE_POINTS_THRESHOLD:
+        return "inline", rows
+    n_points = points.count()
+    return ("brute" if n_points <= BRUTE_POINTS_THRESHOLD else "rings"), None
+
+
+def _knn_inline(
+    queries: DataFrame,
+    points_rows: list[tuple],
+    k: int,
+    point_key: str,
+    payload: tuple[tuple[str, str], ...] = (),
+) -> DataFrame:
+    """SHUFFLE-FREE kNN for dimension-sized points (stations): the point
+    list is folded into the plan as a literal struct array; per query row
+    we sort (dist2, point_id) structs and slice the top k. Pure map →
+    embarrassingly parallel, the optimal plan at any scale when the dim side
+    is tiny. Struct ordering = lexicographic by field (dist2 then point_id)
+    — the same deterministic tie-break. Keeps every query column and appends
+    (point_key, dist2, knn_rank, *payload names).
+
+    points_rows are (point_id, lon, lat, *payload values); `payload` names
+    and types the trailing values. Each payload column is one literal array
+    indexed by the winner's position: constant folding makes it a single
+    array literal, so the generated code does not embed the values and is
+    reused across calls whose point coordinates repeat (a daily field)."""
+    topk = F.expr(
+        _inline_topk_sql(points_rows, k, point_key, "lon", "lat", bool(payload))
+    )
+    values = [
+        F.expr(
+            "element_at(array({}), _s._i + 1)".format(
+                ", ".join(_sql_value(r[3 + c], dtype) for r in points_rows)
+            )
+        ).alias(name)
+        for c, (name, dtype) in enumerate(payload)
+    ]
+    return queries.select("*", F.posexplode(topk).alias("_r", "_s")).select(
+        *queries.columns,
+        F.col(f"_s.{point_key}").alias(point_key),
+        F.col("_s.dist2").alias("dist2"),
+        (F.col("_r") + 1).alias("knn_rank"),
+        *values,
+    )
+
+
 def knn_join(
     queries: DataFrame,
-    points: DataFrame,
+    points: DataFrame | None,
     k: int,
     res: int = 6,
     query_key: str = "query_id",
@@ -91,77 +168,57 @@ def knn_join(
     """Exact kNN join: for each query row, the k nearest point rows.
 
     queries: (query_key, lon, lat, ...); points: (point_key, lon, lat, ...).
-    Returns (query cols..., point_key, dist2, knn_rank) with
+    Returns (query_key, point_key, dist2, knn_rank) with
     knn_rank ∈ [1, k] ordered by (dist2, point_key).
 
     strategy:
+      'inline' — fold the points into the plan as literals (see _knn_inline).
       'brute' — broadcast the points and window over the full cross product.
                 Optimal when the points side is dimension-sized (stations):
                 one map-side join + one window shuffle, no iteration.
       'rings' — expanding-cell-ring passes (scales to large points sides).
-      'auto'  — count the points side (cheap: it's the small side by
-                contract) and pick. This mirrors Catalyst's broadcast-vs-
-                shuffle decision, which cannot see through the ring loop.
+      'auto'  — measure the points side and pick (_pick_strategy). This
+                mirrors Catalyst's broadcast-vs-shuffle decision, which
+                cannot see through the ring loop.
 
     points_rows: optional pre-collected [(point_id, lon, lat), ...] for the
     'inline' strategy — skips the per-invocation points.collect() Spark job
     (a dimension table the caller already holds driver-side, e.g. the
     STATIONS constant, costs ~0.5 s of createDataFrame+collect per call
-    otherwise; guide §5: no driver data work on the query path).
+    otherwise; guide §5: no driver data work on the query path). With
+    points_rows, `points` may be None, but only under strategy='inline'.
     """
+    if points is None and (points_rows is None or strategy != "inline"):
+        raise ValueError(
+            "knn_join: points=None needs points_rows and strategy='inline' "
+            f"(got strategy={strategy!r}, points_rows "
+            f"{'given' if points_rows is not None else 'missing'})"
+        )
+    if strategy == "auto":
+        strategy, points_rows = _pick_strategy(points, (point_key, "lon", "lat"))
+    if strategy == "inline":
+        if points_rows is None:
+            points_rows = points.select(point_key, "lon", "lat").collect()
+        return _knn_inline(queries, points_rows, k, point_key).select(
+            query_key, point_key, "dist2", "knn_rank"
+        )
     size = cells.cell_size_deg(res)
     nx = cells.nx(res)
     q = _with_cell_xy(queries, res).select(
         query_key, F.col("lon").alias("_qlon"), F.col("lat").alias("_qlat"), "_cx", "_cy"
     )
-    # the inline fast path never touches the points DataFrame (the caller
-    # may pass points=None with points_rows instead), so only build the
-    # celled points projection for the join-based strategies
-    p = None
-    if not (strategy == "inline" and points_rows is not None):
-        p = _with_cell_xy(points, res).select(
-            point_key,
-            F.col("lon").alias("_plon"),
-            F.col("lat").alias("_plat"),
-            (F.col("_cy") * nx + F.col("_cx")).alias("_pcell"),
-        )
-    if strategy == "auto":
-        n_points = points.count()
-        if n_points <= INLINE_POINTS_THRESHOLD:
-            strategy = "inline"
-        elif n_points <= BRUTE_POINTS_THRESHOLD:
-            strategy = "brute"
-        else:
-            strategy = "rings"
+    p = _with_cell_xy(points, res).select(
+        point_key,
+        F.col("lon").alias("_plon"),
+        F.col("lat").alias("_plat"),
+        (F.col("_cy") * nx + F.col("_cx")).alias("_pcell"),
+    )
     # The broadcast hint only makes sense for the dimension-sized paths;
     # 'rings' exists precisely because the points side is too big to
     # broadcast — hinting it there would push the full table to every
     # executor (and the driver) in each ring join.
-    if broadcast_points and strategy != "rings" and p is not None:
+    if broadcast_points and strategy != "rings":
         p = F.broadcast(p)
-    if strategy == "inline":
-        # SHUFFLE-FREE path for dimension-sized points (stations): the point
-        # list is folded into the plan as a literal struct array; per query
-        # row we sort (dist2, point_id) structs and slice the top k. Pure
-        # map → embarrassingly parallel, the optimal plan at any scale when
-        # the dim side is tiny. Struct ordering = lexicographic by field
-        # (dist2 then point_id) — the same deterministic tie-break.
-        if points_rows is None:
-            points_rows = [
-                (r[point_key], r["lon"], r["lat"])
-                for r in points.select(point_key, "lon", "lat").collect()
-            ]
-        topk = F.expr(
-            _inline_topk_sql(points_rows, k, point_key, "_qlon", "_qlat")
-        )
-        return q.select(
-            query_key, F.posexplode(topk).alias("_r", "_s")
-        ).select(
-            query_key,
-            F.col(f"_s.{point_key}").alias(point_key),
-            F.col("_s.dist2").alias("dist2"),
-            (F.col("_r") + 1).alias("knn_rank"),
-        )
     if strategy == "brute":
         win = Window.partitionBy(query_key).orderBy("dist2", point_key)
         return (
@@ -305,19 +362,37 @@ def nn_value_join(
     query_key: str = "query_id",
     point_key: str = "point_id",
     max_ring: int = 4,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """1-NN value transfer — the regrid-nearest spatial join
     (semantics of wcofs.py:1791-1827 with tie-break (d², point_id)).
-    Returns (query_key, point_key, value_col, dist2)."""
-    nn = knn_join(
-        queries,
-        points.filter(F.col(value_col).isNotNull()),
-        k=1,
-        res=res,
-        query_key=query_key,
-        point_key=point_key,
-        max_ring=max_ring,
-    )
-    return nn.join(
-        points.select(point_key, value_col), point_key, "left"
-    ).select(query_key, point_key, value_col, "dist2")
+    Points whose value_col is NULL are dropped first; the `carry` columns
+    ride along from the same neighbor. Returns every query column plus
+    (point_key, value_col, *carry, dist2).
+
+    An inline-sized points side is fetched ONCE together with its values
+    (the same collect that measures it) and folded into the plan, so the
+    result is one map-only stage over the queries that never re-reads the
+    points side. Larger sides join their values and the query columns
+    back."""
+    values = (value_col, *carry)
+    points = points.filter(F.col(value_col).isNotNull())
+    strategy, rows = _pick_strategy(points, (point_key, "lon", "lat", *values))
+    if strategy == "inline":
+        payload = tuple(
+            (c, points.schema[c].dataType.simpleString()) for c in values
+        )
+        nn = _knn_inline(queries, rows, 1, point_key, payload)
+    else:
+        nn = knn_join(
+            queries,
+            points,
+            k=1,
+            res=res,
+            query_key=query_key,
+            point_key=point_key,
+            max_ring=max_ring,
+            strategy=strategy,
+        ).join(points.select(point_key, *values), point_key, "left")
+        nn = queries.join(nn, query_key)
+    return nn.select(*queries.columns, point_key, *values, "dist2")

@@ -57,10 +57,13 @@ def regrid_nearest_join(
     source_key: str = "point_id",
     target_key: str = "query_id",
     max_ring: int = 4,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """1-NN value transfer from scattered sources to target points.
     NaN/NULL sources are dropped first (interpolate_grid drops NaN cells,
-    wcofs.py:1800-1807). Exactly matches kernels.regrid_nearest."""
+    wcofs.py:1800-1807). Exactly matches kernels.regrid_nearest. `carry`
+    source columns ride the same neighbor; returns every target column plus
+    (source_key, value_col, *carry, dist2)."""
     return nn_value_join(
         targets,
         sources,
@@ -69,6 +72,7 @@ def regrid_nearest_join(
         query_key=target_key,
         point_key=source_key,
         max_ring=max_ring,
+        carry=carry,
     )
 
 

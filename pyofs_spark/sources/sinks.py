@@ -11,8 +11,11 @@ notes"):
 - output partitioned by (variable, day, cell_prefix) — the layout that
   makes Iceberg/parquet partition pruning fire for the reference's
   per-(variable, date) access pattern (write_daily_average.py:289-349)
-- dir-index manifest (ref: write_json.py:15-48) — from the lineage table,
-  not a filesystem walk.
+- dir-index manifest (ref: write_json.py:15-48) — for a lineage-managed
+  output, from the committed manifest snapshot, not a filesystem walk, so
+  a partition directory left uncommitted by a crash is never listed
+  (`manifest_index_json`); `dir_index_json` walks a plain tile-table tree,
+  which has no manifest.
 """
 
 from __future__ import annotations
@@ -83,8 +86,8 @@ def write_vector_points(
 
 
 def dir_index_json(path: str) -> str:
-    """Manifest of the output tree (ref: write_json.py:15-48) — nested dict
-    of partition directories. On Iceberg this is a metadata-table query."""
+    """Manifest of a tile-table tree (ref: write_json.py:15-48) — nested
+    dict of partition directories. On Iceberg this is a metadata-table query."""
     tree: dict = {}
     for root, dirs, files in os.walk(path):
         rel = os.path.relpath(root, path)
@@ -99,6 +102,19 @@ def dir_index_json(path: str) -> str:
     return json.dumps(tree, sort_keys=True)
 
 
+def manifest_index_json(out_root: str) -> str:
+    """Dir-index of a lineage-managed output (ref: write_json.py:15-48):
+    one node per partition in the committed manifest snapshot, with its row
+    count. An orphan `part_key=` directory left by a crash is not listed."""
+    from ..lineage import Manifest
+
+    parts = Manifest(out_root).current()["partitions"]
+    return json.dumps(
+        {e["path"]: {"n_rows": e["n_rows"]} for e in parts.values()},
+        sort_keys=True,
+    )
+
+
 def read_tiles(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
@@ -107,76 +123,84 @@ def read_tiles(spark: SparkSession, path: str) -> DataFrame:
 # REAL file-format exports (round 3): GeoTIFF / NetCDF-3 / GeoPackage via
 # the pure-stdlib writers in geotiff.py / netcdf3.py / gpkg.py. One raster
 # per (variable, day) is dimension-sized (exactly the reference's per-day
-# export unit, wcofs.py:645-711), so the grid assembly is a driver-side
-# collect; the heavy aggregation stays distributed in write_tile_table.
+# export unit, wcofs.py:645-711): the caller collects its cells ONCE (as
+# Arrow), cells_grid assembles the grid, and every sink writes that array;
+# the heavy aggregation stays distributed in write_tile_table.
 # ---------------------------------------------------------------------------
 
 
+def cells_grid(
+    cells: "pa.Table",
+    n_i: int | None = None,
+    n_j: int | None = None,
+    i_col: str = "i",
+    j_col: str = "j",
+    val_col: str = "mean_val",
+    nodata: float = NODATA,
+) -> "np.ndarray":
+    """Collected raster cells (i=col, j=row, j ascending = ascending lat)
+    → float32 grid of shape (n_j, n_i), missing and NULL cells → nodata.
+    Pass n_i/n_j (the caller-known lattice size) so a day whose top rows
+    carry no data still yields the full grid; without them the dims are
+    inferred from the cells present. Cells outside the grid are skipped:
+    unguarded, a stray index would crash the export or — if negative —
+    silently wrap to the opposite edge."""
+    import numpy as np
+
+    ci = cells[i_col].to_numpy().astype(np.int64)
+    cj = cells[j_col].to_numpy().astype(np.int64)
+    vals = cells[val_col].fill_null(nodata).to_numpy()
+    ni = n_i if n_i is not None else int(ci.max(initial=-1)) + 1
+    nj = n_j if n_j is not None else int(cj.max(initial=-1)) + 1
+    grid = np.full((nj, ni), nodata, dtype=np.float32)
+    ok = (0 <= ci) & (ci < ni) & (0 <= cj) & (cj < nj)
+    grid[cj[ok], ci[ok]] = vals[ok]
+    return grid
+
+
 def export_raster_geotiff(
-    cells: DataFrame,
+    grid: "np.ndarray",
     path: str,
     west: float,
     south: float,
     dx: float,
     dy: float,
-    i_col: str = "i",
-    j_col: str = "j",
-    val_col: str = "mean_val",
     nodata: float = NODATA,
-    n_i: int | None = None,
-    n_j: int | None = None,
 ) -> "np.ndarray":
-    """Export one raster grid (i=col, j=row, j ascending = ascending lat)
-    as a real north-up float32 GeoTIFF: missing cells → nodata, row order
-    FLIPPED so row 0 is the northmost row (ref: wcofs.py:658-659,682-683).
-    Pass n_i/n_j (the caller-known lattice size) so a day whose top rows
-    carry no data still writes the full grid; without them the dims are
-    inferred from the data present. Returns the north-up array."""
-    import numpy as np
-
+    """Export one raster grid (row j = ascending lat, as cells_grid builds
+    it) as a real north-up float32 GeoTIFF: row order FLIPPED so row 0 is
+    the northmost row (ref: wcofs.py:658-659,682-683). Returns the north-up
+    array."""
     from .geotiff import write_geotiff
 
-    rows = cells.select(i_col, j_col, val_col).collect()
-    ni = n_i if n_i is not None else max((r[0] for r in rows), default=-1) + 1
-    nj = n_j if n_j is not None else max((r[1] for r in rows), default=-1) + 1
-    grid = np.full((nj, ni), nodata, dtype=np.float32)
-    for ci, cj, v in rows:
-        # skip cells outside the declared lattice (same contract as
-        # export_field_netcdf3; unguarded, a stray index would crash the
-        # export or — if negative — silently wrap to the opposite edge)
-        if 0 <= cj < nj and 0 <= ci < ni:
-            grid[cj, ci] = nodata if v is None else v
     northup = grid[::-1]
     write_geotiff(
-        path, northup, west, south + nj * dy, dx, dy, nodata=nodata
+        path, northup, west, south + grid.shape[0] * dy, dx, dy, nodata=nodata
     )
     return northup
 
 
 def export_field_netcdf3(
-    cells: DataFrame,
+    grid: "np.ndarray",
     path: str,
     lons: "np.ndarray",
     lats: "np.ndarray",
     var_name: str,
-    i_col: str = "i",
-    j_col: str = "j",
-    val_col: str = "mean_val",
     nodata: float = NODATA,
     attrs: dict | None = None,
 ) -> None:
-    """Export one gridded field as a real classic NetCDF-3 file with
-    lat/lon coordinate variables and a _FillValue'd float32 data variable
-    (ref: the reference's to_netcdf outputs, rtofs.py:390)."""
+    """Export one gridded field (shape (len(lats), len(lons)), as cells_grid
+    builds it) as a real classic NetCDF-3 file with lat/lon coordinate
+    variables and a _FillValue'd float32 data variable (ref: the
+    reference's to_netcdf outputs, rtofs.py:390)."""
     import numpy as np
 
     from .netcdf3 import write_netcdf3
 
-    rows = cells.select(i_col, j_col, val_col).collect()
-    grid = np.full((len(lats), len(lons)), nodata, dtype=np.float32)
-    for ci, cj, v in rows:
-        if 0 <= cj < len(lats) and 0 <= ci < len(lons):
-            grid[cj, ci] = nodata if v is None else v
+    if grid.shape != (len(lats), len(lons)):
+        raise ValueError(
+            f"grid shape {grid.shape} != (lats, lons) {(len(lats), len(lons))}"
+        )
     write_netcdf3(
         path,
         dims={"lat": len(lats), "lon": len(lons)},
@@ -185,7 +209,7 @@ def export_field_netcdf3(
                     {"units": "degrees_north"}),
             "lon": (("lon",), np.asarray(lons, np.float64),
                     {"units": "degrees_east"}),
-            var_name: (("lat", "lon"), grid,
+            var_name: (("lat", "lon"), grid.astype(np.float32, copy=False),
                        {"_FillValue": np.float32(nodata)}),
         },
         global_attrs=attrs or {"Conventions": "CF-1.6"},

@@ -72,12 +72,10 @@ def wcofs_streaming_etl(
             }
         )
         for day in days:
-            # build_wcofs_day returns its persisted day lattice; the
-            # stream has no later reader, so release it immediately
             build_wcofs_day(
                 spark, nc_dir, day, grid, out_dir,
                 lat0, lon0, lstep, n_lon, n_lat,
-            ).unpersist()
+            )
 
     ws = (
         arrivals.load(nc_dir)

@@ -1,0 +1,164 @@
+"""Daily raster job under failure and changed inputs: a crash between any
+two steps of a partition re-runs exactly that partition on re-invocation,
+readers never see the orphan, a rewritten events file invalidates the
+committed partitions, and index.json lists only committed partitions.
+Also the knn_join points=None contract and the job budget of one day
+raster (one field collect, one lattice collect, one lineage write)."""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
+from conftest import SF_DIR
+
+VARIABLES, DAYS = ("sst", "ssh"), ("2024-01-02",)
+KEYS = ["sst__2024-01-02", "ssh__2024-01-02"]
+
+
+def _rows(spark, out):
+    from pyofs_spark.lineage import read_output
+
+    return sorted(tuple(r) for r in read_output(spark, out).collect())
+
+
+@pytest.fixture(scope="module")
+def clean(spark, tmp_path_factory):
+    """Rows and index of one uninterrupted run."""
+    from pyofs_spark.jobs.daily import run_daily_job
+
+    out = str(tmp_path_factory.mktemp("clean"))
+    s = run_daily_job(spark, SF_DIR, out, VARIABLES, DAYS)
+    assert sorted(s["ran"]) == sorted(KEYS)
+    return _rows(spark, out), json.load(open(s["index_json"]))
+
+
+def _crash_after_sinks(monkeypatch):
+    """The ssh build raises after its last sink file is written, before
+    run_partitioned's lineage write."""
+    from pyofs_spark.jobs import daily
+
+    real = daily.export_field_netcdf3
+
+    def export(grid, path, *args, **kwargs):
+        real(grid, path, *args, **kwargs)
+        if os.path.basename(path).startswith("ssh_"):
+            raise RuntimeError("crash after sinks")
+
+    monkeypatch.setattr(daily, "export_field_netcdf3", export)
+
+
+def _crash_in_commit(monkeypatch):
+    """The ssh manifest commit raises after its parquet write."""
+    from pyofs_spark import lineage
+
+    real = lineage.Manifest.commit
+
+    def commit(self, part_key, *args, **kwargs):
+        if part_key.startswith("ssh__"):
+            raise RuntimeError("crash in commit")
+        return real(self, part_key, *args, **kwargs)
+
+    monkeypatch.setattr(lineage.Manifest, "commit", commit)
+
+
+@pytest.mark.parametrize("inject", [_crash_after_sinks, _crash_in_commit])
+def test_crash_reruns_exactly_that_partition(spark, tmp_path, clean, inject):
+    from pyofs_spark.jobs.daily import run_daily_job
+    from pyofs_spark.lineage import read_output
+
+    out = str(tmp_path / "out")
+    with pytest.MonkeyPatch.context() as mp:
+        inject(mp)
+        with pytest.raises(RuntimeError, match="crash"):
+            run_daily_job(spark, SF_DIR, out, VARIABLES, DAYS)
+    # readers see only the committed partition, whatever is on disk
+    keys = {r.part_key for r in read_output(spark, out).select("part_key").collect()}
+    assert keys == {"sst__2024-01-02"}
+
+    again = run_daily_job(spark, SF_DIR, out, VARIABLES, DAYS)
+    assert again["ran"] == ["ssh__2024-01-02"]
+    assert again["skipped"] == ["sst__2024-01-02"]
+    rows, index = clean
+    assert _rows(spark, out) == rows
+    assert json.load(open(again["index_json"])) == index
+
+
+def test_index_lists_only_committed_partitions(spark, tmp_path):
+    """A part_key= directory that no commit made visible (a crash between
+    parquet write and manifest commit) stays out of index.json."""
+    from pyofs_spark.jobs.daily import N_LAT, N_LON, run_daily_job
+
+    out = str(tmp_path / "out")
+    orphan = os.path.join(out, "part_key=ssh__2024-01-02")
+    os.makedirs(orphan)
+    pq.write_table(
+        pq.read_table(os.path.join(SF_DIR, "events.parquet")).slice(0, 5),
+        os.path.join(orphan, "part-00000.parquet"),
+    )
+    s = run_daily_job(spark, SF_DIR, out, ("sst",), DAYS)
+    assert json.load(open(s["index_json"])) == {
+        "part_key=sst__2024-01-02": {"n_rows": N_LON * N_LAT}
+    }
+
+
+def test_rewritten_events_invalidate_committed_partitions(spark, tmp_path):
+    from pyofs_spark.jobs.daily import run_daily_job
+    from pyofs_spark.sources.geotiff import read_geotiff
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    events = os.path.join(sf, "events.parquet")
+    shutil.copyfile(os.path.join(SF_DIR, "events.parquet"), events)
+    out = str(tmp_path / "out")
+    tif = os.path.join(out, "rasters", "sst_2024-01-02.tif")
+
+    first = run_daily_job(spark, sf, out, VARIABLES, DAYS)
+    assert sorted(first["ran"]) == sorted(KEYS)
+    before = read_geotiff(tif)["data"]
+
+    unchanged = run_daily_job(spark, sf, out, VARIABLES, DAYS)
+    assert unchanged["ran"] == [] and sorted(unchanged["skipped"]) == sorted(KEYS)
+
+    # a corrected day of input: same path, new content
+    table = pq.read_table(events)
+    i = table.schema.get_field_index("value")
+    pq.write_table(table.set_column(i, "value", pc.multiply(table["value"], 2.0)), events)
+    corrected = run_daily_job(spark, sf, out, VARIABLES, DAYS)
+    assert sorted(corrected["ran"]) == sorted(KEYS) and corrected["skipped"] == []
+    after = read_geotiff(tif)["data"]
+    assert (after != before).any()
+
+
+def test_day_raster_job_budget(spark, tmp_path):
+    """One day partition costs at most five Spark jobs: the field collect
+    that sizes and fetches the scatter points, the one lattice collect
+    that feeds every sink, and the lineage write (no read-back)."""
+    from pyofs_spark.jobs.daily import run_daily_job
+
+    sc = spark.sparkContext
+    sc.setJobGroup("daily-budget", "one day partition")
+    try:
+        s = run_daily_job(spark, SF_DIR, str(tmp_path / "out"), ("sst",), DAYS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert s["ran"] == ["sst__2024-01-02"]
+    assert len(sc.statusTracker().getJobIdsForGroup("daily-budget")) <= 5
+
+
+def test_knn_join_points_none_needs_inline_rows(spark):
+    from pyofs_spark.operators.knn import knn_join
+
+    q = spark.createDataFrame([(1, 0.0, 0.0)], "query_id long, lon double, lat double")
+    rows = [(7, 1.0, 1.0), (8, 0.5, 0.5)]
+    for kwargs in ({}, {"strategy": "inline"}, {"strategy": "brute", "points_rows": rows},
+                   {"strategy": "rings", "points_rows": rows}, {"points_rows": rows}):
+        with pytest.raises(ValueError, match="points=None"):
+            knn_join(q, None, k=1, **kwargs)
+    got = knn_join(q, None, k=1, strategy="inline", points_rows=rows).collect()
+    assert [(r.query_id, r.point_id, r.knn_rank) for r in got] == [(1, "8", 1)]

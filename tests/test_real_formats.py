@@ -152,7 +152,7 @@ def test_export_raster_geotiff_northup(spark):
     """Sink integration: tile cells (j ascending = ascending lat) export
     north-up (row 0 = max lat), nodata-filled, float32 — K1 semantics on
     the real format."""
-    from pyofs_spark.sources.sinks import export_raster_geotiff
+    from pyofs_spark.sources.sinks import cells_grid, export_raster_geotiff
 
     d = tempfile.mkdtemp()
     try:
@@ -161,7 +161,9 @@ def test_export_raster_geotiff_northup(spark):
             [(0, 0, 1.0), (1, 0, 2.0), (0, 1, 3.0), (1, 1, 4.0), (2, 1, None)],
             "i int, j int, mean_val double",
         )
-        export_raster_geotiff(cells, p, west=-126.0, south=30.0, dx=0.5, dy=0.5)
+        export_raster_geotiff(
+            cells_grid(cells.toArrow()), p, west=-126.0, south=30.0, dx=0.5, dy=0.5
+        )
         got = read_geotiff(p)
         # j=1 (northern row) must be ROW 0 in the file
         np.testing.assert_array_equal(
@@ -174,7 +176,7 @@ def test_export_raster_geotiff_northup(spark):
 
 
 def test_export_field_netcdf3(spark):
-    from pyofs_spark.sources.sinks import export_field_netcdf3
+    from pyofs_spark.sources.sinks import cells_grid, export_field_netcdf3
 
     d = tempfile.mkdtemp()
     try:
@@ -184,7 +186,9 @@ def test_export_field_netcdf3(spark):
         )
         lons = np.array([-126.0, -125.5])
         lats = np.array([30.0, 30.5])
-        export_field_netcdf3(cells, p, lons, lats, "sst")
+        export_field_netcdf3(
+            cells_grid(cells.toArrow(), len(lons), len(lats)), p, lons, lats, "sst"
+        )
         got = read_netcdf3(p)
         np.testing.assert_array_equal(
             got["variables"]["sst"]["data"],

@@ -29,14 +29,15 @@ def _cells_df(spark):
 
 def test_netcdf3_spark_scan_roundtrip(spark):
     from pyofs_spark.sources.scan import read_netcdf3_grid
-    from pyofs_spark.sources.sinks import export_field_netcdf3
+    from pyofs_spark.sources.sinks import cells_grid, export_field_netcdf3
 
     d = tempfile.mkdtemp()
     try:
         lons = np.array([-126.0, -125.5, -125.0, -124.5])
         lats = np.array([32.0, 32.5, 33.0])
         export_field_netcdf3(
-            _cells_df(spark), os.path.join(d, "sst_day1.nc"),
+            cells_grid(_cells_df(spark).toArrow(), len(lons), len(lats)),
+            os.path.join(d, "sst_day1.nc"),
             lons=lons, lats=lats, var_name="sst",
         )
         got = read_netcdf3_grid(spark, d).collect()
@@ -62,13 +63,14 @@ def test_netcdf3_spark_scan_roundtrip(spark):
 
 def test_geotiff_spark_scan_roundtrip(spark):
     from pyofs_spark.sources.scan import read_geotiff_raster
-    from pyofs_spark.sources.sinks import export_raster_geotiff
+    from pyofs_spark.sources.sinks import cells_grid, export_raster_geotiff
 
     d = tempfile.mkdtemp()
     try:
         export_raster_geotiff(
-            _cells_df(spark), os.path.join(d, "sst_day1.tif"),
-            west=-126.0, south=32.0, dx=0.5, dy=0.5, n_i=4, n_j=3,
+            cells_grid(_cells_df(spark).toArrow(), 4, 3),
+            os.path.join(d, "sst_day1.tif"),
+            west=-126.0, south=32.0, dx=0.5, dy=0.5,
         )
         got = read_geotiff_raster(spark, d).collect()
         assert len(got) == 12
@@ -126,15 +128,18 @@ def test_streaming_netcdf_granule_pickup(spark):
     import numpy as np
 
     from pyofs_spark.sources.scan import stream_netcdf3_grid
-    from pyofs_spark.sources.sinks import export_field_netcdf3
+    from pyofs_spark.sources.sinks import cells_grid, export_field_netcdf3
 
     d = tempfile.mkdtemp()
     chk = tempfile.mkdtemp()
     sink = tempfile.mkdtemp()
     try:
         lons, lats = np.array([0.0, 1.0]), np.array([5.0, 6.0])
-        cells = spark.createDataFrame(
-            [(0, 0, 1.0), (1, 1, 2.0)], "i int, j int, mean_val double"
+        cells = cells_grid(
+            spark.createDataFrame(
+                [(0, 0, 1.0), (1, 1, 2.0)], "i int, j int, mean_val double"
+            ).toArrow(),
+            len(lons), len(lats),
         )
         export_field_netcdf3(
             cells, os.path.join(d, "g1.nc"), lons=lons, lats=lats,
@@ -188,16 +193,19 @@ def test_streaming_geotiff_granule_pickup(spark):
     from pyofs_spark.sources.scan import (
         read_geotiff_raster, stream_geotiff_raster,
     )
-    from pyofs_spark.sources.sinks import export_raster_geotiff
+    from pyofs_spark.sources.sinks import cells_grid, export_raster_geotiff
 
     d, chk, sink = (tempfile.mkdtemp() for _ in range(3))
     try:
-        cells = spark.createDataFrame(
-            [(0, 0, 1.5), (1, 1, 2.5)], "i int, j int, mean_val double"
+        cells = cells_grid(
+            spark.createDataFrame(
+                [(0, 0, 1.5), (1, 1, 2.5)], "i int, j int, mean_val double"
+            ).toArrow(),
+            2, 2,
         )
         export_raster_geotiff(
             cells, os.path.join(d, "t1.tif"),
-            west=0.0, south=0.0, dx=1.0, dy=1.0, n_i=2, n_j=2,
+            west=0.0, south=0.0, dx=1.0, dy=1.0,
         )
 
         def run_trigger():
@@ -215,7 +223,7 @@ def test_streaming_geotiff_granule_pickup(spark):
         assert spark.read.parquet(sink).count() == 4
         export_raster_geotiff(
             cells, os.path.join(d, "t2.tif"),
-            west=0.0, south=0.0, dx=1.0, dy=1.0, n_i=2, n_j=2,
+            west=0.0, south=0.0, dx=1.0, dy=1.0,
         )
         run_trigger()
         streamed = {
