@@ -315,42 +315,32 @@ def knn_inline_arrays(
     """Map-only kNN against a literal point list: appends
     `{prefix}_stations: array<string>` and `{prefix}_dist2: array<double>`
     ordered by (dist2, point_id). Zero shuffle — the scale-optimal plan for
-    the flagship pipeline's station lookup."""
-    # sort (dist2, idx:int) structs — no string copying inside the sort;
-    # names materialize only for the k winners via a literal-array lookup.
-    # Point ids must be sorted so idx order == id order on distance ties
-    # (keeps the (dist2, point_id) tie-break contract).
+    the flagship pipeline's station lookup. A row whose lon or lat is NULL
+    gets NULL for both arrays.
+
+    ONE projection from one SQL select list. sort_array (natural struct
+    order) + GetArrayStructFields keep the whole expression inside
+    whole-stage codegen; array_sort/transform lambdas are CodegenFallback
+    and would interpret per row (PLANS.md). The point id rides in the
+    struct, so the stations array is one field extraction. Both output
+    columns spell out the same top-k expression: subexpression elimination
+    evaluates it once per row, in a generated method of its own, which keeps
+    the fused flagship stage under spark.sql.codegen.hugeMethodLimit."""
+    # Sorted ids: the struct order (dist2, id) is then the (dist2, point_id)
+    # tie-break of the other strategies.
     rows_sorted = sorted(points_rows, key=lambda r: r[0])
-    names_sql = "array({})".format(
-        ", ".join(_sql_str(pid) for pid, _, _ in rows_sorted)
+    terms = ", ".join(
+        f"named_struct('dist2', ({lon} - {flit(px)}) * ({lon} - {flit(px)})"
+        f" + ({lat} - {flit(py)}) * ({lat} - {flit(py)}), 'id', {_sql_str(pid)})"
+        for pid, px, py in rows_sorted
     )
-    # sort_array (natural struct order = (dist2, idx)) + GetArrayStructFields
-    # keep the whole expression inside whole-stage codegen; array_sort/
-    # transform lambdas are CodegenFallback and would interpret per row
-    # (verified via explain, PLANS.md). The whole thing is ONE generated SQL
-    # string — a single F.expr parse instead of ~8 py4j calls per point
-    # (round 6, guide §1: expression construction was the dominant cost of
-    # the flagship plan build at 13 points x 2 builds per bench query).
-    struct_terms = ", ".join(
-        "named_struct('dist2', "
-        f"({lon} - {flit(px)}) * ({lon} - {flit(px)})"
-        f" + ({lat} - {flit(py)}) * ({lat} - {flit(py)}), 'idx', {i})"
-        for i, (pid, px, py) in enumerate(rows_sorted)
-    )
-    out = df.withColumn(
-        "_topk", F.expr(f"slice(sort_array(array({struct_terms})), 1, {k})")
-    )
-    # idx→name via nested element_at on the literal names array per slot
-    stations_sql = "array({})".format(
-        ", ".join(
-            f"element_at({names_sql}, element_at(_topk.idx, {s + 1}) + 1)"
-            for s in range(k)
-        )
-    )
-    return (
-        out.withColumn(f"{out_prefix}_stations", F.expr(stations_sql))
-        .withColumn(f"{out_prefix}_dist2", F.col("_topk.dist2"))
-        .drop("_topk")
+    # slice() is NULL when its length is: that gives a NULL location NULL
+    # arrays without wrapping the top-k in a conditional, which would stop
+    # subexpression elimination from hoisting it.
+    length = f"CASE WHEN {lon} IS NULL OR {lat} IS NULL THEN NULL ELSE {k} END"
+    topk = f"slice(sort_array(array({terms})), 1, {length})"
+    return df.selectExpr(
+        "*", f"{topk}.id AS {out_prefix}_stations", f"{topk}.dist2 AS {out_prefix}_dist2"
     )
 
 

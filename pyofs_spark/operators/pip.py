@@ -37,18 +37,17 @@ def pip_fixed(df: DataFrame, lon: str = "lon", lat: str = "lat",
     """Path A: add one boolean column per fixed polygon + a `polygon_id`
     column naming the first containing polygon (priority = dict order,
     mirroring the reference's first-source-wins coalesce, wcofs.py:179-208).
-    """
+    A row whose lon or lat is NULL gets NULL `in_*` and a NULL polygon_id.
+
+    One projection from one SQL select list: `polygon_id` reads the `in_*`
+    columns as lateral aliases of the same list."""
     polys = polys if polys is not None else P.POLYGONS
-    out = df
-    names = []
-    for pid, rings in polys.items():
-        col = f"in_{pid}"
-        out = out.withColumn(col, F.expr(P.pip_sql(lon, lat, rings)))
-        names.append((pid, col))
-    pick = F.lit(None).cast("string")
-    for pid, col in reversed(names):
-        pick = F.when(F.col(col), F.lit(pid)).otherwise(pick)
-    return out.withColumn("polygon_id", pick)
+    cases = " ".join(f"WHEN in_{pid} THEN '{pid}'" for pid in polys)
+    return df.selectExpr(
+        "*",
+        *[f"{P.pip_sql(lon, lat, rings)} AS in_{pid}" for pid, rings in polys.items()],
+        f"CASE {cases} END AS polygon_id",
+    )
 
 
 def polygon_bbox_cells(rings, res: int) -> list[int]:

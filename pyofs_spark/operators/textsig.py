@@ -30,6 +30,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def _value_offsets(arr):
+    """The len(arr) + 1 value offsets of a string or list array, as int64.
+    The large_* types carry int64 offsets, the others int32; reading one
+    width as the other would silently misplace every value."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = arr.type
+    if pa.types.is_large_string(t) or pa.types.is_large_list(t):
+        width = np.int64
+    elif pa.types.is_string(t) or pa.types.is_list(t):
+        width = np.int32
+    else:
+        raise TypeError(f"expected a string or list array, got {t}")
+    return np.frombuffer(arr.buffers()[1], dtype=width)[
+        arr.offset : arr.offset + len(arr) + 1
+    ].astype(np.int64)
+
+
 def _first_codepoints(sarr):
     """Codepoint of the FIRST character of every string in a StringArray
     (0 for empty strings), decoded from the raw UTF-8 buffers."""
@@ -41,9 +60,7 @@ def _first_codepoints(sarr):
     n = len(sarr)
     if n == 0:
         return np.empty(0, dtype=np.int64)
-    off = np.frombuffer(sarr.buffers()[1], dtype=np.int32)[
-        sarr.offset : sarr.offset + n + 1
-    ].astype(np.int64)
+    off = _value_offsets(sarr)
     buf = sarr.buffers()[2]
     data = (
         np.frombuffer(buf, dtype=np.uint8)
@@ -114,9 +131,7 @@ def minhash_sigs_arrow(
             if isinstance(words, pa.ChunkedArray):
                 words = words.combine_chunks()
             flat = words.flatten()
-            doc_off = np.frombuffer(words.buffers()[1], dtype=np.int32)[
-                words.offset : words.offset + n_docs + 1
-            ].astype(np.int64)
+            doc_off = _value_offsets(words)
             # flatten() re-bases its output to the list's first referenced
             # value; offsets here are absolute into the child array, so
             # normalize (no-op for freshly built arrays where off[0]==0)

@@ -107,11 +107,15 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Fall back from whole-stage codegen when the generated method would
-        # exceed HotSpot's JIT compile limit (-XX:DontCompileHugeMethods,
-        # 8000 bytecode). Spark's default (65535) happily emits methods the
-        # JVM then refuses to JIT — our unrolled PIP+kNN pipeline ran 8x
-        # slower INTERPRETED inside one giant fused method (PLANS.md).
+        # HotSpot does not JIT a method over 8000 bytes of bytecode
+        # (-XX:+DontCompileHugeMethods); under Spark's default limit (65535)
+        # such a method stays in whole-stage codegen and runs interpreted.
+        # At 8000, a stage whose largest generated method exceeds the limit
+        # falls back from whole-stage codegen AT RUN TIME: explain() still
+        # prints `*(n)`/`[codegen id : n]`, and only the WholeStageCodegenExec
+        # INFO line "Found too long generated codes" and the bytecode stats
+        # of debug.codegenStringSeq show it. The flagship tile stage is
+        # written to fit (PLANS.md; tests/test_operators.py checks it).
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
     )
     for k, v in (extra_conf or {}).items():

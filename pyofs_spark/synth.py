@@ -11,7 +11,6 @@ from functions/geocode.py applied to the page key.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 LANGS = ["en", "es", "fr", "de", "pt", "zh", "ja", "ru"]
 
@@ -23,36 +22,35 @@ _WORDS = (
 ).split()
 
 
+def _pick_sql(values: list[str], index_sql: str) -> str:
+    """SQL picking values[index] (0-based) from a literal string list."""
+    arr = ", ".join(f"'{v}'" for v in values)
+    return f"element_at(array({arr}), cast({index_sql} + 1 as int))"
+
+
 def synth_pages(spark: SparkSession, n_rows: int, partitions: int = 32) -> DataFrame:
     """n_rows pages keyed by page_id ∈ [0, n_rows).
 
     text is a deterministic function of page_id (so byte-identity per url is
     checkable end-to-end); html wraps text; lang cycles a fixed list.
+
+    The table is ONE projection over range(), built from a single SQL select
+    list: one parse instead of ~150 py4j calls of Column construction.
     """
-    df = spark.range(0, n_rows, 1, partitions).withColumnRenamed("id", "page_id")
-    words = F.array(*[F.lit(w) for w in _WORDS])
     nw = len(_WORDS)
     # deterministic 12-word sentence per page
-    text_parts = [
-        F.element_at(words, (F.pmod(F.col("page_id") * (k * 2 + 1) + k, F.lit(nw)) + 1).cast("int"))
-        for k in range(12)
-    ]
-    text = F.concat_ws(" ", *text_parts)
-    lang = F.element_at(
-        F.array(*[F.lit(lg) for lg in LANGS]),
-        (F.pmod(F.col("page_id") * 31 + 7, F.lit(len(LANGS))) + 1).cast("int"),
+    text = "concat_ws(' ', {})".format(
+        ", ".join(_pick_sql(_WORDS, f"pmod(id * {k * 2 + 1} + {k}, {nw})") for k in range(12))
     )
-    return df.select(
-        F.concat(F.lit("https://example.org/page/"), F.col("page_id")).alias("url"),
+    return spark.range(0, n_rows, 1, partitions).selectExpr(
+        "concat('https://example.org/page/', id) AS url",
         # crawl timestamps spread over 30 days of 2026-01, second granularity
-        # (integer epoch arithmetic — make_interval routes through DECIMAL
-        # math, ~10x slower per row; timestamp_seconds is a long cast)
-        F.timestamp_seconds(
-            F.lit(1767225600)  # 2026-01-01 00:00:00 UTC
-            + F.pmod(F.col("page_id") * 7919, F.lit(30 * 86400))
-        ).alias("warc_ts"),
-        F.encode(F.concat(F.lit("<html><body>"), text, F.lit("</body></html>")), "utf-8").alias("html"),
-        text.alias("text"),
-        lang.alias("lang"),
-        F.col("page_id"),
+        # from 2026-01-01 00:00:00 UTC (integer epoch arithmetic —
+        # make_interval routes through DECIMAL math, ~10x slower per row;
+        # timestamp_seconds is a long cast)
+        f"timestamp_seconds(1767225600 + pmod(id * 7919, {30 * 86400})) AS warc_ts",
+        f"encode(concat('<html><body>', {text}, '</body></html>'), 'utf-8') AS html",
+        f"{text} AS text",
+        f"{_pick_sql(LANGS, f'pmod(id * 31 + 7, {len(LANGS)})')} AS lang",
+        "id AS page_id",
     )

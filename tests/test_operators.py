@@ -182,10 +182,29 @@ def test_url_keyed_flagship_zero_python_plan(spark):
     assert 0.2 * len(rows) < n_hot < 0.8 * len(rows)
 
 
+def _codegen_method_sizes(spark, df) -> list[int]:
+    """Largest generated method (bytes of bytecode) of every whole-stage
+    codegen subtree of df's executed plan (the final plan, once run)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    seq = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+    return [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
+
+
+def _assert_stays_in_codegen(spark, df) -> None:
+    """Spark abandons whole-stage codegen AT RUN TIME for a subtree whose
+    largest method exceeds spark.sql.codegen.hugeMethodLimit; explain()
+    and the `*(n)` markers of executedPlan still show codegen then, so the
+    bytecode size is what tells."""
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    sizes = _codegen_method_sizes(spark, df)
+    assert sizes, "no whole-stage codegen subtree"
+    assert max(sizes) <= limit, (sizes, limit)
+
+
 def test_portable_url_key_stays_in_codegen(spark):
     """The md5-polynomial portable url key (oracle-gated path) must keep
     the geocode projection inside whole-stage codegen — no EvalPython, no
-    CodegenFallback drop-out."""
+    CodegenFallback drop-out, no run-time fallback."""
     from pyspark.sql import functions as F
 
     from pyofs_spark.functions import cells, geocode
@@ -201,6 +220,68 @@ def test_portable_url_key_stays_in_codegen(spark):
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
-    # executedPlan marks codegen stages with '*(n)' prefixes
-    assert any(line.lstrip().startswith("*(") for line in plan.splitlines())
     assert df.where("cell_id IS NULL OR url_key < 0").count() == 0
+    _assert_stays_in_codegen(spark, df)
+
+
+def test_flagship_stage_stays_in_codegen_at_run_time(spark):
+    """The fused geocode → cells → PIP → kNN stage must fit under the
+    session's hugeMethodLimit in both shapes that run it: an aggregate
+    over every output column (the benchmark's pass) and the full-output
+    write (the CLI's tile-assign sink)."""
+    from pyofs_spark.functions.stations import STATIONS
+
+    out = tile_assignment(spark, synth_pages(spark, 3000, 4), k=3)
+    agg = out.agg(
+        F.count("*"),
+        F.sum("page_id"),
+        F.count("url"),
+        F.max("warc_ts"),
+        F.count("lang"),
+        F.sum("lon"),
+        F.sum("lat"),
+        F.sum("cell_id"),
+        F.count("polygon_id"),
+        F.count(F.element_at("knn_stations", 3)),
+        F.sum(F.element_at("knn_dist2", 1)),
+        *[
+            F.sum(F.when(F.element_at("knn_stations", 1) == sid, 1).otherwise(0))
+            for sid, _, _ in STATIONS
+        ],
+    )
+    row = agg.collect()[0]
+    assert row[0] == 3000 and row[9] == 3000
+    _assert_stays_in_codegen(spark, agg)
+    out.write.format("noop").mode("overwrite").save()
+    _assert_stays_in_codegen(spark, out)
+
+
+def test_null_location_contract(spark):
+    """A NULL key (bigint or url) yields NULL lon/lat, cell_id, polygon_id,
+    knn_stations and knn_dist2 — no made-up location, no station list —
+    and every non-NULL key gets exactly the assignment of the
+    non-nullable-key path."""
+    pages = synth_pages(spark, 200, 2).select("page_id", "url", "warc_ts", "lang")
+    nulled = pages.selectExpr(
+        "CASE WHEN page_id % 7 = 0 THEN NULL ELSE page_id END AS page_id",
+        "CASE WHEN page_id % 7 = 0 THEN NULL ELSE url END AS url",
+        "warc_ts",
+        "lang",
+    )
+    assert not pages.schema["page_id"].nullable
+    assert nulled.schema["page_id"].nullable and nulled.schema["url"].nullable
+    cols = ("lon", "lat", "cell_id", "polygon_id", "knn_stations", "knn_dist2")
+    for key in ("page_id", "url"):
+        want = {r[key]: tuple(r[c] for c in cols)
+                for r in tile_assignment(spark, pages, key_col=key, k=3).collect()}
+        got = tile_assignment(spark, nulled, key_col=key, k=3).collect()
+        assert len(got) == 200
+        n_null = 0
+        for r in got:
+            vals = tuple(r[c] for c in cols)
+            if r[key] is None:
+                n_null += 1
+                assert vals == (None,) * len(cols), (key, vals)
+            else:
+                assert vals == want[r[key]], (key, r[key])
+        assert n_null == len(range(0, 200, 7))

@@ -83,3 +83,25 @@ def test_shingle_counts_kernel_matches_sql_form(spark):
     sql_form = {tuple(r) for r in spark.sql(_CROSSDOC_PERDOC_SPARK).collect()}
     kernel = {tuple(r) for r in shingle_counts_arrow(docs, n=5).collect()}
     assert kernel == sql_form and len(kernel) > 0
+
+
+def test_large_arrow_types_read_int64_offsets():
+    """large_string / large_list carry int64 offsets; the kernel must read
+    them as such (an int32 read misplaces every value) and refuse any
+    other array type."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from pyofs_spark.operators.textsig import _first_codepoints, _value_offsets
+
+    words = pa.array(ADVERSARIAL, pa.string())
+    large = words.cast(pa.large_string())
+    assert large.type == pa.large_string()
+    assert list(_first_codepoints(large)) == list(_first_codepoints(words))
+    # a sliced array: offsets start at the slice, not at the buffer
+    assert list(_first_codepoints(large.slice(9, 4))) == list(_first_codepoints(words.slice(9, 4)))
+    lists = pc.split_pattern(words, " ")
+    large_lists = lists.cast(pa.large_list(pa.string()))
+    assert list(_value_offsets(large_lists)) == list(_value_offsets(lists))
+    with pytest.raises(TypeError):
+        _value_offsets(pa.array([1, 2], pa.int64()))
