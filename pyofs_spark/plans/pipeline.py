@@ -50,10 +50,11 @@ def geocode_pages(pages: DataFrame, key_col: str = "page_id") -> DataFrame:
     non-NULL. That drops the null branches from every cell, PIP and kNN
     term and keeps the flagship stage under the codegen method limit
     (PLANS.md)."""
+    key = pages.schema[key_col]
     key_expr = key_col
-    if dict(pages.dtypes).get(key_col) == "string":
+    if key.dataType.simpleString() == "string":
         key_expr = geocode.geocode_url_key_sql(key_col)
-    if pages.schema[key_col].nullable:
+    if key.nullable:
         # the guard matters for url keys: xxhash64(NULL) is a real hash
         template = f"CASE WHEN {key_col} IS NULL THEN NULL ELSE {{}} END"
     else:

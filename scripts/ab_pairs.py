@@ -75,6 +75,7 @@ def run_once(checkout: str, workload: str, seed: int, seconds: float, trace: int
     with open(record_path) as fh:
         record = json.load(fh)
     out.update(
+        env=record["env"],
         steal_frac=round(record["steal_frac"], 4),
         contaminated=record["contaminated"],
         correct=result["correct"],

@@ -182,21 +182,16 @@ def test_url_keyed_flagship_zero_python_plan(spark):
     assert 0.2 * len(rows) < n_hot < 0.8 * len(rows)
 
 
-def _codegen_method_sizes(spark, df) -> list[int]:
-    """Largest generated method (bytes of bytecode) of every whole-stage
-    codegen subtree of df's executed plan (the final plan, once run)."""
-    plan = df._jdf.queryExecution().executedPlan()
-    seq = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
-    return [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
-
-
 def _assert_stays_in_codegen(spark, df) -> None:
     """Spark abandons whole-stage codegen AT RUN TIME for a subtree whose
-    largest method exceeds spark.sql.codegen.hugeMethodLimit; explain()
-    and the `*(n)` markers of executedPlan still show codegen then, so the
-    bytecode size is what tells."""
+    largest generated method exceeds spark.sql.codegen.hugeMethodLimit;
+    explain() and the `*(n)` markers of executedPlan still show codegen
+    then, so the bytecode size of every subtree of df's executed plan (the
+    final plan, once run) is what tells."""
     limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
-    sizes = _codegen_method_sizes(spark, df)
+    plan = df._jdf.queryExecution().executedPlan()
+    seq = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+    sizes = [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
     assert sizes, "no whole-stage codegen subtree"
     assert max(sizes) <= limit, (sizes, limit)
 
