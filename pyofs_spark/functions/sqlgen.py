@@ -16,3 +16,15 @@ def flit(x: float) -> str:
     if "e" in r or "E" in r or "inf" in r or "nan" in r:
         return r
     return r + "e0"
+
+
+def slit(s: str) -> str:
+    """Render a string as a single-quoted Spark SQL literal (quotes doubled,
+    backslashes escaped, since Spark reads backslash escapes in literals)."""
+    return "'" + str(s).replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def ident(name: str) -> str:
+    """Render a column name as a backticked Spark SQL identifier, so any
+    character (quote, dash, space, dot) stays part of the name."""
+    return "`" + str(name).replace("`", "``") + "`"

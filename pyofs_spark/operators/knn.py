@@ -40,12 +40,7 @@ from pyspark.sql import functions as F
 from ..session import materialize as _materialize
 
 from ..functions import cells
-from ..functions.sqlgen import flit
-
-
-def _sql_str(s: str) -> str:
-    """Single-quoted SQL string literal."""
-    return "'" + str(s).replace("'", "''") + "'"
+from ..functions.sqlgen import flit, ident, slit
 
 
 def _sql_value(v, dtype: str) -> str:
@@ -54,7 +49,7 @@ def _sql_value(v, dtype: str) -> str:
     if v is None:
         lit = "NULL"
     elif isinstance(v, float):
-        lit = flit(v) if math.isfinite(v) else _sql_str(repr(v))
+        lit = flit(v) if math.isfinite(v) else slit(repr(v))
     else:
         lit = repr(v)
     return f"CAST({lit} AS {dtype})"
@@ -82,7 +77,7 @@ def _inline_topk_sql(
         "named_struct('dist2', "
         f"(({lon_sql}) - {flit(r[1])}) * (({lon_sql}) - {flit(r[1])})"
         f" + (({lat_sql}) - {flit(r[2])}) * (({lat_sql}) - {flit(r[2])}), "
-        f"{_sql_str(point_key)}, {_sql_str(r[0])}"
+        f"{slit(point_key)}, {slit(r[0])}"
         + (f", '_i', {i}" if with_index else "")
         + ")"
         for i, r in enumerate(rows)
@@ -316,7 +311,8 @@ def knn_inline_arrays(
     `{prefix}_stations: array<string>` and `{prefix}_dist2: array<double>`
     ordered by (dist2, point_id). Zero shuffle — the scale-optimal plan for
     the flagship pipeline's station lookup. A row whose lon or lat is NULL
-    gets NULL for both arrays.
+    gets NULL for both arrays. Columns of df with the output names are
+    replaced (the new ones come last).
 
     ONE projection from one SQL select list. sort_array (natural struct
     order) + GetArrayStructFields keep the whole expression inside
@@ -331,7 +327,7 @@ def knn_inline_arrays(
     rows_sorted = sorted(points_rows, key=lambda r: r[0])
     terms = ", ".join(
         f"named_struct('dist2', ({lon} - {flit(px)}) * ({lon} - {flit(px)})"
-        f" + ({lat} - {flit(py)}) * ({lat} - {flit(py)}), 'id', {_sql_str(pid)})"
+        f" + ({lat} - {flit(py)}) * ({lat} - {flit(py)}), 'id', {slit(pid)})"
         for pid, px, py in rows_sorted
     )
     # slice() is NULL when its length is: that gives a NULL location NULL
@@ -339,9 +335,11 @@ def knn_inline_arrays(
     # subexpression elimination from hoisting it.
     length = f"CASE WHEN {lon} IS NULL OR {lat} IS NULL THEN NULL ELSE {k} END"
     topk = f"slice(sort_array(array({terms})), 1, {length})"
-    return df.selectExpr(
-        "*", f"{topk}.id AS {out_prefix}_stations", f"{topk}.dist2 AS {out_prefix}_dist2"
-    )
+    outs = {f"{out_prefix}_stations": f"{topk}.id", f"{out_prefix}_dist2": f"{topk}.dist2"}
+    clash = [c for c in df.columns if c in outs]
+    if clash:
+        df = df.drop(*clash)
+    return df.selectExpr("*", *[f"{sql} AS {ident(name)}" for name, sql in outs.items()])
 
 
 def nn_value_join(

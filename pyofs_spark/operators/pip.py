@@ -30,6 +30,7 @@ from pyspark.sql.types import BooleanType
 
 from ..functions import cells
 from ..functions import polygons as P
+from ..functions.sqlgen import ident, slit
 
 
 def pip_fixed(df: DataFrame, lon: str = "lon", lat: str = "lat",
@@ -38,14 +39,22 @@ def pip_fixed(df: DataFrame, lon: str = "lon", lat: str = "lat",
     column naming the first containing polygon (priority = dict order,
     mirroring the reference's first-source-wins coalesce, wcofs.py:179-208).
     A row whose lon or lat is NULL gets NULL `in_*` and a NULL polygon_id.
+    Columns of df with the output names are replaced (the new ones come
+    last); a polygon key may hold any character.
 
     One projection from one SQL select list: `polygon_id` reads the `in_*`
-    columns as lateral aliases of the same list."""
+    columns as lateral aliases of the same list. A lateral alias loses to a
+    column of df with the same name, hence the drop."""
     polys = polys if polys is not None else P.POLYGONS
-    cases = " ".join(f"WHEN in_{pid} THEN '{pid}'" for pid in polys)
+    outs = {f"in_{pid}" for pid in polys} | {"polygon_id"}
+    clash = [c for c in df.columns if c in outs]
+    if clash:
+        df = df.drop(*clash)
+    flags = {pid: ident(f"in_{pid}") for pid in polys}
+    cases = " ".join(f"WHEN {flags[pid]} THEN {slit(pid)}" for pid in polys)
     return df.selectExpr(
         "*",
-        *[f"{P.pip_sql(lon, lat, rings)} AS in_{pid}" for pid, rings in polys.items()],
+        *[f"{P.pip_sql(lon, lat, rings)} AS {flags[pid]}" for pid, rings in polys.items()],
         f"CASE {cases} END AS polygon_id",
     )
 

@@ -49,7 +49,13 @@ def geocode_pages(pages: DataFrame, key_col: str = "page_id") -> DataFrame:
     are wrapped in nvl() — its default is unreachable — to declare them
     non-NULL. That drops the null branches from every cell, PIP and kNN
     term and keeps the flagship stage under the codegen method limit
-    (PLANS.md)."""
+    (PLANS.md). It has to be decided here, not by the optimizer: with one
+    `CASE WHEN key IS NULL THEN NULL ELSE nvl(...) END` template Catalyst
+    folds the guard away, but only in the optimized plan. The DataFrame's
+    schema keeps lon/lat nullable, so the downstream `lon IS NULL` guards
+    stay in the generated code (+170 bytes, the url-keyed full output then
+    exceeds the limit). A nullable key column keeps nullable lon/lat and
+    its stage still falls back at run time (PLANS.md)."""
     key = pages.schema[key_col]
     key_expr = key_col
     if key.dataType.simpleString() == "string":

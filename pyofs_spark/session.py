@@ -115,7 +115,9 @@ def get_session(
         # prints `*(n)`/`[codegen id : n]`, and only the WholeStageCodegenExec
         # INFO line "Found too long generated codes" and the bytecode stats
         # of debug.codegenStringSeq show it. The flagship tile stage is
-        # written to fit (PLANS.md; tests/test_operators.py checks it).
+        # written to fit when its key column is non-nullable; with a
+        # nullable key it still falls back (PLANS.md; tests/test_operators.py
+        # checks the non-nullable shapes).
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
     )
     for k, v in (extra_conf or {}).items():

@@ -10,7 +10,8 @@ own `pyofs_spark`. For every workload and seed the two sides run back to
 back, and the side that goes first alternates with the pair index (parent
 first on even pairs), so a drift of the shared host's speed lands on both
 sides equally. Runs are sequential: two JVMs at once would contend for the
-cores being measured.
+cores being measured. Every run lasts BENCHMARK.json's `run_seconds`, the
+run length the benchmark fixes.
 
 Each run's steal share and CONTAMINATED flag come from the run record that
 perfbench writes (`.perfbench_work/runs/`). The output JSON holds every run
@@ -35,6 +36,8 @@ import subprocess
 import sys
 import time
 
+RUN_TIMEOUT_S = 900  # per perfbench run; a hung run is recorded as rc "timeout"
+
 
 def parse_seeds(text: str) -> list[int]:
     """'1-10' or '1,2,5' → list of seeds."""
@@ -51,14 +54,14 @@ def git_sha(checkout: str) -> str:
     ).stdout.strip()
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: float, trace: int,
-             timeout_s: float) -> dict:
+def run_once(checkout: str, workload: str, seed: int, seconds: float, trace: int) -> dict:
     """One perfbench run in `checkout`; its result line plus its run record."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
     t = time.perf_counter()
     try:
-        proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True, timeout=timeout_s)
+        proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True,
+                              timeout=RUN_TIMEOUT_S)
         rc, stdout, stderr = proc.returncode, proc.stdout, proc.stderr
     except subprocess.TimeoutExpired as e:
         rc, stdout, stderr = "timeout", e.stdout or "", e.stderr or ""
@@ -154,14 +157,12 @@ def main(argv=None) -> int:
     ap.add_argument("--holdout", type=int, action="append", default=[],
                     help="held-out seed, one pair each (repeatable)")
     ap.add_argument("--traced", type=int, help="seed of one traced run per side")
-    ap.add_argument("--seconds", type=float, help="default: run_seconds of BENCHMARK.json")
-    ap.add_argument("--timeout", type=float, default=900.0, help="per run, seconds")
     ap.add_argument("--out", required=True)
     args = ap.parse_args(argv)
 
     with open(os.path.join(args.change, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
-    seconds = args.seconds or bench["run_seconds"]
+    seconds = bench["run_seconds"]
     dirs = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
     doc = {
         "description": (
@@ -187,7 +188,7 @@ def main(argv=None) -> int:
     for pair, (wl, seed) in enumerate(plan):
         order = ("parent", "change") if pair % 2 == 0 else ("change", "parent")
         for side in order:
-            r = run_once(dirs[side], wl, seed, seconds, 0, args.timeout)
+            r = run_once(dirs[side], wl, seed, seconds, 0)
             r.update(workload=wl, seed=seed, pair=pair, side=side, first=order[0], trace=0)
             doc["runs"].append(r)
             print(f"{wl} seed={seed} pair={pair} {side}: rc={r['rc']} "
@@ -197,7 +198,7 @@ def main(argv=None) -> int:
     if args.traced is not None:
         for wl in args.workload:
             for side in ("parent", "change"):
-                r = run_once(dirs[side], wl, args.traced, seconds, 1, args.timeout)
+                r = run_once(dirs[side], wl, args.traced, seconds, 1)
                 doc["traced"].setdefault(wl, {})[side] = r
                 print(f"traced {wl} {side}: rc={r['rc']}", flush=True)
                 save()

@@ -121,6 +121,40 @@ def test_pip_broadcast_udf_path(spark):
     assert {(k, v) for k, v in b_first.items()} == a_rows
 
 
+def test_pip_and_knn_outputs_replace_inputs_and_quote_keys(spark):
+    """pip_fixed and knn_inline_arrays replace input columns that carry
+    their output names, and polygon keys holding a quote, a dash, a space,
+    a dot, a backtick or a backslash name their `in_*` column and their
+    polygon_id value verbatim."""
+    from pyofs_spark.functions.stations import STATIONS
+    from pyofs_spark.operators.knn import knn_inline_arrays
+
+    rng = np.random.default_rng(5)
+    lon = np.concatenate([rng.uniform(-160, -110, 400), [-150.0, -120.0]])
+    lat = np.concatenate([rng.uniform(10, 50, 400), [20.0, 40.0]])
+    keys = ["o'neil bay", "a-b.c", "back`tick\\x"]
+    polys = dict(zip(keys, [P.COASTAL_POLY, P.DONUT_POLY, P.COASTAL_POLY]))
+    df = spark.createDataFrame(
+        pd.DataFrame({"i": np.arange(len(lon)), "lon": lon, "lat": lat})
+    ).selectExpr(
+        "*",
+        "'stale' AS polygon_id",
+        "false AS `in_o'neil bay`",
+        "array('stale') AS knn_stations",
+    )
+    out = knn_inline_arrays(pip_fixed(df, polys=polys), STATIONS, 2)
+    flags = [f"in_{key}" for key in keys]
+    assert out.columns == ["i", "lon", "lat", *flags, "polygon_id", "knn_stations", "knn_dist2"]
+    rows = sorted(out.collect(), key=lambda r: r.i)
+    inside = {key: P.pip_numpy(lon, lat, rings) for key, rings in polys.items()}
+    brute = _knn_brute_py([(r.i, r.lon, r.lat) for r in rows], STATIONS, 2)
+    for r in rows:
+        assert [r[f] for f in flags] == [bool(inside[key][r.i]) for key in keys]
+        assert r.polygon_id == next((key for key in keys if inside[key][r.i]), None)
+        assert list(zip(r.knn_stations, r.knn_dist2)) == brute[r.i]
+    assert {r.polygon_id for r in rows} == {keys[0], keys[1], None}
+
+
 def test_pipeline_byte_identity(spark):
     """north_star invariant: text passes through the full pipeline
     byte-identical per url (checked via md5 + direct equality)."""
