@@ -21,15 +21,18 @@ its publish/resume machinery:
            variable and the lattice, so a corrected input re-runs it.
 
 Like the reference, each day raster is computed ONCE and every output is
-written from it. Each stage is executed once and collected once:
+written from it. Only the field scan and its aggregate run on executors:
+  - the events scan declares its schema, so no job infers it;
   - the aggregated field (dimension-sized: ≤ 512 scatter points here) is
     executed by the one collect that also sizes it for the kNN strategy
     (operators/knn._pick_strategy) and carries its values;
-  - regrid + mask over the lattice (`regrid_to_lattice`) is one map-only
-    Spark job, collected once as Arrow;
+  - regrid + mask over the lattice (`regrid_to_lattice`) is one projection.
+    A small lattice (16x12 here) is a LocalRelation, which Spark's
+    optimizer evaluates on the driver with no job; a larger one is one
+    map-only Spark job. Either way it is collected once as Arrow;
   - that one table feeds the GeoTIFF, GeoPackage and NetCDF-3 sinks (one
-    numpy grid) and is the partition's lineage payload (an Arrow-backed
-    frame, so the lineage write never re-executes the plan).
+    numpy grid) and is the partition's lineage payload, which
+    run_partitioned writes with pyarrow on the driver.
 """
 
 from __future__ import annotations
@@ -43,6 +46,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..lineage import run_partitioned
 from ..operators.pip import pip_fixed
@@ -58,8 +62,18 @@ from ..sources.sinks import (
 # the sandbox fixture): a small window over the study area
 LAT0, LON0, STEP, N_LON, N_LAT = 32.0, -126.0, 0.5, 16, 12
 # the lattice stage is map-only: below this many cells per task, task
-# launch cost outweighs the parallelism (a 16x12 day raster is one task)
+# launch cost outweighs the parallelism
 LATTICE_CELLS_PER_TASK = 65_536
+# a lattice of at most this many cells (a 16x12 day raster) is evaluated on
+# the driver, interpreted, with no Spark job. Against a 120-point field the
+# driver costs about 0.15 ms per cell and one Spark job about 0.5-0.7 s, so
+# the job wins from about 1,300 cells (repeated field, code cache warm) to
+# 3,000 cells (new field). Kept apart from LATTICE_CELLS_PER_TASK, which
+# sizes the tasks of the larger lattices.
+LOCAL_LATTICE_CELLS = 2_048
+# the events columns field_for_day reads, typed as Spark infers them from
+# the fixtures: declaring them skips the schema-inference job of each scan
+EVENTS_SCHEMA = "event_id bigint, ts timestamp_ntz, user_id bigint, value double"
 
 
 def field_for_day(
@@ -68,7 +82,7 @@ def field_for_day(
     """Stages 1-2: scan events-as-field, sanity-filter, day filter, daily
     nan-skipping mean per scattered source point (i, j indices reused as
     the scatter ids; lon/lat derived deterministically)."""
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = spark.read.schema(EVENTS_SCHEMA).parquet(os.path.join(sf_dir, "events.parquet"))
     day_lit = F.to_date(F.lit(day))
     mod = {"sst": 0, "ssh": 1}[variable]
     f = (
@@ -120,9 +134,15 @@ def regrid_to_lattice(
     """Stage 3 (+ the J5 mask), shared by every day-raster builder: 1-NN
     regrid of the source field onto the output lattice — values[0] is the
     regridded value, the rest ride the same neighbor — then the polygon
-    mask, as ONE map-only Spark job collected once as Arrow. Columns:
-    query_id, gi, gj, lon, lat, *values[, polygon_id]."""
-    tasks = -(-n_lon * n_lat // LATTICE_CELLS_PER_TASK)
+    mask, as ONE projection collected once as Arrow. Columns:
+    query_id, gi, gj, lon, lat, *values[, polygon_id].
+
+    The field is collected once (to size and fetch it). A lattice of at
+    most LOCAL_LATTICE_CELLS cells is a LocalRelation, so with an
+    inline-sized field the whole projection runs on the driver and starts
+    no Spark job; a larger lattice is one map-only job."""
+    cells = n_lon * n_lat
+    tasks = None if cells <= LOCAL_LATTICE_CELLS else -(-cells // LATTICE_CELLS_PER_TASK)
     tgt = lattice(spark, lon0, lat0, step, n_lon, n_lat, partitions=tasks)
     nn = regrid_nearest_join(
         src, tgt, value_col=values[0], res=6, max_ring=8, carry=values[1:]
@@ -130,14 +150,22 @@ def regrid_to_lattice(
     cols = ["query_id", "gi", "gj", "lon", "lat", *values]
     if mask:
         nn, cols = pip_fixed(nn), cols + ["polygon_id"]
-    return nn.select(*cols).toArrow()
+    return _collect_arrow(nn.select(*cols))
 
 
-def lineage_payload(spark: SparkSession, cells: pa.Table) -> DataFrame:
-    """A partition's lineage payload: an Arrow-backed frame over the
-    collected lattice, written as one file — the lineage write never
-    re-executes the plan that produced it."""
-    return spark.createDataFrame(cells).coalesce(1)
+def _collect_arrow(df: DataFrame) -> pa.Table:
+    """df as toArrow() returns it. A plan the optimizer folded into a
+    LocalRelation is already evaluated: collect() reads it with no Spark
+    job, where toArrow() would launch one."""
+    if df._jdf.queryExecution().optimizedPlan().nodeName() != "LocalRelation":
+        return df.toArrow()
+    schema = to_arrow_schema(
+        df.schema, prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes()
+    )
+    columns = list(zip(*df.collect())) or [()] * len(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, schema)], schema=schema
+    )
 
 
 def masked_cells(cells: pa.Table) -> pa.Table:
@@ -169,11 +197,11 @@ def build_day_raster_from_netcdf(
 
 def build_day_raster(
     spark: SparkSession, sf_dir: str, variable: str, day: str, out_dir: str
-) -> DataFrame:
+) -> pa.Table:
     """Stages 3-4 for one (variable, day): regrid to the lattice, polygon
     mask, export real GeoTIFF + GeoPackage + NetCDF from one collected
     grid; returns the lattice rows written (the partition's parquet payload
-    for the lineage table) as an Arrow-backed frame."""
+    for the lineage table) as an Arrow table."""
     cells = regrid_to_lattice(spark, field_for_day(spark, sf_dir, variable, day))
     grid = cells_grid(masked_cells(cells), N_LON, N_LAT)
     os.makedirs(out_dir, exist_ok=True)
@@ -196,7 +224,7 @@ def build_day_raster(
         lats=np.array([LAT0 + j * STEP for j in range(N_LAT)]),
         var_name=variable,
     )
-    return lineage_payload(spark, cells)
+    return cells
 
 
 def input_fingerprint(sf_dir: str) -> str:
@@ -229,7 +257,7 @@ def run_daily_job(
     def fingerprint(key: str) -> str:
         return hashlib.sha1(f"{inputs}|{key}".encode()).hexdigest()
 
-    def build(s: SparkSession, key: str) -> DataFrame:
+    def build(s: SparkSession, key: str) -> pa.Table:
         v, d = key.split("__")
         return build_day_raster(s, sf_dir, v, d, os.path.join(out_root, "rasters"))
 

@@ -19,8 +19,8 @@ composition:
   stage 3  dir/mag              JVM-side atan2/hypot (C5 kernel semantics:
            dir = (atan2(e, n) + π)·180/π, mag = hypot — wcofs.py:629-633)
   stage 4  1-NN regrid          jobs/daily.regrid_to_lattice — the same
-           one-job lattice stage as the daily job (exactly
-           kernels.regrid_nearest), collected once
+           lattice stage as the daily job (exactly kernels.regrid_nearest;
+           on the driver when the lattice fits one task), collected once
   stage 5  sinks                real GeoTIFF (K1) + GPKG 2D-gridded
            coverage (K3), north-up/float32/nodata, all from that one
            collected table
@@ -40,6 +40,7 @@ import glob as _glob
 import os
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,7 +52,7 @@ from ..sources.grids import (
 )
 from ..sources.scan import read_netcdf3_grid
 from ..sources.sinks import cells_grid, export_raster_geotiff
-from .daily import lineage_payload, regrid_to_lattice
+from .daily import regrid_to_lattice
 
 # fixture geometry: a coarse rotated-pole window over the WCOFS domain
 # (test-scaled; the production grid only changes these numbers)
@@ -180,12 +181,11 @@ def build_wcofs_day(
     lstep: float,
     n_lon: int,
     n_lat: int,
-) -> DataFrame:
+) -> pa.Table:
     """Stages 4-5 for one day: 1-NN regrid dir/mag to the viewer lattice
     (direction rides mag's neighbor) as one collected lattice stage, then
     mag + dir GeoTIFFs and a GPKG coverage from that one table. Returns the
-    lattice rows (the day's lineage-partition payload) as an Arrow-backed
-    frame."""
+    lattice rows (the day's lineage-partition payload) as an Arrow table."""
     cells = regrid_to_lattice(
         spark, rotated_dirmag_for_day(spark, nc_dir, day, grid),
         values=("mag", "direction"), mask=False,
@@ -208,7 +208,7 @@ def build_wcofs_day(
         west=lon0, north=lat0 + n_lat * lstep, dx=lstep, dy=lstep,
         field_name="mag",
     )
-    return lineage_payload(spark, cells)
+    return cells
 
 
 def run_wcofs_daily(
@@ -246,7 +246,7 @@ def run_wcofs_daily(
     else:
         lat0, lon0, lstep, n_lon, n_lat = lattice_spec
 
-    def build(s: SparkSession, day: str) -> DataFrame:
+    def build(s: SparkSession, day: str) -> pa.Table:
         return build_wcofs_day(
             s, nc_dir, day, grid, os.path.join(out_root, "rasters"),
             lat0, lon0, lstep, n_lon, n_lat,

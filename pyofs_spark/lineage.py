@@ -30,9 +30,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -283,8 +286,6 @@ class Manifest:
 def parquet_rows(path: str) -> int:
     """Row count of a written parquet directory from its files' footers —
     metadata only, no Spark job."""
-    import pyarrow.parquet as pq
-
     return sum(
         pq.read_metadata(os.path.join(path, f)).num_rows
         for f in os.listdir(path)
@@ -292,11 +293,30 @@ def parquet_rows(path: str) -> int:
     )
 
 
+def write_table(table: pa.Table, path: str) -> None:
+    """Overwrite the parquet directory `path` with `table` as one file,
+    written by pyarrow on the driver. The file is written under a dot name
+    (hidden from Spark's reader), the directory's other entries are
+    removed, and then the file is renamed into place."""
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, ".part-00000.parquet.tmp")
+    pq.write_table(table, tmp)
+    for f in os.listdir(path):
+        old = os.path.join(path, f)
+        if old == tmp:
+            continue
+        if os.path.isdir(old):
+            shutil.rmtree(old)
+        else:
+            os.unlink(old)
+    os.replace(tmp, os.path.join(path, "part-00000.parquet"))
+
+
 def run_partitioned(
     spark: SparkSession,
     out_root: str,
     part_keys: list[str],
-    build_partition: Callable[[SparkSession, str], DataFrame],
+    build_partition: Callable[[SparkSession, str], DataFrame | pa.Table],
     fingerprint: Callable[[str], str] = lambda k: k,
     size_of: Callable[[str], float] | None = None,
 ) -> dict:
@@ -305,6 +325,11 @@ def run_partitioned(
     Idempotent + resumable: killing the job mid-run and re-invoking
     completes only the missing partitions; output equals a single run
     (tested in tests/test_lineage_skew.py). Returns summary metrics.
+
+    A partition's payload is written to `part_key=K/`, replacing what was
+    there. A DataFrame goes through Spark's parquet writer. A pyarrow
+    Table, already collected on the driver, is written there by pyarrow
+    (`write_table`), which starts no Spark job.
 
     size_of: optional estimated input size per key — pending partitions
     run LARGEST-FIRST (the reference schedules its downloads biggest-first,
@@ -321,10 +346,14 @@ def run_partitioned(
             skipped.append(key)
             continue
         t0 = time.time()
-        df = build_partition(spark, key)
+        payload = build_partition(spark, key)
         path = os.path.join(out_root, f"part_key={key}")
-        df.write.mode("overwrite").parquet(path)
-        n = parquet_rows(path)
+        if isinstance(payload, pa.Table):
+            write_table(payload, path)
+            n = payload.num_rows
+        else:
+            payload.write.mode("overwrite").parquet(path)
+            n = parquet_rows(path)
         wall = time.time() - t0
         log.record(key, fingerprint(key), n, wall)  # metrics sink
         manifest.commit(  # snapshot publish — makes the partition visible

@@ -36,6 +36,7 @@ import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 from ..session import materialize as _materialize
 
@@ -127,7 +128,18 @@ def _knn_inline(
     and types the trailing values. Each payload column is one literal array
     indexed by the winner's position: constant folding makes it a single
     array literal, so the generated code does not embed the values and is
-    reused across calls whose point coordinates repeat (a daily field)."""
+    reused across calls whose point coordinates repeat (a daily field).
+
+    k = 1 takes the head of the top-k with element_at instead of exploding
+    it: the plan stays a pure projection, which Spark evaluates on the
+    driver when the queries are a LocalRelation (ConvertToLocalRelation; a
+    Generate node blocks that rule). With no points, every query keeps one
+    row whose neighbour columns are NULL."""
+    if not points_rows:
+        nulls = [(point_key, "string"), ("dist2", "double"), ("knn_rank", "int"), *payload]
+        return queries.select(
+            "*", *[F.lit(None).cast(dtype).alias(name) for name, dtype in nulls]
+        )
     topk = F.expr(
         _inline_topk_sql(points_rows, k, point_key, "lon", "lat", bool(payload))
     )
@@ -139,7 +151,11 @@ def _knn_inline(
         ).alias(name)
         for c, (name, dtype) in enumerate(payload)
     ]
-    return queries.select("*", F.posexplode(topk).alias("_r", "_s")).select(
+    if k == 1:
+        ranked = queries.select("*", F.lit(0).alias("_r"), F.element_at(topk, 1).alias("_s"))
+    else:
+        ranked = queries.select("*", F.posexplode(topk).alias("_r", "_s"))
+    return ranked.select(
         *queries.columns,
         F.col(f"_s.{point_key}").alias(point_key),
         F.col("_s.dist2").alias("dist2"),
@@ -194,8 +210,11 @@ def knn_join(
     if strategy == "inline":
         if points_rows is None:
             points_rows = points.select(point_key, "lon", "lat").collect()
-        return _knn_inline(queries, points_rows, k, point_key).select(
-            query_key, point_key, "dist2", "knn_rank"
+        # an empty point side ranks nothing: its one NULL row per query goes
+        return (
+            _knn_inline(queries, points_rows, k, point_key)
+            .filter(F.col("knn_rank").isNotNull())
+            .select(query_key, point_key, "dist2", "knn_rank")
         )
     size = cells.cell_size_deg(res)
     nx = cells.nx(res)
@@ -354,9 +373,10 @@ def nn_value_join(
 ) -> DataFrame:
     """1-NN value transfer — the regrid-nearest spatial join
     (semantics of wcofs.py:1791-1827 with tie-break (d², point_id)).
-    Points whose value_col is NULL are dropped first; the `carry` columns
-    ride along from the same neighbor. Returns every query column plus
-    (point_key, value_col, *carry, dist2).
+    Points whose value_col is NULL or NaN are dropped first; the `carry`
+    columns ride along from the same neighbor. Returns every query column
+    plus (point_key, value_col, *carry, dist2); with no points left, every
+    query row has NULL point_key, values and dist2.
 
     An inline-sized points side is fetched ONCE together with its values
     (the same collect that measures it) and folded into the plan, so the
@@ -364,7 +384,10 @@ def nn_value_join(
     points side. Larger sides join their values and the query columns
     back."""
     values = (value_col, *carry)
-    points = points.filter(F.col(value_col).isNotNull())
+    keep = F.col(value_col).isNotNull()
+    if isinstance(points.schema[value_col].dataType, (DoubleType, FloatType)):
+        keep &= ~F.isnan(value_col)
+    points = points.filter(keep)
     strategy, rows = _pick_strategy(points, (point_key, "lon", "lat", *values))
     if strategy == "inline":
         payload = tuple(

@@ -14,14 +14,16 @@ kernels re-expressed as Spark joins.
   particle_contour.py:275-281 bfill/ffill) via the union-marker window
   pattern (one shuffle, no range explosion).
 - `lattice` — build a regular output lattice DataFrame from bounds+step
-  (ref: the 0.04° output lattice wcofs.py:567-581) with spark.range (fully
-  distributed, no driver materialization).
+  (ref: the 0.04° output lattice wcofs.py:567-581): spark.range (fully
+  distributed, no driver materialization), or a driver-side LocalRelation
+  for a lattice small enough to evaluate on the driver.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -36,13 +38,25 @@ def lattice(
     step: float,
     n_lon: int,
     n_lat: int,
-    partitions: int = 32,
+    partitions: int | None = 32,
 ) -> DataFrame:
-    """Regular output lattice as (query_id, gi, gj, lon, lat)."""
+    """Regular output lattice as (query_id, gi, gj, lon, lat).
+
+    With partitions=None the ids come from an Arrow-built LocalRelation
+    instead of spark.range: Spark's optimizer (ConvertToLocalRelation) then
+    evaluates every projection over the lattice on the driver, with no job
+    and no code generation. The same formulas derive gi, gj, lon and lat
+    either way."""
+    n = n_lon * n_lat
+    if partitions is None:
+        ids = spark.createDataFrame(pa.table(
+            [pa.array(np.arange(n), pa.int64())],
+            schema=pa.schema([pa.field("query_id", pa.int64(), nullable=False)]),
+        ))
+    else:
+        ids = spark.range(0, n, 1, partitions).withColumnRenamed("id", "query_id")
     return (
-        spark.range(0, n_lon * n_lat, 1, partitions)
-        .withColumnRenamed("id", "query_id")
-        .withColumn("gi", (F.col("query_id") % n_lon).cast("long"))
+        ids.withColumn("gi", (F.col("query_id") % n_lon).cast("long"))
         .withColumn("gj", F.floor(F.col("query_id") / n_lon).cast("long"))
         .withColumn("lon", F.lit(float(lon0)) + F.col("gi") * F.lit(float(step)))
         .withColumn("lat", F.lit(float(lat0)) + F.col("gj") * F.lit(float(step)))

@@ -6,7 +6,8 @@
 
 Each checkout is a full tree of one commit (`git worktree add DIR SHA` or
 `git clone`), so both sides run their own `perfbench/run.py` against their
-own `pyofs_spark`. For every workload and seed the two sides run back to
+own `pyofs_spark`. A checkout with modified tracked files is refused: the
+recorded sha would not name the code that ran. For every workload and seed the two sides run back to
 back, and the side that goes first alternates with the pair index (parent
 first on even pairs), so a drift of the shared host's speed lands on both
 sides equally. Runs are sequential: two JVMs at once would contend for the
@@ -48,10 +49,20 @@ def parse_seeds(text: str) -> list[int]:
     return out
 
 
-def git_sha(checkout: str) -> str:
+def git(checkout: str, *args: str) -> str:
     return subprocess.run(
-        ["git", "rev-parse", "HEAD"], cwd=checkout, capture_output=True, text=True, check=True
+        ["git", *args], cwd=checkout, capture_output=True, text=True, check=True
     ).stdout.strip()
+
+
+def git_sha(checkout: str) -> str:
+    """HEAD of a checkout whose tracked files are all committed, so the sha
+    names what is measured; an edited tracked file exits with an error."""
+    modified = git(checkout, "status", "--porcelain", "--untracked-files=no")
+    if modified:
+        sys.exit(f"{checkout} has uncommitted changes to tracked files; commit them "
+                 f"so the recorded sha is the code measured:\n{modified}")
+    return git(checkout, "rev-parse", "HEAD")
 
 
 def run_once(checkout: str, workload: str, seed: int, seconds: float, trace: int) -> dict:

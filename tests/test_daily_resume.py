@@ -1,9 +1,11 @@
 """Daily raster job under failure and changed inputs: a crash between any
 two steps of a partition re-runs exactly that partition on re-invocation,
 readers never see the orphan, a rewritten events file invalidates the
-committed partitions, and index.json lists only committed partitions.
-Also the knn_join points=None contract and the job budget of one day
-raster (one field collect, one lattice collect, one lineage write)."""
+committed partitions, index.json lists only committed partitions, and a
+day without events commits an all-nodata raster. Also the knn_join
+points=None contract, the job budget of one day raster (only the field
+scan and aggregate run on executors), and the size choice of the lattice
+stage (on the driver when it is small, bit-identical either way)."""
 
 from __future__ import annotations
 
@@ -11,6 +13,8 @@ import json
 import os
 import shutil
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
@@ -135,20 +139,118 @@ def test_rewritten_events_invalidate_committed_partitions(spark, tmp_path):
     assert (after != before).any()
 
 
-def test_day_raster_job_budget(spark, tmp_path):
-    """One day partition costs at most five Spark jobs: the field collect
-    that sizes and fetches the scatter points, the one lattice collect
-    that feeds every sink, and the lineage write (no read-back)."""
-    from pyofs_spark.jobs.daily import run_daily_job
-
+def _jobs(spark, group, fn):
+    """fn's result and the number of Spark jobs it started."""
     sc = spark.sparkContext
-    sc.setJobGroup("daily-budget", "one day partition")
+    sc.setJobGroup(group, group)
     try:
-        s = run_daily_job(spark, SF_DIR, str(tmp_path / "out"), ("sst",), DAYS)
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_day_raster_job_budget(spark, tmp_path):
+    """One day partition costs at most two Spark jobs: the shuffle of the
+    field aggregate and the collect that sizes and fetches the scatter
+    points. The events scan declares its schema (no inference job), the
+    lattice stage runs on the driver, and the lineage payload is written
+    by pyarrow."""
+    from pyofs_spark.jobs.daily import run_daily_job
+
+    s, jobs = _jobs(spark, "daily-budget", lambda: run_daily_job(
+        spark, SF_DIR, str(tmp_path / "out"), ("sst",), DAYS
+    ))
     assert s["ran"] == ["sst__2024-01-02"]
-    assert len(sc.statusTracker().getJobIdsForGroup("daily-budget")) <= 5
+    assert jobs <= 2
+
+
+def _field(spark):
+    """A driver-side scatter field: one NaN and one NULL value (both
+    dropped) and a NaN `extra`, which rides a kept point's neighbour."""
+    from pyofs_spark.jobs.daily import LAT0, LON0
+
+    rng = np.random.default_rng(5)
+    n = 60
+    k = rng.choice(40 * 30, n, replace=False)
+    i, j = k % 40, k // 40
+    value = rng.gamma(2.0, 30.0, n)
+    value[3] = np.nan
+    extra = rng.uniform(0, 1, n)
+    extra[::7] = np.nan
+    return spark.createDataFrame(pa.table({
+        "point_id": pa.array(k, pa.int64()),
+        "lon": LON0 + i * 0.25,
+        "lat": LAT0 + j * 0.25,
+        "value": pa.array(np.where(np.arange(n) == 4, None, value).tolist(), pa.float64()),
+        "extra": extra,
+    }))
+
+
+def _bits(table):
+    """Schema plus, per column, its validity and values (floats by bit
+    pattern, so NaN compares equal to itself and -0.0 differs from 0.0)."""
+    cols = {}
+    for name in table.column_names:
+        col = table[name].combine_chunks()
+        vals = col.to_pylist()
+        if pa.types.is_floating(col.type):
+            vals = np.asarray(col.fill_null(0.0)).view(np.int64).tolist()
+        cols[name] = (col.is_valid().to_pylist(), vals)
+    return table.schema, cols
+
+
+def test_day_lattice_runs_on_the_driver(spark, monkeypatch):
+    """A day lattice optimizes to a LocalRelation and, with a driver-side
+    field, regrid_to_lattice starts no Spark job at all."""
+    from pyofs_spark.jobs import daily
+
+    plans = []
+    collect = daily._collect_arrow
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().optimizedPlan().nodeName())
+        return collect(df)
+
+    monkeypatch.setattr(daily, "_collect_arrow", spy)
+    cells, jobs = _jobs(spark, "day-lattice", lambda: daily.regrid_to_lattice(spark, _field(spark)))
+    assert plans == ["LocalRelation"]
+    assert jobs == 0
+    assert cells.num_rows == daily.N_LON * daily.N_LAT
+
+
+def test_lattice_size_choice_is_bit_identical(spark, monkeypatch):
+    """Both sides of the lattice size choice return the same Arrow table,
+    bit for bit, including the NaN cells that reach the plan as
+    CAST('nan' AS double) literals."""
+    from pyofs_spark.jobs import daily
+
+    src = _field(spark)
+    on_driver = daily.regrid_to_lattice(spark, src, values=("value", "extra"))
+    monkeypatch.setattr(daily, "LOCAL_LATTICE_CELLS", 100)
+    monkeypatch.setattr(daily, "LATTICE_CELLS_PER_TASK", 100)
+    on_executors, jobs = _jobs(
+        spark, "lattice-spark", lambda: daily.regrid_to_lattice(spark, src, values=("value", "extra"))
+    )
+    assert jobs >= 1
+    assert _bits(on_driver) == _bits(on_executors)
+    assert pc.sum(pc.is_nan(on_driver["extra"])).as_py() > 0
+    assert not pc.any(pc.is_nan(on_driver["value"])).as_py()
+
+
+def test_day_without_events_commits_all_nodata(spark, tmp_path):
+    """A day outside the events' range has an empty field: the partition
+    still commits every lattice row, and the GeoTIFF is all nodata."""
+    from pyofs_spark.jobs.daily import N_LAT, N_LON, run_daily_job
+    from pyofs_spark.sources.geotiff import read_geotiff
+
+    out = str(tmp_path / "out")
+    s = run_daily_job(spark, SF_DIR, out, ("sst",), ("2099-01-01",))
+    assert s["ran"] == ["sst__2099-01-01"]
+    assert s["lineage"]["sst__2099-01-01"]["n_rows"] == N_LON * N_LAT
+    tif = read_geotiff(os.path.join(out, "rasters", "sst_2099-01-01.tif"))
+    assert tif["data"].shape == (N_LAT, N_LON)
+    assert (tif["data"] == tif["nodata"]).all()
 
 
 def test_knn_join_points_none_needs_inline_rows(spark):

@@ -7,6 +7,7 @@ import os
 import shutil
 import tempfile
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -72,6 +73,39 @@ def test_fingerprint_invalidation(spark):
         assert r["ran"] == keys  # changed input fingerprint → recompute
     finally:
         shutil.rmtree(d)
+
+
+def test_arrow_payload_reads_like_spark_payload(spark, tmp_path):
+    """A pyarrow Table payload (written by pyarrow) and the same rows as a
+    DataFrame payload (written by Spark) read back with the same schema
+    and rows; an Arrow re-run replaces a Spark-written partition."""
+    table = pa.table({
+        "query_id": pa.array([0, 1, 2], pa.int64()),
+        "value": [1.5, None, float("nan")],
+        "polygon_id": ["a", None, "b"],
+    })
+    builds = {
+        "arrow": lambda s, k: table,
+        "spark": lambda s, k: s.createDataFrame(table),
+    }
+    out = {}
+    for kind, build in builds.items():
+        root = str(tmp_path / kind)
+        r = run_partitioned(spark, root, ["k1", "k2"], build)
+        assert {k: v["n_rows"] for k, v in r["lineage"].items()} == {"k1": 3, "k2": 3}
+        out[kind] = read_output(spark, root)
+    assert out["arrow"].schema == out["spark"].schema
+
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    assert rows(out["arrow"]) == rows(out["spark"])
+
+    root = str(tmp_path / "spark")
+    r = run_partitioned(spark, root, ["k1"], builds["arrow"], fingerprint=lambda k: "v2")
+    assert r["ran"] == ["k1"]
+    assert os.listdir(os.path.join(root, "part_key=k1")) == ["part-00000.parquet"]
+    assert rows(read_output(spark, root)) == rows(out["arrow"])
 
 
 def test_skew_histogram_and_salting(spark):

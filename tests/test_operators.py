@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
 from pyofs_spark.functions import kernels as K
@@ -51,9 +53,12 @@ def test_knn_rings_exact_vs_brute(spark):
         assert [(pid, d2) for _, pid, d2 in rows] == exp[qid], f"query {qid}"
 
 
-def test_nn_regrid_matches_golden_kernel(spark):
+@pytest.mark.parametrize("source", ["pandas", "arrow"])
+def test_nn_regrid_matches_golden_kernel(spark, source):
     """nn_value_join == kernels.regrid_nearest (the reference-exact
-    interpolate_grid 'nearest' twin, wcofs.py:1791-1827)."""
+    interpolate_grid 'nearest' twin, wcofs.py:1791-1827). A pandas-built
+    source turns NaN into NULL; an Arrow-built one keeps the NaN values,
+    which must be dropped as well."""
     rng = np.random.default_rng(3)
     n_src = 200
     slon = rng.uniform(-125, -115, n_src)
@@ -66,9 +71,8 @@ def test_nn_regrid_matches_golden_kernel(spark):
 
     golden = K.regrid_nearest(slon, slat, sval, qlon, qlat)
 
-    src = spark.createDataFrame(
-        pd.DataFrame({"point_id": np.arange(n_src), "lon": slon, "lat": slat, "val": sval})
-    )
+    cols = {"point_id": np.arange(n_src), "lon": slon, "lat": slat, "val": sval}
+    src = spark.createDataFrame(pd.DataFrame(cols) if source == "pandas" else pa.table(cols))
     q = spark.createDataFrame(
         pd.DataFrame({"query_id": np.arange(len(qlon)), "lon": qlon, "lat": qlat})
     )
@@ -77,6 +81,27 @@ def test_nn_regrid_matches_golden_kernel(spark):
     assert len(got_map) == len(qlon)
     for i in range(len(qlon)):
         assert got_map[i] == golden[i], f"query {i}: {got_map[i]} != {golden[i]}"
+
+
+def test_empty_point_side(spark):
+    """No usable point (here the only one has a NaN value): nn_value_join
+    keeps every query with NULL neighbour columns, as the golden kernel
+    gives NaN everywhere, and an inline knn_join ranks nothing."""
+    q = spark.createDataFrame(
+        [(1, 0.0, 0.0), (2, 1.0, 1.0)], "query_id long, lon double, lat double"
+    )
+    p = spark.createDataFrame(pa.table(
+        {"point_id": pa.array([7], pa.int64()), "lon": [0.5], "lat": [0.5], "val": [np.nan]}
+    ))
+    assert np.isnan(K.regrid_nearest(
+        np.array([0.5]), np.array([0.5]), np.array([np.nan]), np.zeros(2), np.ones(2)
+    )).all()
+    got = nn_value_join(q, p, "val").collect()
+    assert sorted(tuple(r) for r in got) == [
+        (1, 0.0, 0.0, None, None, None), (2, 1.0, 1.0, None, None, None)
+    ]
+    assert knn_join(q, None, k=2, strategy="inline", points_rows=[]).collect() == []
+    assert knn_join(q, p.filter("false"), k=1).collect() == []
 
 
 def test_pip_sql_matches_numpy(spark):
