@@ -20,7 +20,7 @@ composition:
            dir = (atan2(e, n) + π)·180/π, mag = hypot — wcofs.py:629-633)
   stage 4  1-NN regrid          jobs/daily.regrid_to_lattice — the same
            lattice stage as the daily job (exactly kernels.regrid_nearest;
-           on the driver when the lattice fits one task), collected once
+           on the driver when the lattice is small), collected once
   stage 5  sinks                real GeoTIFF (K1) + GPKG 2D-gridded
            coverage (K3), north-up/float32/nodata, all from that one
            collected table

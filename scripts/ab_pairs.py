@@ -7,10 +7,10 @@
 Each checkout is a full tree of one commit (`git worktree add DIR SHA` or
 `git clone`), so both sides run their own `perfbench/run.py` against their
 own `pyofs_spark`. A checkout with modified tracked files is refused: the
-recorded sha would not name the code that ran. For every workload and seed the two sides run back to
-back, and the side that goes first alternates with the pair index (parent
-first on even pairs), so a drift of the shared host's speed lands on both
-sides equally. Runs are sequential: two JVMs at once would contend for the
+recorded sha would not name the code that ran. For every workload and seed
+the two sides run back to back, and the side that goes first alternates
+with the pair index (parent first on even pairs), so a drift of the shared
+host's speed lands on both sides equally. Runs are sequential: two JVMs at once would contend for the
 cores being measured. Every run lasts BENCHMARK.json's `run_seconds`, the
 run length the benchmark fixes.
 
