@@ -24,8 +24,8 @@ Like the reference, each day raster is computed ONCE and every output is
 written from it. Only the field scan and its aggregate run on executors:
   - the events scan declares its schema, so no job infers it;
   - the aggregated field (dimension-sized: ≤ 512 scatter points here) is
-    executed by the one collect that also sizes it for the kNN strategy
-    (operators/knn._pick_strategy) and carries its values;
+    executed by the one collect that also sizes it for the kNN path
+    (operators/knn._inline_rows) and carries its values;
   - regrid + mask over the lattice (`regrid_to_lattice`) is one projection.
     A small lattice (16x12 here) is a LocalRelation, which Spark's
     optimizer evaluates on the driver with no job; a larger one is one

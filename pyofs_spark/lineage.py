@@ -18,8 +18,8 @@ distributed engine:
   overwrites the orphan directory idempotently before committing it.
 - resume = anti-join pending partitions against the current snapshot
   (the reference's existence predicate, as a real anti-join),
-- the per-partition LineageLog doubles as the metrics sink (row counts,
-  timings) for the bench harness.
+- each partition's manifest entry doubles as its metrics record (input
+  fingerprint, row count, wall time) for the bench harness.
 
 On real Iceberg the snapshot swap is a catalog CAS (optimistic
 concurrency, multi-writer); this single-driver stand-in asserts the
@@ -37,52 +37,6 @@ from collections.abc import Callable
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-LINEAGE_COLS = (
-    "part_key string, input_fingerprint string, n_rows long, "
-    "wall_sec double, finished_at string"
-)
-
-
-class LineageLog:
-    """Append-only lineage table (one JSON file per completed partition —
-    atomic on POSIX rename; an Iceberg append in production)."""
-
-    def __init__(self, root: str):
-        self.dir = os.path.join(root, "_lineage")
-        os.makedirs(self.dir, exist_ok=True)
-
-    def completed(self) -> dict[str, dict]:
-        out = {}
-        for f in os.listdir(self.dir):
-            if f.endswith(".json"):
-                with open(os.path.join(self.dir, f)) as fh:
-                    row = json.load(fh)
-                out[row["part_key"]] = row
-        return out
-
-    def record(self, part_key: str, fingerprint: str, n_rows: int, wall_sec: float):
-        row = {
-            "part_key": part_key,
-            "input_fingerprint": fingerprint,
-            "n_rows": n_rows,
-            "wall_sec": round(wall_sec, 3),
-            "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        tmp = os.path.join(self.dir, f".{part_key}.tmp")
-        dst = os.path.join(self.dir, f"{part_key}.json")
-        with open(tmp, "w") as fh:
-            json.dump(row, fh)
-        os.replace(tmp, dst)  # atomic publish
-
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        rows = list(self.completed().values())
-        if not rows:
-            return spark.createDataFrame([], LINEAGE_COLS)
-        return spark.createDataFrame(rows).select(
-            "part_key", "input_fingerprint", "n_rows", "wall_sec", "finished_at"
-        )
 
 
 class Manifest:
@@ -320,7 +274,8 @@ def run_partitioned(
     fingerprint: Callable[[str], str] = lambda k: k,
     size_of: Callable[[str], float] | None = None,
 ) -> dict:
-    """Run build_partition for every part_key not yet in the lineage log.
+    """Run build_partition for every part_key not yet committed with its
+    current fingerprint.
 
     Idempotent + resumable: killing the job mid-run and re-invoking
     completes only the missing partitions; output equals a single run
@@ -334,8 +289,10 @@ def run_partitioned(
     size_of: optional estimated input size per key — pending partitions
     run LARGEST-FIRST (the reference schedules its downloads biggest-first,
     SURVEY O3; longest-job-first minimizes makespan when the tail job
-    would otherwise straggle)."""
-    log = LineageLog(out_root)
+    would otherwise straggle).
+
+    The summary's `lineage` maps each committed part_key to its manifest
+    entry: input_fingerprint, n_rows, wall_sec and path."""
     manifest = Manifest(out_root)
     done = manifest.current()["partitions"]
     ran, skipped = [], []
@@ -355,7 +312,6 @@ def run_partitioned(
             payload.write.mode("overwrite").parquet(path)
             n = parquet_rows(path)
         wall = time.time() - t0
-        log.record(key, fingerprint(key), n, wall)  # metrics sink
         manifest.commit(  # snapshot publish — makes the partition visible
             key,
             {
@@ -370,7 +326,7 @@ def run_partitioned(
     return {
         "ran": ran,
         "skipped": skipped,
-        "lineage": log.completed(),
+        "lineage": manifest.current()["partitions"],
         "commit_collisions": manifest.collisions,
     }
 

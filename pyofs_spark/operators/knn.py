@@ -1,5 +1,5 @@
-"""Distributed kNN join (and its k=1 special case, the nearest-neighbor
-regrid join).
+"""Exact kNN join (and its k=1 special case, the nearest-neighbor regrid
+join).
 
 Reference semantics being generalized:
 - 1-NN scattered regrid `interpolate_grid(..., 'nearest')`
@@ -7,27 +7,32 @@ Reference semantics being generalized:
 - kNN station lookup (north_rule; ref context: station layers
   hf_radar.py:198-252, data_buoy.py:64-71).
 
-Spark-first algorithm (no KD-tree, no driver collect of the big side):
+Two plans, chosen from the points side (*To Partition, or Not to
+Partition*, SIGMOD 2021); both rank by (squared-degree distance, point_id):
 
-1. Index both sides into quad cells at resolution `res` (functions/cells.py).
-2. Pass r = 1, 2, ..., max_ring: for the still-unsettled queries, explode
-   the (2r+1)² cell disk around each query cell, hash-join against the
-   points bucketed by cell, take the k best by (squared-degree distance,
-   point_id) with a window.
-3. A query is SETTLED after pass r iff it found ≥ k candidates and its k-th
-   distance < (r * cell_size)² — any point in an unexplored cell is at least
-   r*cell_size away (chebyshev ring ≥ r+1 ⇒ coordinate gap ≥ r*cell_size),
-   so the answer cannot change. This makes the output EXACTLY equal to the
-   brute-force result, with the deterministic tie-break (d², point_id).
-4. Queries still unsettled after max_ring fall back to a broadcast
-   brute-force join (they are the sparse tail — isolated mid-ocean points).
+- Inline. A list of point rows, or a DataFrame of at most
+  INLINE_POINTS_THRESHOLD rows, is folded into the query plan as literals:
+  each query row sorts the (dist2, id) structs and slices the top k. One
+  map-only stage, no shuffle.
+- Rings, for a larger DataFrame (no KD-tree, no driver collect of it):
+  1. Index both sides into quad cells at resolution `res`
+     (functions/cells.py).
+  2. Pass r = 1, 2, ..., max_ring: for the still-unsettled queries, explode
+     the (2r+1)² cell disk around each query cell, hash-join against the
+     points bucketed by cell, take the k best with a window.
+  3. A query is SETTLED after pass r iff it found ≥ k candidates and its
+     k-th distance < (r * cell_size)² — any point in an unexplored cell is
+     at least r*cell_size away (chebyshev ring ≥ r+1 ⇒ coordinate gap ≥
+     r*cell_size), so the answer cannot change. This makes the output
+     EXACTLY equal to the brute-force result, with the deterministic
+     tie-break (d², point_id).
+  4. Queries still unsettled after max_ring are ranked against every point
+     by a cross join (they are the sparse tail — isolated mid-ocean points).
 
 Scale notes (100 TB): pass 1 dominates and is a single shuffle join keyed by
-cell id; the points side is small (stations/grid) → broadcast; the disk
-explode multiplies queries ×9 only. Skewed hot cells on the QUERY side are
-harmless (queries never group by cell); skew on the points side is handled
-by broadcasting. For large-large NN joins, `salt_hot_cells` in
-operators/skew.py pre-splits hot buckets.
+cell id; the disk explode multiplies queries ×9 only. Skewed hot cells on the
+QUERY side are harmless (queries never group by cell). For large-large NN
+joins, `salt_hot_cells` in operators/skew.py pre-splits hot point buckets.
 """
 
 from __future__ import annotations
@@ -43,6 +48,8 @@ from ..session import materialize as _materialize
 from ..functions import cells
 from ..functions.sqlgen import flit, ident, slit
 
+INLINE_POINTS_THRESHOLD = 512  # at most this many points: fold them into the plan
+
 
 def _sql_value(v, dtype: str) -> str:
     """Exact SQL literal of one collected numeric value, typed as its source
@@ -56,57 +63,33 @@ def _sql_value(v, dtype: str) -> str:
     return f"CAST({lit} AS {dtype})"
 
 
-def _inline_topk_sql(
-    rows: list[tuple],
-    k: int,
-    point_key: str,
-    lon_sql: str,
-    lat_sql: str,
-    with_index: bool = False,
-) -> str:
-    """topk expression over a literal point list as ONE generated SQL string.
+def _topk_sql(rows, lon: str, lat: str, length: str, with_index: bool = False) -> str:
+    """Top-k over a literal point list as ONE SQL expression:
+    slice(sort_array(array(named_struct('dist2', d², 'id', '<point id>'), ...)), 1, length).
 
-    slice(sort_array(array(named_struct('dist2', ..., '<key>', ...))), 1, k)
-    — identical semantics to the Column-by-Column construction (struct
-    ordering is lexicographic by field: dist2 then point id), but a single
-    F.expr parse instead of ~8 py4j round-trips per point (guide §1/§5:
-    measured 0.85 s of pure driver time per invocation at 13 points).
-
-    with_index appends each point's position in `rows` as a last struct
-    field `_i` (after the point id, so it never changes the order)."""
+    Struct ordering is lexicographic by field, so the sort ranks by dist2
+    and then by the id, a string literal. One F.expr parse instead of ~8
+    py4j round-trips per point (measured 0.85 s of driver time per call at
+    13 points). rows are (point_id, lon, lat, ...); `length` is SQL: k, or
+    an expression that is NULL where the result should be NULL. with_index
+    appends each row's position in `rows` as a last field `_i` (after the
+    id, so it never changes the order)."""
     terms = ", ".join(
-        "named_struct('dist2', "
-        f"(({lon_sql}) - {flit(r[1])}) * (({lon_sql}) - {flit(r[1])})"
-        f" + (({lat_sql}) - {flit(r[2])}) * (({lat_sql}) - {flit(r[2])}), "
-        f"{slit(point_key)}, {slit(r[0])}"
+        f"named_struct('dist2', ({lon} - {flit(r[1])}) * ({lon} - {flit(r[1])})"
+        f" + ({lat} - {flit(r[2])}) * ({lat} - {flit(r[2])}), 'id', {slit(r[0])}"
         + (f", '_i', {i}" if with_index else "")
         + ")"
         for i, r in enumerate(rows)
     )
-    return f"slice(sort_array(array({terms})), 1, {k})"
+    return f"slice(sort_array(array({terms})), 1, {length})"
 
 
-def _with_cell_xy(df: DataFrame, res: int, lon: str = "lon", lat: str = "lat") -> DataFrame:
-    return df.withColumn("_cx", F.expr(cells.cell_x_sql(lon, res))).withColumn(
-        "_cy", F.expr(cells.cell_y_sql(lat, res))
-    )
-
-
-INLINE_POINTS_THRESHOLD = 512  # below this, fold points into the plan (no shuffle)
-BRUTE_POINTS_THRESHOLD = 20_000  # below this, broadcast brute-force wins
-
-
-def _pick_strategy(points: DataFrame, cols: tuple[str, ...]) -> tuple[str, list | None]:
-    """Size the points side and pick the strategy from the measured size
-    (*To Partition, or Not to Partition*, SIGMOD 2021). One
-    limit(INLINE_POINTS_THRESHOLD + 1) collect both measures the side and,
-    when it is inline-sized, IS the fetch of its rows (`cols`); count()
-    runs only past the inline threshold. Returns (strategy, rows or None)."""
+def _inline_rows(points: DataFrame, cols: tuple[str, ...]) -> list | None:
+    """The rows (`cols`) of an inline-sized points side, or None for a
+    larger one. One limit(INLINE_POINTS_THRESHOLD + 1) collect both measures
+    the side and, when it is inline-sized, IS the fetch of its rows."""
     rows = points.select(*cols).limit(INLINE_POINTS_THRESHOLD + 1).collect()
-    if len(rows) <= INLINE_POINTS_THRESHOLD:
-        return "inline", rows
-    n_points = points.count()
-    return ("brute" if n_points <= BRUTE_POINTS_THRESHOLD else "rings"), None
+    return rows if len(rows) <= INLINE_POINTS_THRESHOLD else None
 
 
 def _knn_inline(
@@ -120,9 +103,8 @@ def _knn_inline(
     list is folded into the plan as a literal struct array; per query row
     we sort (dist2, point_id) structs and slice the top k. Pure map →
     embarrassingly parallel, the optimal plan at any scale when the dim side
-    is tiny. Struct ordering = lexicographic by field (dist2 then point_id)
-    — the same deterministic tie-break. Keeps every query column and appends
-    (point_key, dist2, knn_rank, *payload names).
+    is tiny. Keeps every query column and appends (point_key, dist2,
+    knn_rank, *payload names); point_key holds the ids as strings.
 
     points_rows are (point_id, lon, lat, *payload values); `payload` names
     and types the trailing values. Each payload column is one literal array
@@ -140,9 +122,7 @@ def _knn_inline(
         return queries.select(
             "*", *[F.lit(None).cast(dtype).alias(name) for name, dtype in nulls]
         )
-    topk = F.expr(
-        _inline_topk_sql(points_rows, k, point_key, "lon", "lat", bool(payload))
-    )
+    topk = F.expr(_topk_sql(points_rows, "lon", "lat", str(k), bool(payload)))
     values = [
         F.expr(
             "element_at(array({}), _s._i + 1)".format(
@@ -157,7 +137,7 @@ def _knn_inline(
         ranked = queries.select("*", F.posexplode(topk).alias("_r", "_s"))
     return ranked.select(
         *queries.columns,
-        F.col(f"_s.{point_key}").alias(point_key),
+        F.col("_s.id").alias(point_key),
         F.col("_s.dist2").alias("dist2"),
         (F.col("_r") + 1).alias("knn_rank"),
         *values,
@@ -166,56 +146,71 @@ def _knn_inline(
 
 def knn_join(
     queries: DataFrame,
-    points: DataFrame | None,
+    points: DataFrame | list[tuple],
     k: int,
     res: int = 6,
     query_key: str = "query_id",
     point_key: str = "point_id",
     max_ring: int = 4,
-    broadcast_points: bool = True,
-    strategy: str = "auto",
-    points_rows: list[tuple] | None = None,
 ) -> DataFrame:
-    """Exact kNN join: for each query row, the k nearest point rows.
+    """Exact kNN join: for each query row, the k nearest points.
 
-    queries: (query_key, lon, lat, ...); points: (point_key, lon, lat, ...).
-    Returns (query_key, point_key, dist2, knn_rank) with
-    knn_rank ∈ [1, k] ordered by (dist2, point_key).
+    queries: (query_key, lon, lat, ...). points: a DataFrame
+    (point_key, lon, lat, ...), or a list of (point_id, lon, lat) rows that
+    the caller already holds on the driver, such as the STATIONS constant
+    (no Spark job fetches them). Returns (query_key, point_key, dist2,
+    knn_rank) with knn_rank ∈ [1, k] ordered by (dist2, point_key).
 
-    strategy:
-      'inline' — fold the points into the plan as literals (see _knn_inline).
-      'brute' — broadcast the points and window over the full cross product.
-                Optimal when the points side is dimension-sized (stations):
-                one map-side join + one window shuffle, no iteration.
-      'rings' — expanding-cell-ring passes (scales to large points sides).
-      'auto'  — measure the points side and pick (_pick_strategy). This
-                mirrors Catalyst's broadcast-vs-shuffle decision, which
-                cannot see through the ring loop.
+    The input picks the plan. A list, or a DataFrame of at most
+    INLINE_POINTS_THRESHOLD rows (measured by one bounded collect, which
+    also fetches them), is folded into the query plan (_knn_inline); its
+    point ids come back as strings and ties break in their string order.
+    A larger DataFrame takes the expanding-ring join (_knn_rings), the only
+    path that `res` and `max_ring` tune."""
+    if isinstance(points, DataFrame):
+        rows = _inline_rows(points, (point_key, "lon", "lat"))
+        if rows is None:
+            return _knn_rings(queries, points, k, res, query_key, point_key, max_ring)
+    else:
+        rows = points
+    # an empty point side ranks nothing: its one NULL row per query goes
+    return (
+        _knn_inline(queries, rows, k, point_key)
+        .filter(F.col("knn_rank").isNotNull())
+        .select(query_key, point_key, "dist2", "knn_rank")
+    )
 
-    points_rows: optional pre-collected [(point_id, lon, lat), ...] for the
-    'inline' strategy — skips the per-invocation points.collect() Spark job
-    (a dimension table the caller already holds driver-side, e.g. the
-    STATIONS constant, costs ~0.5 s of createDataFrame+collect per call
-    otherwise; guide §5: no driver data work on the query path). With
-    points_rows, `points` may be None, but only under strategy='inline'.
-    """
-    if points is None and (points_rows is None or strategy != "inline"):
-        raise ValueError(
-            "knn_join: points=None needs points_rows and strategy='inline' "
-            f"(got strategy={strategy!r}, points_rows "
-            f"{'given' if points_rows is not None else 'missing'})"
-        )
-    if strategy == "auto":
-        strategy, points_rows = _pick_strategy(points, (point_key, "lon", "lat"))
-    if strategy == "inline":
-        if points_rows is None:
-            points_rows = points.select(point_key, "lon", "lat").collect()
-        # an empty point side ranks nothing: its one NULL row per query goes
-        return (
-            _knn_inline(queries, points_rows, k, point_key)
-            .filter(F.col("knn_rank").isNotNull())
-            .select(query_key, point_key, "dist2", "knn_rank")
-        )
+
+def _with_cell_xy(df: DataFrame, res: int, lon: str = "lon", lat: str = "lat") -> DataFrame:
+    return df.withColumn("_cx", F.expr(cells.cell_x_sql(lon, res))).withColumn(
+        "_cy", F.expr(cells.cell_y_sql(lat, res))
+    )
+
+
+def _top_k(cand: DataFrame, k: int, query_key: str, point_key: str) -> DataFrame:
+    """dist2 of each (query, point) candidate pair, and the k best pairs of
+    each query by (dist2, point_key), numbered by knn_rank."""
+    win = Window.partitionBy(query_key).orderBy("dist2", point_key)
+    dlon, dlat = F.col("_qlon") - F.col("_plon"), F.col("_qlat") - F.col("_plat")
+    return (
+        cand.withColumn("dist2", dlon * dlon + dlat * dlat)
+        .withColumn("knn_rank", F.row_number().over(win))
+        .filter(F.col("knn_rank") <= k)
+        .select(query_key, "_qlon", "_qlat", "_cx", "_cy", point_key, "dist2", "knn_rank")
+    )
+
+
+def _knn_rings(
+    queries: DataFrame,
+    points: DataFrame,
+    k: int,
+    res: int,
+    query_key: str,
+    point_key: str,
+    max_ring: int,
+) -> DataFrame:
+    """knn_join's expanding-cell-ring join (module docstring, steps 1-4):
+    the same output, with point_key keeping its type."""
     size = cells.cell_size_deg(res)
     nx = cells.nx(res)
     q = _with_cell_xy(queries, res).select(
@@ -227,30 +222,8 @@ def knn_join(
         F.col("lat").alias("_plat"),
         (F.col("_cy") * nx + F.col("_cx")).alias("_pcell"),
     )
-    # The broadcast hint only makes sense for the dimension-sized paths;
-    # 'rings' exists precisely because the points side is too big to
-    # broadcast — hinting it there would push the full table to every
-    # executor (and the driver) in each ring join.
-    if broadcast_points and strategy != "rings":
-        p = F.broadcast(p)
-    if strategy == "brute":
-        win = Window.partitionBy(query_key).orderBy("dist2", point_key)
-        return (
-            q.crossJoin(p.drop("_pcell"))
-            .withColumn(
-                "dist2",
-                (F.col("_qlon") - F.col("_plon")) * (F.col("_qlon") - F.col("_plon"))
-                + (F.col("_qlat") - F.col("_plat")) * (F.col("_qlat") - F.col("_plat")),
-            )
-            .withColumn("knn_rank", F.row_number().over(win))
-            .filter(F.col("knn_rank") <= k)
-            .select(query_key, point_key, "dist2", "knn_rank")
-        )
-
     remaining = q
     settled_parts: list[DataFrame] = []
-    win = Window.partitionBy(query_key).orderBy("dist2", point_key)
-
     for ring in range(1, max_ring + 1):
         # truncate lineage so each pass doesn't recompute all prior passes
         remaining = _materialize(remaining)
@@ -275,15 +248,9 @@ def knn_join(
                 + F.pmod(F.col("_cx") + F.col("_o.dx") + nx, F.lit(nx))
             ).alias("_qcell"),
         ).dropDuplicates([query_key, "_qcell"])
-        cand = cand_cells.join(p, cand_cells["_qcell"] == p["_pcell"], "inner").withColumn(
-            "dist2",
-            (F.col("_qlon") - F.col("_plon")) * (F.col("_qlon") - F.col("_plon"))
-            + (F.col("_qlat") - F.col("_plat")) * (F.col("_qlat") - F.col("_plat")),
-        )
-        topk = (
-            cand.withColumn("knn_rank", F.row_number().over(win))
-            .filter(F.col("knn_rank") <= k)
-            .select(query_key, "_qlon", "_qlat", "_cx", "_cy", point_key, "dist2", "knn_rank")
+        topk = _top_k(
+            cand_cells.join(p, cand_cells["_qcell"] == p["_pcell"], "inner"),
+            k, query_key, point_key,
         )
         # settled: k found and k-th distance strictly inside the explored radius
         kth = topk.groupBy(query_key).agg(
@@ -295,22 +262,9 @@ def knn_join(
         )
         settled_parts.append(topk.join(done_keys, query_key, "left_semi"))
         remaining = remaining.join(done_keys, query_key, "left_anti")
-        if ring == max_ring:
-            break
 
-    # brute-force tail: tiny remaining set x all points
-    tail = (
-        remaining.crossJoin(p.drop("_pcell"))
-        .withColumn(
-            "dist2",
-            (F.col("_qlon") - F.col("_plon")) * (F.col("_qlon") - F.col("_plon"))
-            + (F.col("_qlat") - F.col("_plat")) * (F.col("_qlat") - F.col("_plat")),
-        )
-        .withColumn("knn_rank", F.row_number().over(win))
-        .filter(F.col("knn_rank") <= k)
-        .select(query_key, "_qlon", "_qlat", "_cx", "_cy", point_key, "dist2", "knn_rank")
-    )
-    settled_parts.append(tail)
+    # the sparse tail: each query left, against every point
+    settled_parts.append(_top_k(remaining.crossJoin(p.drop("_pcell")), k, query_key, point_key))
 
     out = settled_parts[0]
     for part in settled_parts[1:]:
@@ -341,19 +295,13 @@ def knn_inline_arrays(
     columns spell out the same top-k expression: subexpression elimination
     evaluates it once per row, in a generated method of its own, which keeps
     the fused flagship stage under spark.sql.codegen.hugeMethodLimit."""
-    # Sorted ids: the struct order (dist2, id) is then the (dist2, point_id)
-    # tie-break of the other strategies.
-    rows_sorted = sorted(points_rows, key=lambda r: r[0])
-    terms = ", ".join(
-        f"named_struct('dist2', ({lon} - {flit(px)}) * ({lon} - {flit(px)})"
-        f" + ({lat} - {flit(py)}) * ({lat} - {flit(py)}), 'id', {slit(pid)})"
-        for pid, px, py in rows_sorted
-    )
     # slice() is NULL when its length is: that gives a NULL location NULL
     # arrays without wrapping the top-k in a conditional, which would stop
     # subexpression elimination from hoisting it.
     length = f"CASE WHEN {lon} IS NULL OR {lat} IS NULL THEN NULL ELSE {k} END"
-    topk = f"slice(sort_array(array({terms})), 1, {length})"
+    # sorted by id, the literal array (and so the generated code) does not
+    # depend on the order the caller lists the points in
+    topk = _topk_sql(sorted(points_rows, key=lambda r: r[0]), lon, lat, length)
     outs = {f"{out_prefix}_stations": f"{topk}.id", f"{out_prefix}_dist2": f"{topk}.dist2"}
     clash = [c for c in df.columns if c in outs]
     if clash:
@@ -388,22 +336,15 @@ def nn_value_join(
     if isinstance(points.schema[value_col].dataType, (DoubleType, FloatType)):
         keep &= ~F.isnan(value_col)
     points = points.filter(keep)
-    strategy, rows = _pick_strategy(points, (point_key, "lon", "lat", *values))
-    if strategy == "inline":
+    rows = _inline_rows(points, (point_key, "lon", "lat", *values))
+    if rows is not None:
         payload = tuple(
             (c, points.schema[c].dataType.simpleString()) for c in values
         )
         nn = _knn_inline(queries, rows, 1, point_key, payload)
     else:
-        nn = knn_join(
-            queries,
-            points,
-            k=1,
-            res=res,
-            query_key=query_key,
-            point_key=point_key,
-            max_ring=max_ring,
-            strategy=strategy,
-        ).join(points.select(point_key, *values), point_key, "left")
+        nn = _knn_rings(queries, points, 1, res, query_key, point_key, max_ring).join(
+            points.select(point_key, *values), point_key, "left"
+        )
         nn = queries.join(nn, query_key)
     return nn.select(*queries.columns, point_key, *values, "dist2")

@@ -3,8 +3,8 @@ kernels re-expressed as Spark joins.
 
 - `regrid_nearest_join` — scattered→lattice 1-NN transfer, the Spark twin of
   wcofs.interpolate_grid(..., 'nearest') (ref: PyOFS/model/wcofs.py:1791-1827),
-  built on operators/knn.nn_value_join (expanding cell rings, exact
-  (d², src_id) tie-break).
+  built on operators/knn.nn_value_join (inline literals or expanding cell
+  rings, exact (d², src_id) tie-break).
 - `regrid_bilinear_regular` — bilinear interpolation of a REGULAR grid at
   query points (ref: xarray .interp, particle_contour.py:249-298): a
   closed-form equi-join of each query point to its enclosing cell's four

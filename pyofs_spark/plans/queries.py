@@ -195,26 +195,16 @@ _STATIONS_VALUES = stations_mod.stations_values_sql()
     """,
 )
 def geo_knn_stations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN station lookup via the expanding-ring join (north_rule);
-    oracle is an independent brute-force window query."""
+    """Exact kNN station lookup (north_rule); oracle is an independent
+    brute-force window query. The driver-side STATIONS list goes to
+    knn_join as rows, so the stations are folded into the plan with no
+    Spark job to fetch them."""
     from ..functions.stations import STATIONS
     from ..operators.knn import knn_join
 
     q = geodocs(spark, sf_dir).select("doc_id", "lon", "lat")
     return knn_join(
-        q,
-        None,
-        k=_KNN_K,
-        res=6,
-        query_key="doc_id",
-        point_key="station_id",
-        max_ring=6,
-        # stations are dimension-sized by contract: name the inline
-        # strategy up front so planning skips the auto-selector's count job,
-        # and hand the driver-side constant list straight to the plan —
-        # no per-invocation createDataFrame+collect job (round 6, guide §5)
-        strategy="inline",
-        points_rows=STATIONS,
+        q, STATIONS, k=_KNN_K, query_key="doc_id", point_key="station_id"
     ).select("doc_id", "station_id", "dist2", "knn_rank")
 
 

@@ -20,8 +20,13 @@ plus, per workload and end-to-end metric (names, directions and bounds from
 BENCHMARK.json): each side's median and quartiles, the change's wins over
 the pairs (ties count for neither side), the relative change of the
 medians, whether the change is worse than the parent by more than the
-metric's bound, and whether the medians differ by more than the parent's
-interquartile range. The held-out seed is summarised on its own. With
+metric's bound, whether the medians differ by more than the parent's
+interquartile range, and whether the metric is unresolved: the parent's
+IQR/median exceeds the bound, so "no worse than the bound" cannot be told
+from noise, unless every change run beats every parent run. The held-out
+seed is summarised on its own. Per workload and side, `runs` counts the
+runs that failed, timed out or reported incorrect results; they have no
+metrics (or wrong ones), so the medians alone would hide them. With
 --traced, one traced run per side (`--trace 1`) records the per-layer
 metrics. The file is rewritten after every run, so an interrupted
 protocol keeps what it measured.
@@ -107,13 +112,30 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def run_counts(runs: list[dict]) -> dict:
+    """How many of `runs` there are, and how many timed out, failed (no
+    result) or reported incorrect results."""
+    timed_out = sum(r["rc"] == "timeout" for r in runs)
+    return {
+        "total": len(runs),
+        "failed": sum("metrics" not in r for r in runs) - timed_out,
+        "timed_out": timed_out,
+        "incorrect": sum("metrics" in r and not r["correct"] for r in runs),
+    }
+
+
 def summarise(runs: list[dict], end_to_end: list[dict], holdout: set[int]) -> dict:
-    """Per workload and metric: the paired verdict over the development
-    seeds and the held-out seed's medians."""
+    """Per workload: the run counts of each side and, per metric, the
+    paired verdict over the development seeds and the held-out seed's
+    medians."""
     out: dict = {}
     for wl in sorted({r["workload"] for r in runs}):
-        ok = [r for r in runs if r["workload"] == wl and "metrics" in r and r["trace"] == 0]
-        out[wl] = {}
+        untraced = [r for r in runs if r["workload"] == wl and r["trace"] == 0]
+        ok = [r for r in untraced if "metrics" in r]
+        out[wl] = {
+            "runs": {s: run_counts([r for r in untraced if r["side"] == s])
+                     for s in ("parent", "change")}
+        }
         for m in end_to_end:
             name, lower = m["name"], m["better"] == "lower"
             side = {s: {} for s in ("parent", "change")}
@@ -127,8 +149,10 @@ def summarise(runs: list[dict], end_to_end: list[dict], holdout: set[int]) -> di
             p = [side["parent"][k] for k in dev]
             c = [side["change"][k] for k in dev]
             wins = sum((cv < pv) if lower else (cv > pv) for pv, cv in zip(p, c))
+            all_beat = max(c) < min(p) if lower else min(c) > max(p)
             pq, cq = quartiles(p), quartiles(c)
             rel = (cq[1] - pq[1]) / pq[1] if pq[1] else 0.0
+            spread = (pq[2] - pq[0]) / abs(pq[1]) if pq[1] else 0.0
             entry = {
                 "unit": m["unit"],
                 "better": m["better"],
@@ -144,6 +168,8 @@ def summarise(runs: list[dict], end_to_end: list[dict], holdout: set[int]) -> di
                 "median_rel_change": round(rel, 4),
                 "worse_beyond_bound": (rel > m["bound"]) if lower else (-rel > m["bound"]),
                 "medians_differ_by_more_than_parent_iqr": abs(cq[1] - pq[1]) > pq[2] - pq[0],
+                "parent_iqr_over_median": round(spread, 4),
+                "unresolved": spread > m["bound"] and not all_beat,
             }
             for seed in sorted(holdout):
                 hp = [side["parent"][k] for k in keys if k[0] == seed]

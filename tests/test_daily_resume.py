@@ -2,10 +2,10 @@
 two steps of a partition re-runs exactly that partition on re-invocation,
 readers never see the orphan, a rewritten events file invalidates the
 committed partitions, index.json lists only committed partitions, and a
-day without events commits an all-nodata raster. Also the knn_join
-points=None contract, the job budget of one day raster (only the field
-scan and aggregate run on executors), and the size choice of the lattice
-stage (on the driver when it is small, bit-identical either way)."""
+day without events commits an all-nodata raster. Also the job budget of
+one day raster (only the field scan and aggregate run on executors), and
+the size choice of the lattice stage (on the driver when it is small,
+bit-identical either way)."""
 
 from __future__ import annotations
 
@@ -252,15 +252,3 @@ def test_day_without_events_commits_all_nodata(spark, tmp_path):
     assert tif["data"].shape == (N_LAT, N_LON)
     assert (tif["data"] == tif["nodata"]).all()
 
-
-def test_knn_join_points_none_needs_inline_rows(spark):
-    from pyofs_spark.operators.knn import knn_join
-
-    q = spark.createDataFrame([(1, 0.0, 0.0)], "query_id long, lon double, lat double")
-    rows = [(7, 1.0, 1.0), (8, 0.5, 0.5)]
-    for kwargs in ({}, {"strategy": "inline"}, {"strategy": "brute", "points_rows": rows},
-                   {"strategy": "rings", "points_rows": rows}, {"points_rows": rows}):
-        with pytest.raises(ValueError, match="points=None"):
-            knn_join(q, None, k=1, **kwargs)
-    got = knn_join(q, None, k=1, strategy="inline", points_rows=rows).collect()
-    assert [(r.query_id, r.point_id, r.knn_rank) for r in got] == [(1, "8", 1)]

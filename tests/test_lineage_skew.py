@@ -11,7 +11,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from pyofs_spark.lineage import LineageLog, read_output, run_partitioned
+from pyofs_spark.lineage import read_output, run_partitioned
 from pyofs_spark.operators.skew import (
     cell_histogram,
     explode_salts_for_join,
@@ -57,9 +57,8 @@ def test_resume_equals_single_run(spark):
         r3 = run_partitioned(spark, d2, keys, _build)
         assert r3["ran"] == [] and r3["skipped"] == keys
         # metrics present per partition
-        log = LineageLog(d2)
-        assert set(log.completed()) == set(keys)
-        assert all(v["n_rows"] == 50 for v in log.completed().values())
+        assert set(r3["lineage"]) == set(keys)
+        assert all(v["n_rows"] == 50 for v in r3["lineage"].values())
     finally:
         shutil.rmtree(d1), shutil.rmtree(d2)
 

@@ -1,4 +1,4 @@
-"""Operator-level Spark tests: kNN ring path vs brute force, PIP SQL vs
+"""Operator-level Spark tests: kNN paths vs brute force, PIP SQL vs
 numpy kernel, NN regrid vs golden kernel, byte identity through the full
 pipeline (SURVEY §5 items 1, 2, 4)."""
 
@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from pyofs_spark.functions import kernels as K
 from pyofs_spark.functions import polygons as P
+from pyofs_spark.operators import knn
 from pyofs_spark.operators.knn import knn_join, nn_value_join
 from pyofs_spark.operators.pip import pip_fixed, pip_join_broadcast
 from pyofs_spark.plans.pipeline import geocode_pages, station_df, tile_assignment
@@ -28,9 +29,10 @@ def _knn_brute_py(qs, ps, k):
     return out
 
 
-def test_knn_rings_exact_vs_brute(spark):
-    """Force the ring strategy and check exactness against pure-python brute
+def test_knn_rings_exact_vs_brute(spark, monkeypatch):
+    """Force the ring path and check exactness against pure-python brute
     force, with a clustered + sparse points side (ring expansion + tail)."""
+    monkeypatch.setattr(knn, "INLINE_POINTS_THRESHOLD", 0)
     rng = np.random.default_rng(7)
     n_q, n_p = 400, 300
     qs = [(i, float(x), float(y)) for i, (x, y) in enumerate(
@@ -42,7 +44,7 @@ def test_knn_rings_exact_vs_brute(spark):
 
     qdf = spark.createDataFrame(qs, "query_id long, lon double, lat double")
     pdf = spark.createDataFrame(ps, "point_id string, lon double, lat double")
-    got = knn_join(qdf, pdf, k=3, res=6, max_ring=3, strategy="rings").collect()
+    got = knn_join(qdf, pdf, k=3, res=6, max_ring=3).collect()
     exp = _knn_brute_py(qs, ps, 3)
     got_by_q = {}
     for r in got:
@@ -53,12 +55,23 @@ def test_knn_rings_exact_vs_brute(spark):
         assert [(pid, d2) for _, pid, d2 in rows] == exp[qid], f"query {qid}"
 
 
-@pytest.mark.parametrize("source", ["pandas", "arrow"])
-def test_nn_regrid_matches_golden_kernel(spark, source):
+@pytest.mark.parametrize(
+    "source, path",
+    [
+        pytest.param("pandas", "inline", id="pandas"),
+        pytest.param("arrow", "inline", id="arrow"),
+        pytest.param("pandas", "rings", id="pandas-rings"),
+        pytest.param("arrow", "rings", id="arrow-rings"),
+    ],
+)
+def test_nn_regrid_matches_golden_kernel(spark, monkeypatch, source, path):
     """nn_value_join == kernels.regrid_nearest (the reference-exact
-    interpolate_grid 'nearest' twin, wcofs.py:1791-1827). A pandas-built
-    source turns NaN into NULL; an Arrow-built one keeps the NaN values,
-    which must be dropped as well."""
+    interpolate_grid 'nearest' twin, wcofs.py:1791-1827) on both paths; a
+    `carry` column comes from the same neighbour as the value. A
+    pandas-built source turns NaN into NULL; an Arrow-built one keeps the
+    NaN values, which must be dropped as well."""
+    if path == "rings":
+        monkeypatch.setattr(knn, "INLINE_POINTS_THRESHOLD", 0)
     rng = np.random.default_rng(3)
     n_src = 200
     slon = rng.uniform(-125, -115, n_src)
@@ -71,22 +84,51 @@ def test_nn_regrid_matches_golden_kernel(spark, source):
 
     golden = K.regrid_nearest(slon, slat, sval, qlon, qlat)
 
-    cols = {"point_id": np.arange(n_src), "lon": slon, "lat": slat, "val": sval}
+    ids = np.arange(n_src)
+    cols = {"point_id": ids, "lon": slon, "lat": slat, "val": sval, "tag": 7 * ids + 3}
     src = spark.createDataFrame(pd.DataFrame(cols) if source == "pandas" else pa.table(cols))
     q = spark.createDataFrame(
         pd.DataFrame({"query_id": np.arange(len(qlon)), "lon": qlon, "lat": qlat})
     )
-    got = nn_value_join(q, src, "val", res=8, max_ring=3).collect()
+    got = nn_value_join(q, src, "val", res=8, max_ring=3, carry=("tag",)).collect()
     got_map = {r.query_id: r.val for r in got}
     assert len(got_map) == len(qlon)
     for i in range(len(qlon)):
         assert got_map[i] == golden[i], f"query {i}: {got_map[i]} != {golden[i]}"
+    for r in got:
+        assert (r.val, r.tag) == (sval[int(r.point_id)], 7 * int(r.point_id) + 3)
+
+
+def test_knn_tie_break_same_on_both_paths(spark, monkeypatch):
+    """Points that share coordinates tie on dist2. A list of rows, an
+    inline-sized DataFrame and the ring path all break the ties by the
+    string point id, as the brute-force reference does ("p100" < "p12")."""
+    xy = [(-122.0, 37.0), (-121.5, 37.0), (-122.0, 37.5), (-121.5, 37.5)]
+    ps = [(f"p{n}", *xy[n % 4]) for n in (1, 2, 3, 4, 5, 9, 10, 12, 21, 100)]
+    qs = [(i, x, y) for i, (x, y) in enumerate(
+        [*xy, (-121.75, 37.25), (-121.75, 37.0), (-122.0, 37.25), (-125.0, 40.0)]
+    )]
+    qdf = spark.createDataFrame(qs, "query_id long, lon double, lat double")
+    pdf = spark.createDataFrame(ps, "point_id string, lon double, lat double")
+
+    def rows(points):
+        return sorted(tuple(r) for r in knn_join(qdf, points, k=5).collect())
+
+    want = sorted(
+        (qid, pid, d2, rank)
+        for qid, best in _knn_brute_py(qs, ps, 5).items()
+        for rank, (pid, d2) in enumerate(best, 1)
+    )
+    assert rows(ps) == rows(pdf) == want
+    monkeypatch.setattr(knn, "INLINE_POINTS_THRESHOLD", 0)
+    assert rows(pdf) == want
 
 
 def test_empty_point_side(spark):
     """No usable point (here the only one has a NaN value): nn_value_join
     keeps every query with NULL neighbour columns, as the golden kernel
-    gives NaN everywhere, and an inline knn_join ranks nothing."""
+    gives NaN everywhere, and knn_join ranks nothing. Point rows given as
+    a list come back with string ids."""
     q = spark.createDataFrame(
         [(1, 0.0, 0.0), (2, 1.0, 1.0)], "query_id long, lon double, lat double"
     )
@@ -100,8 +142,10 @@ def test_empty_point_side(spark):
     assert sorted(tuple(r) for r in got) == [
         (1, 0.0, 0.0, None, None, None), (2, 1.0, 1.0, None, None, None)
     ]
-    assert knn_join(q, None, k=2, strategy="inline", points_rows=[]).collect() == []
+    assert knn_join(q, [], k=2).collect() == []
     assert knn_join(q, p.filter("false"), k=1).collect() == []
+    got = knn_join(q, [(7, 1.0, 1.0), (8, 0.5, 0.5)], k=1).collect()
+    assert sorted(tuple(r) for r in got) == [(1, "8", 0.5, 1), (2, "7", 0.0, 1)]
 
 
 def test_pip_sql_matches_numpy(spark):
