@@ -63,7 +63,7 @@ def _sql_value(v, dtype: str) -> str:
     return f"CAST({lit} AS {dtype})"
 
 
-def _topk_sql(rows, lon: str, lat: str, length: str, with_index: bool = False) -> str:
+def _topk_sql(rows: list, lon: str, lat: str, length: str, with_index: bool = False) -> str:
     """Top-k over a literal point list as ONE SQL expression:
     slice(sort_array(array(named_struct('dist2', d², 'id', '<point id>'), ...)), 1, length).
 
