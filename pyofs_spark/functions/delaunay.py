@@ -3,10 +3,12 @@ the kernel behind scattered-data linear regrid (SURVEY J2; semantics of
 scipy.interpolate.griddata(method='linear') as invoked by
 main/validation/data_assimilation_validation.py:149-207).
 
-Bowyer-Watson incremental triangulation (numpy per-step vectorization;
-tiles are ≤ a few thousand source points by construction, so the python
-insertion loop is not a hot path — the distributed operator shards work
-per tile, operators/regrid.py:regrid_linear_join).
+Bowyer-Watson incremental triangulation (numpy per-step vectorization).
+The distributed operator, operators/regrid.py:regrid_linear_join, shards
+work per tile of at most a few thousand source points, so the python
+insertion loop is not a hot path; only its global gather, which runs when
+some query is still uncertified after the tiled passes, triangulates every
+source.
 
 Linear-interp property used for golden tests: barycentric interpolation on
 ANY triangulation reproduces an affine field exactly, and outputs are
@@ -93,11 +95,12 @@ def linear_interp_scattered(
 
     With return_certificates=True additionally returns (cc_x, cc_y, cc_r):
     the circumcircle of each query's containing triangle (inf radius when
-    no triangle contains the query). Used by the adaptive tiled operator —
-    by the Delaunay empty-circle property, a local triangle whose
-    circumcircle lies inside the region whose points were all present
-    locally is a triangle of the GLOBAL Delaunay triangulation, so the
-    interpolated value is certified globally correct."""
+    no triangle contains the query). Used by the tiled operator
+    (operators/regrid.py:regrid_linear_join): by the Delaunay empty-circle
+    property, a local triangle whose circumcircle lies inside the region
+    whose points were all present locally is a triangle of the GLOBAL
+    Delaunay triangulation, so the interpolated value is certified
+    globally correct."""
     slon = np.asarray(slon, np.float64).ravel()
     slat = np.asarray(slat, np.float64).ravel()
     sval = np.asarray(sval, np.float64).ravel()

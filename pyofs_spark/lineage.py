@@ -95,21 +95,18 @@ class Manifest:
         with open(self.current_path) as fh:
             snap = json.load(fh)
         if "manifests" not in snap:
-            # pre-round-3 format: the snapshot carried the full partition
-            # map inline. Surface it as legacy state; the next commit
-            # migrates it into bucket manifests (one-time O(P)).
-            snap = {
-                "version": snap["version"],
-                "manifests": {},
-                "_legacy_partitions": snap.get("partitions", {}),
-            }
+            # without the manifest list, resolve() would read an empty map
+            raise ValueError(
+                f"{self.current_path} is not a manifest-list snapshot "
+                "(no 'manifests' key)"
+            )
         return snap
 
     def resolve(self, snap: dict) -> dict[str, dict]:
         """Full partition map of a snapshot (reads every listed manifest —
         the read path is O(P), as any full-catalog scan must be)."""
-        parts: dict[str, dict] = dict(snap.get("_legacy_partitions", {}))
-        for name in snap.get("manifests", {}).values():
+        parts: dict[str, dict] = {}
+        for name in snap["manifests"].values():
             parts.update(self._read(name))
         return parts
 
@@ -157,20 +154,6 @@ class Manifest:
         mbytes = 0
         written: list[str] = []  # this attempt's manifest files, for
         # unlink-on-CAS-loss (ADVICE r4: losing racers orphaned them)
-        legacy = snap.get("_legacy_partitions")
-        if legacy:
-            # one-time migration of a pre-round-3 inline snapshot: spread
-            # the legacy map across bucket manifests now, so this and all
-            # later commits run at the O(P/buckets) cost
-            by_bucket: dict[int, dict] = {}
-            for k, e in legacy.items():
-                by_bucket.setdefault(self._bucket(k), {})[k] = e
-            for bb, bmap in by_bucket.items():
-                mn = f"m{version}_b{bb}_{uniq}.json"
-                with open(os.path.join(self.dir, mn), "w") as fh:
-                    mbytes += fh.write(json.dumps(bmap))
-                manifests[str(bb)] = mn
-                written.append(mn)
         b = self._bucket(part_key)
         bucket_map = (
             self._read(manifests[str(b)]) if str(b) in manifests else {}
@@ -333,14 +316,10 @@ def run_partitioned(
 
 def read_output(spark: SparkSession, out_root: str) -> DataFrame:
     """Read through the current manifest snapshot: only committed
-    partitions are visible (orphan directories from a crash are not).
-    Falls back to the directory glob for pre-manifest outputs."""
-    snap = Manifest(out_root).current()
-    if snap["partitions"]:
-        paths = [
-            os.path.join(out_root, e["path"]) for e in snap["partitions"].values()
-        ]
-        return spark.read.option("basePath", out_root).parquet(*paths)
-    return spark.read.option("basePath", out_root).parquet(
-        os.path.join(out_root, "part_key=*")
-    )
+    partitions are visible (orphan directories from a crash are not). A root
+    with no committed partition raises FileNotFoundError."""
+    parts = Manifest(out_root).current()["partitions"]
+    if not parts:
+        raise FileNotFoundError(f"no committed partition under {out_root}")
+    paths = [os.path.join(out_root, e["path"]) for e in parts.values()]
+    return spark.read.option("basePath", out_root).parquet(*paths)

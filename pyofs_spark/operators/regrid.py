@@ -9,6 +9,12 @@ kernels re-expressed as Spark joins.
   query points (ref: xarray .interp, particle_contour.py:249-298): a
   closed-form equi-join of each query point to its enclosing cell's four
   corners (floor((x-x0)/dx)), entirely JVM-side.
+- `regrid_linear_join` — scattered→points LINEAR interpolation, the Spark
+  twin of griddata(method='linear') (ref: data_assimilation_validation.py:
+  149-207): per-tile Delaunay + barycentric kernel (functions/delaunay.py)
+  in applyInPandas, each value certified by its triangle's circumcircle,
+  with doubling halos and one global gather for the residue, so the result
+  equals the global triangulation.
 - `asof_time_align` — nearest/backward time alignment of a field stack to
   query times (ref: rtofs.py:263-264 .sel(time, method='nearest');
   particle_contour.py:275-281 bfill/ffill) via the union-marker window
@@ -20,6 +26,8 @@ kernels re-expressed as Spark joins.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -145,216 +153,105 @@ def regrid_linear_join(
     targets: DataFrame,
     value_col: str = "value",
     tile_res: int = 4,
-    halo_deg: float | None = None,
     source_key: str = "point_id",
     target_key: str = "query_id",
 ) -> DataFrame:
-    """Scattered-data LINEAR regrid (SURVEY J2): per-tile Delaunay +
-    barycentric interpolation via applyInPandas.
-
-    Sharding: targets are bucketed into quad cells at `tile_res`; sources
-    are replicated into every tile whose bbox (+halo) they fall in, so each
-    tile triangulates locally. With halo >= the local source spacing the
-    tile-local triangulation matches the global one away from data voids
-    (documented approximation; exact on affine fields regardless — the
-    golden property test). Returns (target_key, value_col)."""
-    from ..functions import cells as C
-    from ..functions.delaunay import linear_interp_scattered
-
-    size = C.cell_size_deg(tile_res)
-    if halo_deg is None:
-        halo_deg = size / 2
-    n_halo = max(1, int(np.ceil(halo_deg / size)))
-
-    tgt = targets.withColumn("_tile", F.expr(C.cell_id_sql("lon", "lat", tile_res)))
-    # replicate sources into neighbor tiles within the halo ring
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in C.disk_offsets(n_halo)
-        ]
-    )
-    nx = C.nx(tile_res)
-    src = (
-        sources.filter(F.col(value_col).isNotNull())
-        .withColumn("_cx", F.expr(C.cell_x_sql("lon", tile_res)))
-        .withColumn("_cy", F.expr(C.cell_y_sql("lat", tile_res)))
-        .withColumn("_o", F.explode(offsets))
-        .select(
-            source_key,
-            "lon",
-            "lat",
-            F.col(value_col).alias("_v"),
-            (
-                F.least(
-                    F.lit(C.ny(tile_res) - 1),
-                    F.greatest(F.lit(0), F.col("_cy") + F.col("_o.dy")),
-                )
-                * nx
-                + F.pmod(F.col("_cx") + F.col("_o.dx") + nx, F.lit(nx))
-            ).alias("_tile"),
-        )
-    )
-    both = tgt.select(
-        "_tile",
-        F.lit(None).cast("double").alias("_v"),
-        F.col(target_key).cast("long").alias("_qid"),
-        "lon",
-        "lat",
-        F.lit(True).alias("_is_q"),
-    ).unionByName(
-        src.select(
-            "_tile",
-            "_v",
-            F.lit(None).cast("long").alias("_qid"),
-            "lon",
-            "lat",
-            F.lit(False).alias("_is_q"),
-        )
-    )
-
-    def _interp(pdf: pd.DataFrame) -> pd.DataFrame:
-        qs = pdf[pdf["_is_q"]]
-        ss = pdf[~pdf["_is_q"]]
-        if len(qs) == 0:
-            return pd.DataFrame({target_key: [], value_col: []})
-        vals = linear_interp_scattered(
-            ss["lon"].to_numpy(),
-            ss["lat"].to_numpy(),
-            ss["_v"].to_numpy(),
-            qs["lon"].to_numpy(),
-            qs["lat"].to_numpy(),
-        )
-        return pd.DataFrame({target_key: qs["_qid"].to_numpy(), value_col: vals})
-
-    return both.groupBy("_tile").applyInPandas(
-        _interp, f"{target_key} long, {value_col} double"
-    )
-
-
-def regrid_linear_adaptive(
-    spark: SparkSession,
-    sources: DataFrame,
-    targets: DataFrame,
-    value_col: str = "value",
-    tile_res: int = 4,
-    source_key: str = "point_id",
-    target_key: str = "query_id",
-    max_passes: int = 3,
-) -> DataFrame:
-    """Scattered LINEAR regrid that is exact near DATA VOIDS (round 3 —
-    closes the known tile-local-vs-global divergence gap).
+    """Scattered-data LINEAR regrid (SURVEY J2): Delaunay + barycentric
+    interpolation per tile via applyInPandas, equal to one global
+    triangulation (griddata('linear'), data_assimilation_validation.py:
+    149-207). Returns (target_key long, value_col double); `source_key`
+    is not carried.
 
     Certified adaptive-halo protocol:
 
-    1. Run the tiled pass with halo = n rings, asking the kernel for each
-       query's containing-triangle CIRCUMCIRCLE. By the Delaunay
-       empty-circle property, if that circle lies entirely inside the
-       region whose points were all replicated into the tile (tile bbox +
-       halo), then no point anywhere in the global set can invalidate the
-       triangle — it IS a global Delaunay triangle and the value is
-       certified globally correct.
+    1. Targets are bucketed into quad tiles at `tile_res`; sources are
+       replicated into every tile within n rings of their own, starting
+       at n = 1. The kernel returns each query's value and the
+       CIRCUMCIRCLE of its containing triangle. By the Delaunay
+       empty-circle property, if that circle lies inside the region whose
+       points were all replicated into the tile (tile bbox + n rings), no
+       point anywhere can invalidate the triangle: it IS a global Delaunay
+       triangle, and the value is certified.
     2. Uncertified queries (circle pokes outside the halo region, or no
-       containing triangle locally) retry with the halo DOUBLED — only
-       tiles that still have pending queries receive source replicas
-       (semi-join), so later passes touch a shrinking fraction of data.
-    3. The residue after max_passes (typically queries outside/near the
-       global hull or across extreme voids) falls back to ONE global
-       gather group — the correctness backstop; by then it is tiny.
+       containing triangle locally) retry with n doubled. Only tiles that
+       still have pending queries receive source replicas (semi-join).
+    3. After three tiled passes, the residue (typically queries outside or
+       near the global hull, or across wide voids) goes to ONE global
+       gather group of all sources, whose results are all accepted.
 
-    Result matches the single-shot global triangulation everywhere (up to
-    Delaunay diagonal ambiguity on exactly-cocircular quads, where both
-    answers are valid triangulations — same caveat as scipy/qhull).
-    Ref analog: data_assimilation_validation.py:149-207 (global griddata).
+    The loop stops as soon as no query is left, so a fully certified first
+    pass runs nothing more. The result matches the global triangulation
+    everywhere, up to the diagonal ambiguity of exactly cocircular quads,
+    where both triangulations are valid (the scipy/qhull caveat).
     """
     from ..functions import cells as C
     from ..functions.delaunay import linear_interp_scattered
 
     size = C.cell_size_deg(tile_res)
-    nx_t = C.nx(tile_res)
-    ny_t = C.ny(tile_res)
+    nx_t, ny_t = C.nx(tile_res), C.ny(tile_res)
     src0 = sources.filter(F.col(value_col).isNotNull()).select(
         "lon", "lat", F.col(value_col).alias("_v")
     )
     remaining = targets.select(
         F.col(target_key).cast("long").alias("_qid"), "lon", "lat"
     )
-    done: list[DataFrame] = []
-    n_halo = 1
-    for _p in range(max_passes):
-        halo_deg = n_halo * size
-        tgt = remaining.withColumn(
-            "_tile", F.expr(C.cell_id_sql("lon", "lat", tile_res))
-        )
-        live_tiles = tgt.select("_tile").distinct()
-        offsets = F.array(
-            *[
+
+    def _frame(queries: DataFrame, n_halo: int | None) -> DataFrame:
+        """Union-marker frame of the queries and their sources, grouped by
+        `_g`: the tile, or one global group when n_halo is None."""
+        if n_halo is None:
+            q = queries.withColumn("_g", F.lit(0))
+            s = src0.withColumn("_g", F.lit(0))
+        else:
+            q = queries.withColumn("_g", F.expr(C.cell_id_sql("lon", "lat", tile_res)))
+            offsets = F.array(*[
                 F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
                 for dx, dy in C.disk_offsets(n_halo)
-            ]
-        )
-        src = (
-            src0.withColumn("_cx", F.expr(C.cell_x_sql("lon", tile_res)))
-            .withColumn("_cy", F.expr(C.cell_y_sql("lat", tile_res)))
-            .withColumn("_o", F.explode(offsets))
-            .select(
-                "lon",
-                "lat",
-                "_v",
-                (
-                    F.least(
-                        F.lit(ny_t - 1),
-                        F.greatest(F.lit(0), F.col("_cy") + F.col("_o.dy")),
-                    )
+            ])
+            s = (
+                src0.withColumn("_cx", F.expr(C.cell_x_sql("lon", tile_res)))
+                .withColumn("_cy", F.expr(C.cell_y_sql("lat", tile_res)))
+                .withColumn("_o", F.explode(offsets))
+                .withColumn(
+                    "_g",
+                    F.least(F.lit(ny_t - 1), F.greatest(F.lit(0), F.col("_cy") + F.col("_o.dy")))
                     * nx_t
-                    + F.pmod(F.col("_cx") + F.col("_o.dx") + nx_t, F.lit(nx_t))
-                ).alias("_tile"),
-            )
-            # replicate only into tiles that still have pending queries
-            .join(live_tiles, "_tile", "left_semi")
-        )
-        both = tgt.select(
-            "_tile",
-            F.lit(None).cast("double").alias("_v"),
-            F.col("_qid"),
-            "lon",
-            "lat",
-            F.lit(True).alias("_is_q"),
-        ).unionByName(
-            src.select(
-                "_tile",
-                "_v",
-                F.lit(None).cast("long").alias("_qid"),
-                "lon",
-                "lat",
-                F.lit(False).alias("_is_q"),
-            )
-        )
-
-        def _make_interp(_halo: float):
-            def _interp(key, pdf):  # (key, data) grouped-map form
-                tile = int(key[0])
-                tx, ty = tile % nx_t, tile // nx_t
-                x0, y0 = -180.0 + tx * size, -90.0 + ty * size
-                lo_x, hi_x = x0 - _halo, x0 + size + _halo
-                lo_y, hi_y = y0 - _halo, y0 + size + _halo
-                qs = pdf[pdf["_is_q"]]
-                ss = pdf[~pdf["_is_q"]]
-                if len(qs) == 0:
-                    return pd.DataFrame({"_qid": [], "_val": [], "_ok": []})
-                vals, ccx, ccy, ccr = linear_interp_scattered(
-                    ss["lon"].to_numpy(),
-                    ss["lat"].to_numpy(),
-                    ss["_v"].to_numpy(),
-                    qs["lon"].to_numpy(),
-                    qs["lat"].to_numpy(),
-                    return_certificates=True,
+                    + F.pmod(F.col("_cx") + F.col("_o.dx") + nx_t, F.lit(nx_t)),
                 )
-                # lon coordinates only exist in [-180, 180]: extent past
-                # either edge is vacuously covered (same shortcut as lat;
-                # interpolation is PLANAR in lon, replication's pmod wrap
-                # only parks far points in the tile, it does not make the
-                # space cylindrical)
+                .join(q.select("_g").distinct(), "_g", "left_semi")
+            )
+        return q.select(
+            "_g", "_qid", "lon", "lat",
+            F.lit(None).cast("double").alias("_v"), F.lit(True).alias("_is_q"),
+        ).unionByName(s.select(
+            # a non-NULL _qid keeps the column int64 in pandas: with NULLs it
+            # would become float64 and round ids above 2**53
+            "_g", F.lit(0).cast("long").alias("_qid"), "lon", "lat",
+            "_v", F.lit(False).alias("_is_q"),
+        ))
+
+    def _kernel(n_halo: int | None):
+        def _interp(key, pdf):  # (key, data) grouped-map form
+            qs = pdf[pdf["_is_q"]]
+            ss = pdf[~pdf["_is_q"]]
+            vals, ccx, ccy, ccr = linear_interp_scattered(
+                ss["lon"].to_numpy(), ss["lat"].to_numpy(), ss["_v"].to_numpy(),
+                qs["lon"].to_numpy(), qs["lat"].to_numpy(),
+                return_certificates=True,
+            )
+            if n_halo is None:
+                ok = np.ones(len(qs), dtype=bool)
+            else:
+                halo = n_halo * size
+                tile = int(key[0])
+                x0 = -180.0 + (tile % nx_t) * size
+                y0 = -90.0 + (tile // nx_t) * size
+                lo_x, hi_x = x0 - halo, x0 + size + halo
+                lo_y, hi_y = y0 - halo, y0 + size + halo
+                # coordinates only exist in [-180, 180] x [-90, 90]: extent
+                # past an edge is vacuously covered. Interpolation is PLANAR
+                # in lon; the pmod wrap of the replication only parks far
+                # points in the tile, it does not make the space cylindrical.
                 x_ok = ((ccx - ccr >= lo_x) | (lo_x <= -180.0)) & (
                     (ccx + ccr <= hi_x) | (hi_x >= 180.0)
                 )
@@ -362,67 +259,25 @@ def regrid_linear_adaptive(
                     (ccy + ccr <= hi_y) | (hi_y >= 90.0)
                 )
                 ok = (~np.isnan(vals)) & x_ok & y_ok
-                return pd.DataFrame(
-                    {"_qid": qs["_qid"].to_numpy(), "_val": vals, "_ok": ok}
-                )
+            return pd.DataFrame({"_qid": qs["_qid"].to_numpy(), "_val": vals, "_ok": ok})
 
-            return _interp
+        return _interp
 
+    done: list[DataFrame] = []
+    for n_halo in (1, 2, 4, None):
         res = (
-            both.groupBy("_tile")
-            .applyInPandas(
-                _make_interp(halo_deg), "_qid long, _val double, _ok boolean"
-            )
+            _frame(remaining, n_halo)
+            .groupBy("_g")
+            .applyInPandas(_kernel(n_halo), "_qid long, _val double, _ok boolean")
             .transform(_materialize)
         )
-        done.append(res.filter(F.col("_ok")).select("_qid", "_val"))
+        done.append(res.filter(F.col("_ok")))
         remaining = remaining.join(
             res.filter(~F.col("_ok")).select("_qid"), "_qid", "left_semi"
         )
-        n_halo *= 2
-
-    # global backstop for the residue: one gather group, plain interp.
-    # The gather must see ALL sources (the certifying triangle of a query
-    # in a void can be arbitrarily far away), so it cannot be semi-joined
-    # down — instead SHORT-CIRCUIT it entirely when no uncertified queries
-    # remain (the common case): remaining is a semi-join of the (tiny,
-    # checkpointed) per-pass residue, so isEmpty() here is a cheap job,
-    # vs. an unconditional full-dataset single-task shuffle at 100 TB.
-    if remaining.isEmpty():
-        out = done[0]
-        for d in done[1:]:
-            out = out.unionByName(d)
-        return out.select(
-            F.col("_qid").alias(target_key), F.col("_val").alias(value_col)
-        )
-
-    def _global(pdf: pd.DataFrame) -> pd.DataFrame:
-        qs = pdf[pdf["_is_q"]]
-        ss = pdf[~pdf["_is_q"]]
-        if len(qs) == 0:
-            return pd.DataFrame({"_qid": [], "_val": []})
-        vals = linear_interp_scattered(
-            ss["lon"].to_numpy(), ss["lat"].to_numpy(), ss["_v"].to_numpy(),
-            qs["lon"].to_numpy(), qs["lat"].to_numpy(),
-        )
-        return pd.DataFrame({"_qid": qs["_qid"].to_numpy(), "_val": vals})
-
-    gboth = remaining.select(
-        F.lit(0).alias("_g"), F.col("_qid"), "lon", "lat",
-        F.lit(None).cast("double").alias("_v"), F.lit(True).alias("_is_q"),
-    ).unionByName(
-        src0.select(
-            F.lit(0).alias("_g"), F.lit(None).cast("long").alias("_qid"),
-            "lon", "lat", "_v", F.lit(False).alias("_is_q"),
-        )
-    )
-    done.append(
-        gboth.groupBy("_g").applyInPandas(_global, "_qid long, _val double")
-    )
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
-    return out.select(
+        if remaining.isEmpty():
+            break
+    return functools.reduce(DataFrame.unionByName, done).select(
         F.col("_qid").alias(target_key), F.col("_val").alias(value_col)
     )
 

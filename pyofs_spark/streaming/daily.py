@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import cells, geocode
+from ..plans.pipeline import assign_cells, geocode_pages
 
 
 def daily_tile_counts_stream(
@@ -33,12 +33,10 @@ def daily_tile_counts_stream(
     """Streaming: pages → geocode → cell → per (1-day window, cell) counts.
 
     Late rows beyond the watermark are dropped exactly like the reference
-    ignores granules older than its NRT horizon."""
-    g = (
-        pages_stream.withColumn("lon", F.expr(geocode.geocode_id_lon_sql(key_col)))
-        .withColumn("lat", F.expr(geocode.geocode_id_lat_sql(key_col)))
-        .withColumn("cell_id", F.expr(cells.cell_id_sql("lon", "lat", res)))
-    )
+    ignores granules older than its NRT horizon. Geocode and cell follow
+    the batch pipeline (plans.pipeline): a NULL key counts under a NULL
+    cell_id, and a string key (url) is hashed first."""
+    g = assign_cells(geocode_pages(pages_stream, key_col), res)
     return (
         g.withWatermark("warc_ts", watermark_delay)
         .groupBy(F.window("warc_ts", "1 day").alias("day_window"), F.col("cell_id"))

@@ -143,12 +143,14 @@ def test_skew_histogram_and_salting(spark):
 
 
 def test_streaming_daily_counts(spark):
-    """Structured-Streaming daily micro-batch == the equivalent batch agg."""
+    """Structured-Streaming daily micro-batch == the equivalent batch agg;
+    a page with a NULL key counts under a NULL cell_id, not cell 0."""
     import tempfile as tf
 
     from pyofs_spark.streaming.daily import daily_tile_counts_stream
 
     pages = synth_pages(spark, 2000, 4).select("page_id", "warc_ts")
+    pages = pages.unionByName(pages.limit(1).withColumn("page_id", F.lit(None).cast("long")))
     src_dir = tf.mkdtemp()
     try:
         pages.write.mode("overwrite").parquet(src_dir)
@@ -171,6 +173,9 @@ def test_streaming_daily_counts(spark):
         batch = daily_tile_counts_stream(spark.read.parquet(src_dir), res=6)
         expect = {(r.day_start, r.cell_id): r.n_pages for r in batch.collect()}
         assert got == expect and len(got) > 100
+        for counts in (got, expect):
+            assert sorted(n for (_, cell), n in counts.items() if cell is None) == [1]
+            assert all(cell != 0 for _, cell in counts)
     finally:
         shutil.rmtree(src_dir)
 
@@ -318,9 +323,10 @@ def test_manifest_expire_snapshots():
         shutil.rmtree(d)
 
 
-def test_manifest_reads_legacy_inline_format():
-    """A pre-round-3 current.json (inline partition map) must stay
-    readable, and the next commit migrates it into bucket manifests."""
+def test_manifest_rejects_legacy_inline_format():
+    """A current.json without the manifest list (the inline partition map
+    of old outputs) raises on read and on commit instead of resolving to
+    an empty snapshot."""
     import json as _json
 
     from pyofs_spark.lineage import Manifest
@@ -334,20 +340,52 @@ def test_manifest_reads_legacy_inline_format():
             "parent_version": 1,
             "partitions": {
                 "a": {"input_fingerprint": "a", "n_rows": 10, "path": "part_key=a"},
-                "b": {"input_fingerprint": "b", "n_rows": 20, "path": "part_key=b"},
             },
         }
         with open(os.path.join(mdir, "current.json"), "w") as fh:
             _json.dump(legacy, fh)
         m = Manifest(d)
-        cur = m.current()
-        assert cur["version"] == 2 and set(cur["partitions"]) == {"a", "b"}
-        m.commit("c", {"input_fingerprint": "c", "n_rows": 5, "path": "part_key=c"})
-        cur = m.current()
-        assert cur["version"] == 3 and set(cur["partitions"]) == {"a", "b", "c"}
-        assert cur["partitions"]["b"]["n_rows"] == 20
-        # migrated: the new snapshot is manifest-list form
-        assert "manifests" in m.current_snapshot()
-        assert "_legacy_partitions" not in m.current_snapshot()
+        with pytest.raises(ValueError, match="manifests"):
+            m.current()
+        with pytest.raises(ValueError, match="manifests"):
+            m.commit("c", {"input_fingerprint": "c", "n_rows": 5, "path": "part_key=c"})
+        assert sorted(os.listdir(mdir)) == ["current.json"]
     finally:
         shutil.rmtree(d)
+
+
+def test_read_output_hides_first_uncommitted_partition(spark, monkeypatch):
+    """A crash in the very first commit leaves data on disk and a manifest
+    with no partition: read_output raises instead of globbing the
+    uncommitted rows, and a resume equals a clean run."""
+    from pyofs_spark.lineage import Manifest
+
+    table = pa.table({"query_id": pa.array([0, 1, 2], pa.int64())})
+    keys = ["k1", "k2"]
+    real_commit = Manifest.commit
+
+    def crash(self, part_key, entry, max_retries=0):
+        raise RuntimeError(f"crash committing {part_key}")
+
+    d, clean = tempfile.mkdtemp(), tempfile.mkdtemp()
+    try:
+        monkeypatch.setattr(Manifest, "commit", crash)
+        with pytest.raises(RuntimeError, match="k1"):
+            run_partitioned(spark, d, keys, lambda s, k: table)
+        monkeypatch.setattr(Manifest, "commit", real_commit)
+        assert os.listdir(os.path.join(d, "part_key=k1")) == ["part-00000.parquet"]
+        assert Manifest(d).current() == {"version": 0, "partitions": {}}
+        with pytest.raises(FileNotFoundError):
+            read_output(spark, d)
+        with pytest.raises(FileNotFoundError):
+            read_output(spark, clean)
+
+        assert run_partitioned(spark, d, keys, lambda s, k: table)["ran"] == keys
+        run_partitioned(spark, clean, keys, lambda s, k: table)
+
+        def rows(root):
+            return sorted(tuple(r) for r in read_output(spark, root).collect())
+
+        assert rows(d) == rows(clean) and len(rows(d)) == 6
+    finally:
+        shutil.rmtree(d), shutil.rmtree(clean)

@@ -80,28 +80,46 @@ def test_distributed_linear_regrid_matches_kernel(spark):
         assert got[i] is not None and abs(got[i] - expect[i]) < 1e-8, i
 
 
+def test_linear_regrid_keeps_64bit_target_ids(spark):
+    """Target ids above 2**53 come back exactly (no float64 round trip)."""
+    rng = np.random.default_rng(24)
+    sx = rng.uniform(0, 10, 100)
+    sy = rng.uniform(0, 10, 100)
+    src = spark.createDataFrame(
+        pd.DataFrame({"point_id": np.arange(100), "lon": sx, "lat": sy, "value": sx + sy})
+    )
+    ids = [2**53 + 1, 2**62 + 3]
+    tgt = spark.createDataFrame(
+        pd.DataFrame({"query_id": np.array(ids, np.int64), "lon": [5.0, 5.5], "lat": [5.0, 5.5]})
+    )
+    got = {r.query_id: r.value for r in regrid_linear_join(spark, src, tgt).collect()}
+    assert sorted(got) == ids
+    assert abs(got[ids[0]] - 10.0) < 1e-9 and abs(got[ids[1]] - 11.0) < 1e-9
+
+
 def test_adaptive_regrid_exact_across_void(spark):
-    """Sparse-void fixture (round 3, closes COVERAGE known gap 2): two
-    clusters separated by a ~10-degree void, queries spanning the void.
-    The fixed-halo tiled operator diverges from the global triangulation
-    there (void-center tiles see no sources within one halo ring); the
-    CERTIFIED ADAPTIVE operator must equal the global kernel everywhere."""
-    from pyofs_spark.operators.regrid import regrid_linear_adaptive
+    """Void fixture: two dense clusters separated by a ~12-degree void
+    holding 8 sparse sources, queries spanning the void. A tiled
+    triangulation over one ring of tiles diverges from the global one
+    there: void-center tiles see too few sources to contain a query, and
+    long triangles across the void differ from the global ones. The
+    certified operator must equal the global kernel everywhere."""
+    from pyofs_spark.functions import cells as C
 
     rng = np.random.default_rng(31)
     n_half = 120
     # non-affine field so triangulation differences actually show up
     sx = np.concatenate([rng.uniform(-12, -6, n_half), rng.uniform(6, 12, n_half)])
     sy = rng.uniform(0, 6, 2 * n_half)
-    sv = np.sin(sx * 0.7) + 0.25 * sy * sy + 0.1 * sx
-    src = spark.createDataFrame(
-        pd.DataFrame(
-            {"point_id": np.arange(2 * n_half), "lon": sx, "lat": sy, "value": sv}
-        )
-    )
     nq = 150
     qx = rng.uniform(-11, 11, nq)  # spans the void
     qy = rng.uniform(0.5, 5.5, nq)
+    sx = np.concatenate([sx, rng.uniform(-6, 6, 8)])
+    sy = np.concatenate([sy, rng.uniform(0, 6, 8)])
+    sv = np.sin(sx * 0.7) + 0.25 * sy * sy + 0.1 * sx
+    src = spark.createDataFrame(
+        pd.DataFrame({"point_id": np.arange(len(sx)), "lon": sx, "lat": sy, "value": sv})
+    )
     tgt = spark.createDataFrame(
         pd.DataFrame({"query_id": np.arange(nq), "lon": qx, "lat": qy})
     )
@@ -109,7 +127,7 @@ def test_adaptive_regrid_exact_across_void(spark):
 
     got = {
         r.query_id: r.value
-        for r in regrid_linear_adaptive(spark, src, tgt, tile_res=6).collect()
+        for r in regrid_linear_join(spark, src, tgt, tile_res=6).collect()
     }
     assert len(got) == nq
     for i in range(nq):
@@ -119,20 +137,17 @@ def test_adaptive_regrid_exact_across_void(spark):
             assert got[i] is not None and abs(got[i] - expect[i]) < 1e-9, (
                 i, got[i], expect[i])
 
-    # evidence the fixture is actually pathological: the FIXED-halo tiled
-    # operator does NOT match the global kernel on it
-    fixed = {
-        r.query_id: r.value
-        for r in regrid_linear_join(spark, src, tgt, tile_res=6).collect()
-    }
-    n_diverge = sum(
-        1
-        for i in range(nq)
-        if (fixed.get(i) is None) != bool(np.isnan(expect[i]))
-        or (
-            fixed.get(i) is not None
-            and not np.isnan(expect[i])
-            and abs(fixed[i] - expect[i]) > 1e-9
-        )
-    )
-    assert n_diverge > 0, "fixture too easy: fixed halo already matches"
+    # evidence the fixture is actually hard: triangulating each query's
+    # tile over only the sources in it and its one ring of tiles (no
+    # certification) misses values AND returns wrong ones
+    size = C.cell_size_deg(6)
+    stx, sty = np.floor((sx + 180) / size), np.floor((sy + 90) / size)
+    qtx, qty = np.floor((qx + 180) / size), np.floor((qy + 90) / size)
+    one_ring = np.full(nq, np.nan)
+    for tx, ty in set(zip(qtx, qty)):
+        q = (qtx == tx) & (qty == ty)
+        s = (np.abs(stx - tx) <= 1) & (np.abs(sty - ty) <= 1)
+        one_ring[q] = linear_interp_scattered(sx[s], sy[s], sv[s], qx[q], qy[q])
+    n_missing = np.sum(np.isnan(one_ring) & ~np.isnan(expect))
+    n_wrong = np.sum(np.abs(one_ring - expect) > 1e-9)
+    assert n_missing > 0 and n_wrong > 0, "fixture too easy for one ring of tiles"

@@ -15,7 +15,7 @@ from pyofs_spark.functions import polygons as P
 from pyofs_spark.operators import knn
 from pyofs_spark.operators.knn import knn_join, nn_value_join
 from pyofs_spark.operators.pip import pip_fixed, pip_join_broadcast
-from pyofs_spark.plans.pipeline import geocode_pages, station_df, tile_assignment
+from pyofs_spark.plans.pipeline import geocode_pages, tile_assignment
 from pyofs_spark.synth import synth_pages
 
 
