@@ -362,7 +362,6 @@ def test_read_output_hides_first_uncommitted_partition(spark, monkeypatch):
 
     table = pa.table({"query_id": pa.array([0, 1, 2], pa.int64())})
     keys = ["k1", "k2"]
-    real_commit = Manifest.commit
 
     def crash(self, part_key, entry, max_retries=0):
         raise RuntimeError(f"crash committing {part_key}")
@@ -372,7 +371,7 @@ def test_read_output_hides_first_uncommitted_partition(spark, monkeypatch):
         monkeypatch.setattr(Manifest, "commit", crash)
         with pytest.raises(RuntimeError, match="k1"):
             run_partitioned(spark, d, keys, lambda s, k: table)
-        monkeypatch.setattr(Manifest, "commit", real_commit)
+        monkeypatch.undo()
         assert os.listdir(os.path.join(d, "part_key=k1")) == ["part-00000.parquet"]
         assert Manifest(d).current() == {"version": 0, "partitions": {}}
         with pytest.raises(FileNotFoundError):
