@@ -110,16 +110,6 @@ def dir_mag(u: np.ndarray, v: np.ndarray):
     return direction, magnitude
 
 
-def geostrophic_finite_diff(ssh: np.ndarray):
-    """First differences of sea level along each axis with NaN pad
-    (ref: particle_contour.py:1185-1220 `.diff` then pad)."""
-    d_eta = np.full_like(ssh, np.nan)
-    d_xi = np.full_like(ssh, np.nan)
-    d_eta[1:, :] = ssh[1:, :] - ssh[:-1, :]
-    d_xi[:, 1:] = ssh[:, 1:] - ssh[:, :-1]
-    return d_eta, d_xi
-
-
 # ---------------------------------------------------------------------------
 # Satellite SST pipeline
 # ---------------------------------------------------------------------------
@@ -143,19 +133,9 @@ def sses_correct(sst_c: np.ndarray, sses_bias: np.ndarray) -> np.ndarray:
     return sst_c - bias
 
 
-def dop_mask(dopx: np.ndarray, dopy: np.ndarray, threshold: float = 0.5) -> np.ndarray:
-    """HFR DOP quality mask: keep where dopx<=θ AND dopy<=θ
-    (ref: PyOFS/observation/hf_radar.py:567-587)."""
-    return (dopx <= threshold) & (dopy <= threshold)
-
-
 # ---------------------------------------------------------------------------
 # Geodesy (ref: PyOFS/utilities.py)
 # ---------------------------------------------------------------------------
-
-WGS84_A = 6378137.0
-WGS84_B = 6356752.314245
-
 
 def rotated_pole_unrotate(
     rlon_deg: np.ndarray, rlat_deg: np.ndarray, pole_lon: float, pole_lat: float
@@ -213,21 +193,6 @@ def to_web_mercator(lon_deg: np.ndarray, lat_deg: np.ndarray):
     x = EARTH_R * np.radians(np.asarray(lon_deg, np.float64))
     y = EARTH_R * np.log(np.tan(np.pi / 4.0 + np.radians(lat_deg) / 2.0))
     return x, y
-
-
-def geodetic_radius(lat_deg: np.ndarray) -> np.ndarray:
-    """Earth radius at geodetic latitude (ref: utilities.py:388-410)."""
-    lat = np.radians(np.asarray(lat_deg, np.float64))
-    a, b = WGS84_A, WGS84_B
-    num = (a**2 * np.cos(lat)) ** 2 + (b**2 * np.sin(lat)) ** 2
-    den = (a * np.cos(lat)) ** 2 + (b * np.sin(lat)) ** 2
-    return np.sqrt(num / den)
-
-
-def coriolis_frequency(lat_deg: np.ndarray) -> np.ndarray:
-    """f = 2 Ω sin(lat) (ref: utilities.py:413-424)."""
-    omega = 7.2921e-5
-    return 2.0 * omega * np.sin(np.radians(np.asarray(lat_deg, np.float64)))
 
 
 # ---------------------------------------------------------------------------

@@ -26,10 +26,10 @@ written from it. Only the field scan and its aggregate run on executors:
   - the aggregated field (dimension-sized: ≤ 512 scatter points here) is
     executed by the one collect that also sizes it for the kNN path
     (operators/knn._inline_rows) and carries its values;
-  - regrid + mask over the lattice (`regrid_to_lattice`) is one projection.
-    A small lattice (16x12 here) is a LocalRelation, which Spark's
-    optimizer evaluates on the driver with no job; a larger one is one
-    map-only Spark job. Either way it is collected once as Arrow;
+  - regrid + mask over the lattice (`regrid_to_lattice`) are projections.
+    A small lattice (16x12 here) is a LocalRelation built in Arrow, which
+    Spark's optimizer evaluates on the driver with no job; a larger one is
+    one map-only Spark job. Either way it is collected once as Arrow;
   - that one table feeds the GeoTIFF, GeoPackage and NetCDF-3 sinks (one
     numpy grid) and is the partition's lineage payload, which
     run_partitioned writes with pyarrow on the driver.
@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..functions.sqlgen import flit, slit
 from ..lineage import run_partitioned
 from ..operators.pip import pip_fixed
 from ..operators.regrid import lattice, regrid_nearest_join
@@ -81,23 +82,27 @@ def field_for_day(
 ) -> DataFrame:
     """Stages 1-2: scan events-as-field, sanity-filter, day filter, daily
     nan-skipping mean per scattered source point (i, j indices reused as
-    the scatter ids; lon/lat derived deterministically)."""
-    ev = spark.read.schema(EVENTS_SCHEMA).parquet(os.path.join(sf_dir, "events.parquet"))
-    day_lit = F.to_date(F.lit(day))
+    the scatter ids; lon/lat derived deterministically). One short chain
+    of SQL-string calls: each DataFrame call is a py4j round trip and an
+    analysis of the plan so far."""
     mod = {"sst": 0, "ssh": 1}[variable]
-    f = (
-        ev.filter(F.to_date("ts") == day_lit)
-        .filter(F.col("event_id") % 2 == mod)
-        .withColumn("i", F.pmod(F.col("user_id"), F.lit(40)))
-        .withColumn("j", F.pmod(F.col("user_id") * 7 + 3, F.lit(30)))
-        .withColumn("v", F.when(F.col("value") < 1e10, F.col("value")))  # F6
-    )
     return (
-        f.groupBy("i", "j")
-        .agg(F.avg("v").alias("value"))  # A2 nan-skipping daily mean
-        .withColumn("point_id", F.col("j") * 40 + F.col("i"))
-        .withColumn("lon", F.lit(LON0) + F.col("i") * 0.25)
-        .withColumn("lat", F.lit(LAT0) + F.col("j") * 0.25)
+        spark.read.schema(EVENTS_SCHEMA)
+        .parquet(os.path.join(sf_dir, "events.parquet"))
+        .where(f"to_date(ts) = to_date({slit(day)}) AND event_id % 2 = {mod}")
+        .selectExpr(
+            "pmod(user_id, 40) AS i",
+            "pmod(user_id * 7 + 3, 30) AS j",
+            f"CASE WHEN value < {flit(1e10)} THEN value END AS v",  # F6
+        )
+        .groupBy("i", "j")
+        .agg(F.expr("avg(v) AS value"))  # A2 nan-skipping daily mean
+        .selectExpr(
+            "*",
+            "j * 40 + i AS point_id",
+            f"{flit(LON0)} + i * {flit(0.25)} AS lon",
+            f"{flit(LAT0)} + j * {flit(0.25)} AS lat",
+        )
     )
 
 
@@ -134,7 +139,7 @@ def regrid_to_lattice(
     """Stage 3 (+ the J5 mask), shared by every day-raster builder: 1-NN
     regrid of the source field onto the output lattice — values[0] is the
     regridded value, the rest ride the same neighbor — then the polygon
-    mask, as ONE projection collected once as Arrow. Columns:
+    mask, as map-only projections collected once as Arrow. Columns:
     query_id, gi, gj, lon, lat, *values[, polygon_id].
 
     The field is collected once (to size and fetch it). A lattice of at
@@ -150,7 +155,8 @@ def regrid_to_lattice(
     cols = ["query_id", "gi", "gj", "lon", "lat", *values]
     if mask:
         nn, cols = pip_fixed(nn), cols + ["polygon_id"]
-    return _collect_arrow(nn.select(*cols))
+    # the columns are chosen in Arrow: a select would be one more DataFrame
+    return _collect_arrow(nn).select(cols)
 
 
 def _collect_arrow(df: DataFrame) -> pa.Table:

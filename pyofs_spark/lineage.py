@@ -62,8 +62,7 @@ class Manifest:
     version (version-file collision guard) to surface lost-update races."""
 
     def __init__(self, root: str, n_buckets: int = 128):
-        self.dir = os.path.join(root, "_manifest")
-        os.makedirs(self.dir, exist_ok=True)
+        self.dir = os.path.join(root, "_manifest")  # created by the first commit
         self.current_path = os.path.join(self.dir, "current.json")
         self.n_buckets = n_buckets
         self.last_commit_bytes = 0  # commit-cost telemetry (tested flat)
@@ -146,6 +145,7 @@ class Manifest:
         )
 
     def _commit_once(self, part_key: str, entry: dict) -> dict:
+        os.makedirs(self.dir, exist_ok=True)
         snap = self.current_snapshot()
         version = snap["version"] + 1
         vpath = os.path.join(self.dir, f"v{version}.json")
@@ -196,6 +196,8 @@ class Manifest:
         retained snapshot references. Time travel shrinks to the retained
         window; `current.json` and its manifests are always kept. Returns
         number of files removed."""
+        if not os.path.isdir(self.dir):
+            return 0
         cur = self.current_snapshot()["version"]
         keep_versions = set(range(max(1, cur - keep_last + 1), cur + 1))
         live: set[str] = set()

@@ -35,6 +35,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqlgen import flit
 from ..session import materialize as _materialize
 from .knn import nn_value_join
 
@@ -48,26 +49,32 @@ def lattice(
     n_lat: int,
     partitions: int | None = 32,
 ) -> DataFrame:
-    """Regular output lattice as (query_id, gi, gj, lon, lat).
+    """Regular output lattice as (query_id, gi, gj, lon, lat): gi = query_id
+    % n_lon, gj = query_id // n_lon, lon = lon0 + gi * step and lat = lat0 +
+    gj * step in doubles; query_id is non-nullable and the rest nullable.
 
-    With partitions=None the ids come from an Arrow-built LocalRelation
-    instead of spark.range: Spark's optimizer (ConvertToLocalRelation) then
-    evaluates every projection over the lattice on the driver, with no job
-    and no code generation. The same formulas derive gi, gj, lon and lat
-    either way."""
+    partitions=None builds the columns with numpy into an Arrow-built
+    LocalRelation instead of spark.range: Spark's optimizer
+    (ConvertToLocalRelation) then evaluates every projection over the
+    lattice on the driver, with no job and no code generation."""
     n = n_lon * n_lat
     if partitions is None:
-        ids = spark.createDataFrame(pa.table(
-            [pa.array(np.arange(n), pa.int64())],
-            schema=pa.schema([pa.field("query_id", pa.int64(), nullable=False)]),
+        q = np.arange(n, dtype=np.int64)
+        gi, gj = q % n_lon, q // n_lon
+        return spark.createDataFrame(pa.table(
+            [q, gi, gj, float(lon0) + gi * float(step), float(lat0) + gj * float(step)],
+            schema=pa.schema([
+                pa.field("query_id", pa.int64(), nullable=False),
+                *[pa.field(c, t) for c, t in (("gi", pa.int64()), ("gj", pa.int64()),
+                                              ("lon", pa.float64()), ("lat", pa.float64()))],
+            ]),
         ))
-    else:
-        ids = spark.range(0, n, 1, partitions).withColumnRenamed("id", "query_id")
-    return (
-        ids.withColumn("gi", (F.col("query_id") % n_lon).cast("long"))
-        .withColumn("gj", F.floor(F.col("query_id") / n_lon).cast("long"))
-        .withColumn("lon", F.lit(float(lon0)) + F.col("gi") * F.lit(float(step)))
-        .withColumn("lat", F.lit(float(lat0)) + F.col("gj") * F.lit(float(step)))
+    return spark.range(0, n, 1, partitions).selectExpr(
+        "id AS query_id",
+        f"CAST(id % {n_lon} AS BIGINT) AS gi",
+        f"CAST(floor(id / {n_lon}) AS BIGINT) AS gj",
+    ).selectExpr(
+        "*", f"{flit(lon0)} + gi * {flit(step)} AS lon", f"{flit(lat0)} + gj * {flit(step)} AS lat"
     )
 
 
@@ -148,19 +155,17 @@ def regrid_bilinear_regular(
 
 
 def regrid_linear_join(
-    spark: SparkSession,
     sources: DataFrame,
     targets: DataFrame,
     value_col: str = "value",
     tile_res: int = 4,
-    source_key: str = "point_id",
     target_key: str = "query_id",
 ) -> DataFrame:
     """Scattered-data LINEAR regrid (SURVEY J2): Delaunay + barycentric
     interpolation per tile via applyInPandas, equal to one global
     triangulation (griddata('linear'), data_assimilation_validation.py:
-    149-207). Returns (target_key long, value_col double); `source_key`
-    is not carried.
+    149-207). Returns (target_key long, value_col double); no source id
+    is carried.
 
     Certified adaptive-halo protocol:
 

@@ -418,7 +418,7 @@ def eng_linear_regrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tgt = lattice(spark, -125.8, 32.2, 0.2, _LR_NLON, _LR_NLAT, partitions=8)
-    out = regrid_linear_join(spark, src, tgt, tile_res=4)
+    out = regrid_linear_join(src, tgt, tile_res=4)
     return out.select(
         "query_id",
         (F.floor(F.col("value") * 10000.0 + 0.5) / 10000.0).alias("value"),

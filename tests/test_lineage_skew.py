@@ -357,7 +357,8 @@ def test_manifest_rejects_legacy_inline_format():
 def test_read_output_hides_first_uncommitted_partition(spark, monkeypatch):
     """A crash in the very first commit leaves data on disk and a manifest
     with no partition: read_output raises instead of globbing the
-    uncommitted rows, and a resume equals a clean run."""
+    uncommitted rows; on a fresh root it raises and creates nothing; and a
+    resume equals a clean run."""
     from pyofs_spark.lineage import Manifest
 
     table = pa.table({"query_id": pa.array([0, 1, 2], pa.int64())})
@@ -378,6 +379,7 @@ def test_read_output_hides_first_uncommitted_partition(spark, monkeypatch):
             read_output(spark, d)
         with pytest.raises(FileNotFoundError):
             read_output(spark, clean)
+        assert os.listdir(clean) == []  # a reader creates nothing
 
         assert run_partitioned(spark, d, keys, lambda s, k: table)["ran"] == keys
         run_partitioned(spark, clean, keys, lambda s, k: table)

@@ -72,7 +72,7 @@ def test_distributed_linear_regrid_matches_kernel(spark):
     )
     got = {
         r.query_id: r.value
-        for r in regrid_linear_join(spark, src, tgt, tile_res=4).collect()
+        for r in regrid_linear_join(src, tgt, tile_res=4).collect()
     }
     expect = 2.0 + 0.3 * qx + 0.7 * qy
     assert len(got) == 200
@@ -92,7 +92,7 @@ def test_linear_regrid_keeps_64bit_target_ids(spark):
     tgt = spark.createDataFrame(
         pd.DataFrame({"query_id": np.array(ids, np.int64), "lon": [5.0, 5.5], "lat": [5.0, 5.5]})
     )
-    got = {r.query_id: r.value for r in regrid_linear_join(spark, src, tgt).collect()}
+    got = {r.query_id: r.value for r in regrid_linear_join(src, tgt).collect()}
     assert sorted(got) == ids
     assert abs(got[ids[0]] - 10.0) < 1e-9 and abs(got[ids[1]] - 11.0) < 1e-9
 
@@ -127,7 +127,7 @@ def test_adaptive_regrid_exact_across_void(spark):
 
     got = {
         r.query_id: r.value
-        for r in regrid_linear_join(spark, src, tgt, tile_res=6).collect()
+        for r in regrid_linear_join(src, tgt, tile_res=6).collect()
     }
     assert len(got) == nq
     for i in range(nq):

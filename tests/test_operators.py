@@ -148,6 +148,180 @@ def test_empty_point_side(spark):
     assert sorted(tuple(r) for r in got) == [(1, "8", 0.5, 1), (2, "7", 0.0, 1)]
 
 
+def _ranked_py(qs, ps, k):
+    """Brute force in the inline path's order: (query_id, str(point_id),
+    dist2, rank), ranked by (dist2, str(point_id), position). A query with a
+    NULL or NaN coordinate has the same dist2 (NULL or NaN) to every point,
+    so its k rows are the smallest ids."""
+    out = []
+    for qid, qx, qy in qs:
+        def d2(p):
+            return None if qx is None or qy is None else (qx - p[1]) ** 2 + (qy - p[2]) ** 2
+
+        def key(e):
+            d = d2(e[1])
+            return (0.0 if d is None or d != d else d, str(e[1][0]), e[0])
+
+        best = sorted(enumerate(ps), key=key)[:k]
+        out += [(qid, str(p[0]), d2(p), rank) for rank, (_, p) in enumerate(best, 1)]
+    return out
+
+
+def _same(a, b) -> bool:
+    """Row lists equal, NaN equal to NaN and -0.0 told from 0.0."""
+    return len(a) == len(b) and all(
+        len(x) == len(y) and all(repr(u) == repr(v) for u, v in zip(x, y)) for x, y in zip(a, b)
+    )
+
+
+def _grid_points(ids: str):
+    """150 points on a 0.25-degree grid (so the lattice queries below tie),
+    with string ids holding a comma, a quote and a backslash, or bigint ids
+    above 2**53 whose string order differs from their numeric order."""
+    rng = np.random.default_rng(11)
+    cells = rng.choice(24 * 16, 150, replace=False)
+    pid = {
+        "string": lambda i: ["p,", "q'", "b\\", "z"][i % 4] + str(i),
+        "bigint": lambda i: [2**53 + 1 + i, 10**17 + i][i % 2],
+    }[ids]
+    return [(pid(i), -10.0 + (c % 24) * 0.25, 40.0 + (c // 24) * 0.25)
+            for i, c in enumerate(map(int, cells))]
+
+
+def _queries():
+    """On-grid and half-grid lattice queries (exact distance ties), queries
+    at the antimeridian and far beyond the points' latitude band, and
+    queries with a NULL or NaN coordinate."""
+    lat = [(i, -11.0 + (i % 60) * 0.125, 39.0 + (i // 60) * 0.125) for i in range(60 * 44)]
+    rng = np.random.default_rng(2)
+    far = [(10_000 + i, float(x), float(y)) for i, (x, y) in
+           enumerate(zip(rng.uniform(-180, 180, 200), rng.uniform(-90, 90, 200)))]
+    edge = [(20_000, 180.0, 45.0), (20_001, -180.0, 45.0), (20_002, -180.0, -89.0),
+            (20_003, 0.0, 89.9), (20_004, -7.0, -60.0), (20_005, -10.0, 40.0)]
+    bad = [(30_000, None, 41.0), (30_001, float("nan"), 41.0), (30_002, -7.0, None),
+           (30_003, -7.0, float("nan")), (30_004, None, None)]
+    return lat + far + edge + bad
+
+
+@pytest.mark.parametrize(
+    "shape, k, ids",
+    [
+        pytest.param("knn_join", 1, "string", id="knn_join-k1-string"),
+        pytest.param("knn_join", 3, "string", id="knn_join-k3-string"),
+        pytest.param("knn_join", 1, "bigint", id="knn_join-k1-bigint"),
+        pytest.param("knn_join", 3, "bigint", id="knn_join-k3-bigint"),
+        pytest.param("nn_value_join", 1, "string", id="nn_value_join-string"),
+        pytest.param("nn_value_join", 1, "bigint", id="nn_value_join-bigint"),
+    ],
+)
+def test_inline_knn_cell_index_exact_vs_brute(spark, shape, k, ids):
+    """The inline path's literal cell index gives exactly the brute-force
+    ranking (dist2, then the ids' string order) for on-grid ties, queries
+    at ±180° and beyond the points' band, and NULL or NaN query
+    coordinates; `carry` values (NULL, -0.0, inf) ride with the value."""
+    ps = _grid_points(ids)
+    n = len(ps)
+    lists = knn._cell_index(
+        np.array([p[1] for p in ps]), np.array([p[2] for p in ps]), k
+    )[1]
+    assert len(lists) > 1 and 2 * max(map(len, lists)) <= n  # the grid prunes
+    qs = _queries()
+    qdf = spark.createDataFrame(qs, "query_id long, lon double, lat double")
+    pid_type = "string" if ids == "string" else "bigint"
+    want = sorted(_ranked_py(qs, ps, k))
+    if shape == "knn_join":
+        pdf = spark.createDataFrame(ps, f"point_id {pid_type}, lon double, lat double")
+        for points in (ps, pdf):
+            assert _same(sorted(tuple(r) for r in knn_join(qdf, points, k=k).collect()), want)
+        return
+    carry = [None, -0.0, float("inf"), 2.5]
+    pdf = spark.createDataFrame(
+        [(p[0], p[1], p[2], float(i), carry[i % 4]) for i, p in enumerate(ps)],
+        f"point_id {pid_type}, lon double, lat double, val double, tag double",
+    )
+    got = nn_value_join(qdf, pdf, "val", carry=("tag",)).collect()
+    assert [c for c in got[0].__fields__] == ["query_id", "lon", "lat", "point_id", "val", "tag", "dist2"]
+    index = {str(p[0]): i for i, p in enumerate(ps)}
+    assert _same(
+        sorted((r.query_id, r.point_id, r.dist2, 1) for r in got), want
+    )
+    for r in got:
+        i = index[r.point_id]
+        assert _same([(r.val, r.tag)], [(float(i), carry[i % 4])])
+
+
+def test_inline_knn_k_above_point_count(spark):
+    """k larger than the point count ranks every point, in order."""
+    ps = [("b", 0.0, 0.0), ("a", 1.0, 0.0), ("c", 0.0, 2.0)]
+    qs = [(1, 0.5, 0.0), (2, 5.0, 5.0), (3, None, 1.0)]
+    qdf = spark.createDataFrame(qs, "query_id long, lon double, lat double")
+    got = sorted(tuple(r) for r in knn_join(qdf, ps, k=7).collect())
+    assert _same(got, sorted(_ranked_py(qs, ps, 7))) and len(got) == 9
+
+
+def test_inline_knn_size_does_not_grow_with_points(spark):
+    """The expression has one slot per candidate of the longest cell list,
+    not one per point: doubling the points at the same spacing adds cells
+    and literal array entries, not slots."""
+    def slots(nx):
+        ps = [(j * nx + i, i * 0.25, j * 0.25) for j in range(10) for i in range(nx)]
+        lists = knn._cell_index(np.array([p[1] for p in ps]), np.array([p[2] for p in ps]), 1)[1]
+        q = spark.createDataFrame([(0, 1.0, 1.0)], "query_id long, lon double, lat double")
+        plan = knn_join(q, ps, k=1)._jdf.queryExecution().analyzed().toString()
+        assert plan.count("named_struct(dist2") == max(map(len, lists))
+        return max(map(len, lists))
+
+    small, large = slots(12), slots(24)
+    assert small == large < 120 // 4
+
+
+def test_inline_nn_over_range_lattice_stays_in_codegen(spark):
+    """A 120-point nn_value_join over a spark.range lattice runs in
+    whole-stage codegen: the cell index keeps the generated method under
+    the limit that the 120 unrolled points exceeded."""
+    from pyofs_spark.operators.regrid import lattice
+
+    rng = np.random.default_rng(3)
+    cells = rng.choice(1200, 120, replace=False)
+    src = spark.createDataFrame(
+        [(c, -126.0 + (c % 40) * 0.25, 32.0 + (c // 40) * 0.25, float(c)) for c in map(int, cells)],
+        "point_id long, lon double, lat double, value double",
+    )
+    tgt = lattice(spark, -126.0, 32.0, 0.1, 100, 75, partitions=2)
+    agg = nn_value_join(tgt, src, "value").agg(F.sum("value"), F.count("point_id"))
+    assert agg.collect()[0][1] == 7500
+    _assert_stays_in_codegen(spark, agg)
+
+
+@pytest.mark.parametrize("path", ["inline", "rings"])
+def test_point_without_location_is_dropped(spark, monkeypatch, path):
+    """A point whose lon or lat is NULL or NaN is no neighbour of anything:
+    knn_join and nn_value_join give what they give without it, on both
+    paths and for a list of point rows."""
+    if path == "rings":
+        monkeypatch.setattr(knn, "INLINE_POINTS_THRESHOLD", 0)
+    rng = np.random.default_rng(4)
+    good = [(i, float(x), float(y), float(i)) for i, (x, y) in
+            enumerate(zip(rng.uniform(-20, 20, 60), rng.uniform(-20, 20, 60)))]
+    bad = [(98, None, 60.0, 98.0), (99, float("nan"), 60.0, 99.0), (97, 100.0, None, 97.0)]
+    schema = "point_id bigint, lon double, lat double, val double"
+    with_bad = spark.createDataFrame(good + bad, schema)
+    without = spark.createDataFrame(good, schema)
+    q = spark.createDataFrame(
+        [(1, 100.0, 60.0), (2, 0.0, 0.0), (3, -170.0, -80.0)], "query_id long, lon double, lat double"
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(knn_join(q, with_bad, k=2)) == rows(knn_join(q, without, k=2))
+    assert rows(nn_value_join(q, with_bad, "val")) == rows(nn_value_join(q, without, "val"))
+    if path == "inline":
+        assert rows(knn_join(q, [r[:3] for r in good + bad], k=2)) == rows(
+            knn_join(q, [r[:3] for r in good], k=2)
+        )
+
+
 def test_pip_sql_matches_numpy(spark):
     """The unrolled SQL ray cast and the numpy kernel agree on random and
     boundary points for every fixture polygon."""
