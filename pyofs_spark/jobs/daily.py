@@ -155,7 +155,7 @@ def regrid_to_lattice(
     cols = ["query_id", "gi", "gj", "lon", "lat", *values]
     if mask:
         nn, cols = pip_fixed(nn), cols + ["polygon_id"]
-    # the columns are chosen in Arrow: a select would be one more DataFrame
+    # the columns are chosen in Arrow: a Spark select is one more DataFrame call
     return _collect_arrow(nn).select(cols)
 
 

@@ -238,6 +238,23 @@ def test_lattice_size_choice_is_bit_identical(spark, monkeypatch):
     assert not pc.any(pc.is_nan(on_driver["value"])).as_py()
 
 
+
+def test_lattice_from_arrow_matches_range(spark):
+    """lattice(partitions=None) computes gi, gj, lon and lat in numpy: the
+    same schema, nullability and doubles, bit for bit, as the spark.range
+    lattice, on a step whose products round."""
+    from pyofs_spark.operators.regrid import lattice
+
+    args = (spark, -125.8, 32.2, 0.04, 37, 23)
+    local, ranged = lattice(*args, partitions=None), lattice(*args, partitions=3)
+    assert local.schema == ranged.schema
+    assert local._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+
+    def rows(df):
+        return sorted((r.query_id, r.gi, r.gj, r.lon.hex(), r.lat.hex()) for r in df.collect())
+
+    assert rows(local) == rows(ranged)
+
 def test_day_without_events_commits_all_nodata(spark, tmp_path):
     """A day outside the events' range has an empty field: the partition
     still commits every lattice row, and the GeoTIFF is all nodata."""
