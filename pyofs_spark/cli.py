@@ -50,7 +50,7 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
-    from .lineage import run_partitioned
+    from .lineage import input_fingerprint, run_partitioned
     from .plans.pipeline import tile_assignment
     from .session import get_session
     from .synth import synth_pages
@@ -84,8 +84,14 @@ def main(argv: list[str] | None = None) -> int:
         pages = load_pages(s).filter(F.pmod("page_id", F.lit(args.buckets)) == b)
         return tile_assignment(s, pages, k=args.k)
 
+    # the pages (the --input files, or the synthetic count), k and the
+    # bucketing shape every bucket's output
+    inputs = input_fingerprint(
+        [args.input] if args.input else [],
+        [None if args.input else args.n_pages, args.k, args.buckets],
+    )
     keys = [f"bucket_{i}" for i in range(args.buckets)]
-    summary = run_partitioned(spark, args.out, keys, build_bucket)
+    summary = run_partitioned(spark, args.out, keys, build_bucket, lambda key: inputs)
     print(
         f"tile-assign complete: ran={len(summary['ran'])} "
         f"skipped={len(summary['skipped'])} out={args.out}"

@@ -17,8 +17,8 @@ its publish/resume machinery:
            lineage commit through the versioned manifest (T1/F10): killing
            the job mid-run and re-invoking completes only missing
            (variable, day) partitions — tested. Each partition's input
-           fingerprint covers the events files (path, size, mtime), the
-           variable and the lattice, so a corrected input re-runs it.
+           fingerprint covers the events files (path, size, mtime) and
+           the lattice, so a corrected input re-runs it.
 
 Like the reference, each day raster is computed ONCE and every output is
 written from it. Only the field scan and its aggregate run on executors:
@@ -37,8 +37,6 @@ written from it. Only the field scan and its aggregate run on executors:
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 
 import numpy as np
@@ -49,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.sqlgen import flit, slit
-from ..lineage import run_partitioned
+from ..lineage import input_fingerprint, run_partitioned
 from ..operators.pip import pip_fixed
 from ..operators.regrid import lattice, regrid_nearest_join
 from ..sources.sinks import (
@@ -106,25 +104,6 @@ def field_for_day(
     )
 
 
-def field_from_netcdf(
-    spark: SparkSession, nc_path: str, variable: str
-) -> DataFrame:
-    """Stage-1 alternative (round 4): scattered source field ingested from
-    a NetCDF-3 archive through the binaryFile scan source — the engine
-    analog of the reference's whole ingest side (xarray over NetCDF
-    granules, wcofs.py:179-208). Non-null cells become the scatter points;
-    point_id is the (j, i) row-major cell index."""
-    from ..sources.scan import read_netcdf3_grid
-
-    g = read_netcdf3_grid(spark, nc_path, variables=[variable])
-    return g.filter(F.col("value").isNotNull()).select(
-        (F.col("j").cast("long") * 4096 + F.col("i")).alias("point_id"),
-        "lon",
-        "lat",
-        "value",
-    )
-
-
 def regrid_to_lattice(
     spark: SparkSession,
     src: DataFrame,
@@ -149,9 +128,7 @@ def regrid_to_lattice(
     cells = n_lon * n_lat
     tasks = None if cells <= LOCAL_LATTICE_CELLS else -(-cells // LATTICE_CELLS_PER_TASK)
     tgt = lattice(spark, lon0, lat0, step, n_lon, n_lat, partitions=tasks)
-    nn = regrid_nearest_join(
-        src, tgt, value_col=values[0], res=6, max_ring=8, carry=values[1:]
-    )
+    nn = regrid_nearest_join(src, tgt, value_col=values[0], res=6, carry=values[1:])
     cols = ["query_id", "gi", "gj", "lon", "lat", *values]
     if mask:
         nn, cols = pip_fixed(nn), cols + ["polygon_id"]
@@ -183,22 +160,6 @@ def masked_cells(cells: pa.Table) -> pa.Table:
         "j": cells["gj"],
         "mean_val": pc.if_else(inside, cells["value"], None),
     })
-
-
-def build_day_raster_from_netcdf(
-    spark: SparkSession, nc_path: str, variable: str, day: str, out_dir: str
-) -> "np.ndarray":
-    """File-to-file ETL (round 4 — closes the loop the reference runs
-    daily: NetCDF granules IN, masked north-up GeoTIFF OUT,
-    write_daily_average.py:632-709). Stages 3-4 of build_day_raster over a
-    NetCDF-ingested source field; returns the north-up array written."""
-    cells = regrid_to_lattice(spark, field_from_netcdf(spark, nc_path, variable))
-    os.makedirs(out_dir, exist_ok=True)
-    return export_raster_geotiff(
-        cells_grid(masked_cells(cells), N_LON, N_LAT),
-        os.path.join(out_dir, f"{variable}_{day}_from_nc.tif"),
-        west=LON0, south=LAT0, dx=STEP, dy=STEP,
-    )
 
 
 def build_day_raster(
@@ -233,19 +194,6 @@ def build_day_raster(
     return cells
 
 
-def input_fingerprint(sf_dir: str) -> str:
-    """What a day partition's output depends on besides its key: the path,
-    size and mtime of every events file, and the lattice constants."""
-    root = os.path.join(sf_dir, "events.parquet")
-    files = [root] if os.path.isfile(root) else sorted(
-        os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
-    )
-    stats = [(f, os.stat(f).st_size, os.stat(f).st_mtime_ns) for f in files]
-    return json.dumps(
-        {"events": stats, "lattice": [LAT0, LON0, STEP, N_LON, N_LAT]}
-    )
-
-
 def run_daily_job(
     spark: SparkSession,
     sf_dir: str,
@@ -258,16 +206,14 @@ def run_daily_job(
     when its input fingerprint changed); writes the dir-index JSON of the
     committed partitions at the end (ref: write_daily_average.py:662-663)."""
     keys = [f"{v}__{d}" for v in variables for d in days]
-    inputs = input_fingerprint(sf_dir)
-
-    def fingerprint(key: str) -> str:
-        return hashlib.sha1(f"{inputs}|{key}".encode()).hexdigest()
-
+    inputs = input_fingerprint(
+        [os.path.join(sf_dir, "events.parquet")], [LAT0, LON0, STEP, N_LON, N_LAT]
+    )
     def build(s: SparkSession, key: str) -> pa.Table:
         v, d = key.split("__")
         return build_day_raster(s, sf_dir, v, d, os.path.join(out_root, "rasters"))
 
-    summary = run_partitioned(spark, out_root, keys, build, fingerprint=fingerprint)
+    summary = run_partitioned(spark, out_root, keys, build, lambda key: inputs)
     idx_path = os.path.join(out_root, "index.json")
     with open(idx_path, "w") as fh:
         fh.write(manifest_index_json(out_root))

@@ -44,7 +44,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lineage import run_partitioned
+from ..lineage import input_fingerprint, run_partitioned
 from ..sources.grids import (
     WCOFS_POLE,
     build_curvilinear_grid,
@@ -252,7 +252,13 @@ def run_wcofs_daily(
             lat0, lon0, lstep, n_lon, n_lat,
         )
 
-    summary = run_partitioned(spark, out_root, days, build)
+    spec = [n_xi, n_eta, rlon0, rlat0, step, pole_lon, pole_lat,
+            float(lat0), float(lon0), float(lstep), int(n_lon), int(n_lat)]
+
+    def fingerprint(day: str) -> str:
+        return input_fingerprint(_glob.glob(os.path.join(nc_dir, f"*_{day}.nc")), spec)
+
+    summary = run_partitioned(spark, out_root, days, build, fingerprint)
     summary["lattice"] = {
         "lat0": float(lat0), "lon0": float(lon0), "step": float(lstep),
         "n_lon": int(n_lon), "n_lat": int(n_lat),

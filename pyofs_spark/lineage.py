@@ -28,6 +28,7 @@ expected parent version at swap time to surface lost-update races.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -232,6 +233,18 @@ def parquet_rows(path: str) -> int:
     )
 
 
+def input_fingerprint(paths: list[str], spec: list) -> str:
+    """A run_partitioned fingerprint: the sha1 of the (path, size, mtime_ns)
+    of every file at or under `paths`, and of `spec`, the parameters that
+    shape the output."""
+    files = sorted(
+        f for p in paths
+        for f in ([p] if os.path.isfile(p) else [os.path.join(d, n) for d, _, ns in os.walk(p) for n in ns])
+    )
+    stats = [(f, os.stat(f).st_size, os.stat(f).st_mtime_ns) for f in files]
+    return hashlib.sha1(json.dumps([stats, spec]).encode()).hexdigest()
+
+
 def write_table(table: pa.Table, path: str) -> None:
     """Overwrite the parquet directory `path` with `table` as one file,
     written by pyarrow on the driver. The file is written under a dot name
@@ -256,11 +269,13 @@ def run_partitioned(
     out_root: str,
     part_keys: list[str],
     build_partition: Callable[[SparkSession, str], DataFrame | pa.Table],
-    fingerprint: Callable[[str], str] = lambda k: k,
-    size_of: Callable[[str], float] | None = None,
+    fingerprint: Callable[[str], str],
 ) -> dict:
     """Run build_partition for every part_key not yet committed with its
-    current fingerprint.
+    current fingerprint: a string that changes whenever the partition's
+    output would (its inputs' file stats and the parameters that shape it),
+    so that a changed input re-runs the partition instead of leaving its
+    stale output committed.
 
     Idempotent + resumable: killing the job mid-run and re-invoking
     completes only the missing partitions; output equals a single run
@@ -271,18 +286,11 @@ def run_partitioned(
     Table, already collected on the driver, is written there by pyarrow
     (`write_table`), which starts no Spark job.
 
-    size_of: optional estimated input size per key — pending partitions
-    run LARGEST-FIRST (the reference schedules its downloads biggest-first,
-    SURVEY O3; longest-job-first minimizes makespan when the tail job
-    would otherwise straggle).
-
     The summary's `lineage` maps each committed part_key to its manifest
     entry: input_fingerprint, n_rows, wall_sec and path."""
     manifest = Manifest(out_root)
     done = manifest.current()["partitions"]
     ran, skipped = [], []
-    if size_of is not None:
-        part_keys = sorted(part_keys, key=size_of, reverse=True)
     for key in part_keys:
         if key in done and done[key]["input_fingerprint"] == fingerprint(key):
             skipped.append(key)

@@ -32,18 +32,25 @@ and first drop the points whose lon or lat is NULL or NaN:
      back to one cell, whose lookups fold to constants (the 12 stations).
 - Rings, for a larger DataFrame (no KD-tree, no driver collect of it):
   1. Index both sides into quad cells at resolution `res`
-     (functions/cells.py).
-  2. Pass r = 1, 2, ..., max_ring: for the still-unsettled queries, explode
-     the (2r+1)² cell disk around each query cell, hash-join against the
-     points bucketed by cell, take the k best with a window.
-  3. A query is SETTLED after pass r iff it found ≥ k candidates and its
-     k-th distance < (r * cell_size)² — any point in an unexplored cell is
-     at least r*cell_size away (chebyshev ring ≥ r+1 ⇒ coordinate gap ≥
-     r*cell_size), so the answer cannot change. This makes the output
-     EXACTLY equal to the brute-force result, with the deterministic
+     (functions/cells.py). Cell disks are clipped to the grid, not wrapped
+     in x: dist2 is planar, so a wrapped cell only adds far candidates.
+  2. Pass 1: each query joins the points of its 3x3 cell disk (a hash
+     join keyed by cell) and keeps its k best by (dist2, point_id) with a
+     window. It is SETTLED iff it found k and its k-th dist2 < cell_size²:
+     a point r + 1 or more cells away (chebyshev) is more than r *
+     cell_size away, so the answer cannot change.
+  3. Pass 2: every other query is ranked again over its own disk of
+     radius R, the smallest R whose settle rule its bound D² passes (D² <
+     (R * cell_size)², compared in squares, so the rounding of sqrt cannot
+     make R smaller). D² is the ring-1 k-th dist2; a query with fewer
+     than k ring-1 candidates takes the squared distance from its own
+     coordinates to the far corners of the smallest disk around its cell
+     that holds k points, from a count of the points by cell (collected
+     only when such a query exists; a point outside its cell's extent,
+     beyond the grid or at inf, is not counted). A NULL, NaN or infinite
+     bound covers the whole grid: such a query ranks every point.
+     The output is EXACTLY the brute-force result with the deterministic
      tie-break (d², point_id).
-  4. Queries still unsettled after max_ring are ranked against every point
-     by a cross join (they are the sparse tail — isolated mid-ocean points).
 
 Scale notes (100 TB): pass 1 dominates and is a single shuffle join keyed by
 cell id; the disk explode multiplies queries ×9 only. Skewed hot cells on the
@@ -56,6 +63,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
@@ -287,7 +295,6 @@ def knn_join(
     res: int = 6,
     query_key: str = "query_id",
     point_key: str = "point_id",
-    max_ring: int = 4,
 ) -> DataFrame:
     """Exact kNN join: for each query row, the k nearest points.
 
@@ -302,13 +309,13 @@ def knn_join(
     INLINE_POINTS_THRESHOLD rows (measured by one bounded collect, which
     also fetches them), is folded into the query plan (_knn_inline); its
     point ids come back as strings and ties break in their string order.
-    A larger DataFrame takes the expanding-ring join (_knn_rings), the only
-    path that `res` and `max_ring` tune."""
+    A larger DataFrame takes the two-pass cell join (_knn_rings), the only
+    path that `res` tunes."""
     if isinstance(points, DataFrame):
         points = _located(points)
         rows = _inline_rows(points, (point_key, "lon", "lat"))
         if rows is None:
-            return _knn_rings(queries, points, k, res, query_key, point_key, max_ring)
+            return _knn_rings(queries, points, k, res, query_key, point_key)
     else:
         rows = _usable(points)
     nn = _knn_inline(queries, rows, k, point_key, [query_key], (point_key, "dist2", "knn_rank"))
@@ -316,23 +323,75 @@ def knn_join(
     return nn if rows else nn.where("false")
 
 
-def _with_cell_xy(df: DataFrame, res: int, lon: str = "lon", lat: str = "lat") -> DataFrame:
-    return df.withColumn("_cx", F.expr(cells.cell_x_sql(lon, res))).withColumn(
-        "_cy", F.expr(cells.cell_y_sql(lat, res))
+def _with_cell_xy(df: DataFrame, res: int) -> DataFrame:
+    return df.selectExpr(
+        "*", f"{cells.cell_x_sql('lon', res)} AS _cx", f"{cells.cell_y_sql('lat', res)} AS _cy"
     )
 
 
-def _top_k(cand: DataFrame, k: int, query_key: str, point_key: str) -> DataFrame:
-    """dist2 of each (query, point) candidate pair, and the k best pairs of
-    each query by (dist2, point_key), numbered by knn_rank."""
-    win = Window.partitionBy(query_key).orderBy("dist2", point_key)
+def _ranked(q: DataFrame, p: DataFrame, k: int, res: int, query_key: str, point_key: str) -> DataFrame:
+    """The k best points of each query of q among the points in the cells
+    within chebyshev distance _r of its cell (clipped to the grid), by
+    (dist2, point_key) and numbered by knn_rank; every row also carries its
+    query's candidate count _n (at most k) and k-th (or last) dist2 _kth."""
+    nx, ny = cells.nx(res), cells.ny(res)
+    cand = q.selectExpr(
+        "*", f"explode(sequence(greatest(_cy - _r, 0), least(_cy + _r, {ny - 1}))) AS _y"
+    ).selectExpr(
+        "*", f"explode(sequence(greatest(_cx - _r, 0), least(_cx + _r, {nx - 1}))) AS _x"
+    )
     dlon, dlat = F.col("_qlon") - F.col("_plon"), F.col("_qlat") - F.col("_plat")
+    each = Window.partitionBy(query_key)
     return (
-        cand.withColumn("dist2", dlon * dlon + dlat * dlat)
-        .withColumn("knn_rank", F.row_number().over(win))
+        cand.join(p, cand["_y"] * nx + cand["_x"] == p["_pcell"])
+        .withColumn("dist2", dlon * dlon + dlat * dlat)
+        .withColumn("knn_rank", F.row_number().over(each.orderBy("dist2", point_key)))
         .filter(F.col("knn_rank") <= k)
-        .select(query_key, "_qlon", "_qlat", "_cx", "_cy", point_key, "dist2", "knn_rank")
+        .select(
+            query_key, point_key, "dist2", "knn_rank",
+            F.count("*").over(each).alias("_n"), F.max("dist2").over(each).alias("_kth"),
+        )
     )
+
+
+def _count_disks(p: DataFrame, short: list, k: int, res: int) -> pa.Table:
+    """For each cell (_cx, _cy) of `short`, the extent (_x0, _x1, _y0, _y1)
+    in degrees of the smallest clipped cell disk around it that holds k
+    points inside their cells' extents, or NULLs when none does: a binary
+    search of the radius over 2D prefix sums of the points' count by cell,
+    collected only when `short` is not empty."""
+    size, nx, ny = cells.cell_size_deg(res), cells.nx(res), cells.ny(res)
+    cx, cy = np.array(short, dtype=np.int64).reshape(-1, 2).T
+    s = np.zeros((ny + 1, nx + 1), np.int64)
+    if short:
+        e = flit(size)
+        inside = (f"lon BETWEEN _cx * {e} - 180 AND (_cx + 1) * {e} - 180"
+                  f" AND lat BETWEEN _cy * {e} - 90 AND (_cy + 1) * {e} - 90")
+        for x, y, n in p.where(inside).groupBy("_cx", "_cy").count().collect():
+            s[y + 1, x + 1] = n
+        s = s.cumsum(0).cumsum(1)
+
+    def disk(r):
+        x0, x1 = np.maximum(cx - r, 0), np.minimum(cx + r, nx - 1) + 1
+        y0, y1 = np.maximum(cy - r, 0), np.minimum(cy + r, ny - 1) + 1
+        return (x0, x1, y0, y1), s[y1, x1] - s[y0, x1] - s[y1, x0] + s[y0, x0]
+
+    lo, hi = np.zeros_like(cx), np.full_like(cx, nx)  # radius nx covers the grid
+    while (lo < hi).any():
+        mid = (lo + hi) // 2
+        ok = disk(mid)[1] >= k
+        lo, hi = np.where(ok, lo, mid + 1), np.where(ok, mid, hi)
+    (x0, x1, y0, y1), held = disk(lo)
+    found = held >= k
+
+    def edge(origin, c):
+        return pa.array(origin + c * size, pa.float64(), mask=~found)
+
+    return pa.table({
+        "_cx": cx, "_cy": cy,
+        "_x0": edge(-180.0, x0), "_x1": edge(-180.0, x1),
+        "_y0": edge(-90.0, y0), "_y1": edge(-90.0, y1),
+    })
 
 
 def _knn_rings(
@@ -342,69 +401,40 @@ def _knn_rings(
     res: int,
     query_key: str,
     point_key: str,
-    max_ring: int,
 ) -> DataFrame:
-    """knn_join's expanding-cell-ring join (module docstring, steps 1-4):
-    the same output, with point_key keeping its type."""
-    size = cells.cell_size_deg(res)
-    nx = cells.nx(res)
-    q = _with_cell_xy(queries, res).select(
-        query_key, F.col("lon").alias("_qlon"), F.col("lat").alias("_qlat"), "_cx", "_cy"
+    """knn_join's two-pass cell join (module docstring, steps 1-3): the
+    same output, with point_key keeping its type."""
+    size, nx = cells.cell_size_deg(res), cells.nx(res)
+    # the queries are read by both passes; pinned so that both see one result
+    q = _materialize(_with_cell_xy(queries, res).selectExpr(
+        ident(query_key), "lon AS _qlon", "lat AS _qlat", "_cx", "_cy"
+    ))
+    pc = _with_cell_xy(points, res)
+    p = pc.selectExpr(ident(point_key), "lon AS _plon", "lat AS _plat", f"_cy * {nx} + _cx AS _pcell")
+    ring1 = _materialize(_ranked(q.withColumn("_r", F.lit(1)), p, k, res, query_key, point_key))
+    settled = f"_n = {k} AND _kth < {flit(size * size)}"
+    pending = q.join(
+        ring1.where("knn_rank = 1").select(query_key, "_n", "_kth"), query_key, "left"
+    ).where(f"NOT coalesce({settled}, false)")
+    short = pending.where(f"coalesce(_n, 0) < {k}").select("_cx", "_cy").distinct().collect()
+    disks = queries.sparkSession.createDataFrame(_count_disks(pc, short, k, res))
+    s = flit(size)
+    # the radius of the bound _b2 (module docstring, step 3). least() skips
+    # NULL and orders NaN above every number, so a NULL, NaN or infinite
+    # bound gives a radius above nx, which covers the grid
+    rest = pending.join(F.broadcast(disks), ["_cx", "_cy"], "left").selectExpr(
+        "*",
+        f"CASE WHEN _n = {k} THEN _kth ELSE"
+        " greatest((_qlon - _x0) * (_qlon - _x0), (_qlon - _x1) * (_qlon - _x1))"
+        " + greatest((_qlat - _y0) * (_qlat - _y0), (_qlat - _y1) * (_qlat - _y1)) END AS _b2",
+    ).selectExpr("*", f"floor(least(sqrt(_b2) / {s}, {nx})) + 1 AS _r1").selectExpr(
+        ident(query_key), "_qlon", "_qlat", "_cx", "_cy",
+        f"CASE WHEN _b2 < (_r1 * {s}) * (_r1 * {s}) THEN _r1 ELSE _r1 + 1 END AS _r",
     )
-    p = _with_cell_xy(points, res).select(
-        point_key,
-        F.col("lon").alias("_plon"),
-        F.col("lat").alias("_plat"),
-        (F.col("_cy") * nx + F.col("_cx")).alias("_pcell"),
+    out = (query_key, point_key, "dist2", "knn_rank")
+    return ring1.where(settled).select(*out).unionByName(
+        _ranked(rest, p, k, res, query_key, point_key).select(*out)
     )
-    remaining = q
-    settled_parts: list[DataFrame] = []
-    for ring in range(1, max_ring + 1):
-        # truncate lineage so each pass doesn't recompute all prior passes
-        remaining = _materialize(remaining)
-        offsets = F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx, dy in cells.disk_offsets(ring)
-            ]
-        )
-        cand_cells = remaining.withColumn("_o", F.explode(offsets)).select(
-            query_key,
-            "_qlon",
-            "_qlat",
-            "_cx",
-            "_cy",
-            (
-                F.least(
-                    F.lit(cells.ny(res) - 1),
-                    F.greatest(F.lit(0), F.col("_cy") + F.col("_o.dy")),
-                )
-                * nx
-                + F.pmod(F.col("_cx") + F.col("_o.dx") + nx, F.lit(nx))
-            ).alias("_qcell"),
-        ).dropDuplicates([query_key, "_qcell"])
-        topk = _top_k(
-            cand_cells.join(p, cand_cells["_qcell"] == p["_pcell"], "inner"),
-            k, query_key, point_key,
-        )
-        # settled: k found and k-th distance strictly inside the explored radius
-        kth = topk.groupBy(query_key).agg(
-            F.count("*").alias("_n"), F.max("dist2").alias("_kth")
-        )
-        bound = (ring * size) ** 2
-        done_keys = kth.filter((F.col("_n") >= k) & (F.col("_kth") < F.lit(bound))).select(
-            query_key
-        )
-        settled_parts.append(topk.join(done_keys, query_key, "left_semi"))
-        remaining = remaining.join(done_keys, query_key, "left_anti")
-
-    # the sparse tail: each query left, against every point
-    settled_parts.append(_top_k(remaining.crossJoin(p.drop("_pcell")), k, query_key, point_key))
-
-    out = settled_parts[0]
-    for part in settled_parts[1:]:
-        out = out.unionByName(part)
-    return out.select(query_key, point_key, "dist2", "knn_rank")
 
 
 def knn_inline_arrays(
@@ -451,7 +481,6 @@ def nn_value_join(
     res: int = 6,
     query_key: str = "query_id",
     point_key: str = "point_id",
-    max_ring: int = 4,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """1-NN value transfer — the regrid-nearest spatial join
@@ -478,7 +507,7 @@ def nn_value_join(
         payload = tuple((c, schema[c].dataType.simpleString()) for c in values)
         out = (point_key, *values, "dist2")
         return _knn_inline(queries, rows, 1, point_key, queries.columns, out, payload)
-    nn = _knn_rings(queries, points, 1, res, query_key, point_key, max_ring).join(
+    nn = _knn_rings(queries, points, 1, res, query_key, point_key).join(
         points.select(point_key, *values), point_key, "left"
     )
     return queries.join(nn, query_key).select(*queries.columns, point_key, *values, "dist2")

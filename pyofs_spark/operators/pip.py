@@ -14,7 +14,10 @@ B. **Broadcast-dim + pandas-UDF path** — for polygon tables unknown at plan
    are collected to a broadcast variable (they are dimension-sized), pages
    are prefiltered by a cell-cover join (cells overlapping each polygon's
    bbox at `res`), then an Arrow-vectorized pandas UDF runs the exact
-   numpy ray cast per (candidate page, polygon).
+   numpy ray cast per (candidate page, polygon). It is the only path for
+   large polygons: path A's SQL, or the same filter written as `pip_sql`
+   under a CASE on polygon_id, grows with the vertex count, and Spark
+   fails to parse it at 1,000 vertices.
 
 At 10^12 rows path B's prefilter is what keeps the UDF off the hot path:
 only pages whose cell intersects some polygon bbox reach Python.
@@ -44,7 +47,9 @@ def pip_fixed(df: DataFrame, lon: str = "lon", lat: str = "lat",
 
     One projection from one SQL select list: `polygon_id` reads the `in_*`
     columns as lateral aliases of the same list. A lateral alias loses to a
-    column of df with the same name, hence the drop."""
+    column of df with the same name, hence the drop. The SQL grows with the
+    vertex count: a polygon of 1,000 vertices fails to parse
+    (FAILED_TO_PARSE_TOO_COMPLEX), so such polygons take path B."""
     polys = polys if polys is not None else P.POLYGONS
     outs = {f"in_{pid}" for pid in polys} | {"polygon_id"}
     clash = [c for c in df.columns if c in outs]

@@ -3,8 +3,8 @@ kernels re-expressed as Spark joins.
 
 - `regrid_nearest_join` — scattered→lattice 1-NN transfer, the Spark twin of
   wcofs.interpolate_grid(..., 'nearest') (ref: PyOFS/model/wcofs.py:1791-1827),
-  built on operators/knn.nn_value_join (inline literals or expanding cell
-  rings, exact (d², src_id) tie-break).
+  built on operators/knn.nn_value_join (inline literals or a two-pass cell
+  join, exact (d², src_id) tie-break).
 - `regrid_bilinear_regular` — bilinear interpolation of a REGULAR grid at
   query points (ref: xarray .interp, particle_contour.py:249-298): a
   closed-form equi-join of each query point to its enclosing cell's four
@@ -85,7 +85,6 @@ def regrid_nearest_join(
     res: int = 8,
     source_key: str = "point_id",
     target_key: str = "query_id",
-    max_ring: int = 4,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """1-NN value transfer from scattered sources to target points.
@@ -100,7 +99,6 @@ def regrid_nearest_join(
         res=res,
         query_key=target_key,
         point_key=source_key,
-        max_ring=max_ring,
         carry=carry,
     )
 

@@ -137,7 +137,7 @@ def materialize(df):
     PYOFS_DURABLE_MATERIALIZE=1 to use a RELIABLE checkpoint instead:
     written to the checkpoint dir (set PYOFS_CHECKPOINT_DIR to an HDFS /
     object-store path in production), recoverable on executor loss, and —
-    critically for the iterative call sites (expanding-ring kNN, RK
+    critically for the iterative call sites (the ring kNN passes, RK
     advection, adaptive regrid) — still a true lineage CUT, so plans
     don't grow across iterations the way a bare persist() would allow
     (round-4 review finding: persist neither truncates lineage nor is

@@ -23,6 +23,11 @@ from pyofs_spark.plans.pipeline import assign_cells, geocode_pages
 from pyofs_spark.synth import synth_pages
 
 
+def _unchanged(key: str) -> str:
+    """The fingerprint of a partition whose inputs never change."""
+    return "v1"
+
+
 def _build(spark, key: str):
     n = int(key.split("_")[1])
     return geocode_pages(synth_pages(spark, 200, 4)).filter(
@@ -35,26 +40,26 @@ def test_resume_equals_single_run(spark):
     d1, d2 = tempfile.mkdtemp(), tempfile.mkdtemp()
     try:
         # full run
-        r1 = run_partitioned(spark, d1, keys, _build)
+        r1 = run_partitioned(spark, d1, keys, _build, _unchanged)
         assert r1["ran"] == keys and r1["skipped"] == []
         full = {tuple(r) for r in read_output(spark, d1).select("page_id", "lon").collect()}
 
         # interrupted run: only first 2 partitions complete, then "crash"
-        r2a = run_partitioned(spark, d2, keys[:2], _build)
+        r2a = run_partitioned(spark, d2, keys[:2], _build, _unchanged)
         assert r2a["ran"] == keys[:2]
         # simulate orphan data without lineage (crash mid-partition 3)
         _build(spark, keys[2]).write.mode("overwrite").parquet(
             os.path.join(d2, f"part_key={keys[2]}")
         )
         # resume with the full key list
-        r2b = run_partitioned(spark, d2, keys, _build)
+        r2b = run_partitioned(spark, d2, keys, _build, _unchanged)
         assert r2b["skipped"] == keys[:2]
         assert r2b["ran"] == keys[2:]  # orphan partition re-ran (no lineage row)
         resumed = {tuple(r) for r in read_output(spark, d2).select("page_id", "lon").collect()}
         assert resumed == full
 
         # idempotent re-run does nothing
-        r3 = run_partitioned(spark, d2, keys, _build)
+        r3 = run_partitioned(spark, d2, keys, _build, _unchanged)
         assert r3["ran"] == [] and r3["skipped"] == keys
         # metrics present per partition
         assert set(r3["lineage"]) == set(keys)
@@ -74,6 +79,25 @@ def test_fingerprint_invalidation(spark):
         shutil.rmtree(d)
 
 
+def test_cli_tile_assign_reruns_when_its_arguments_change(spark, tmp_path, capsys):
+    """The CLI's bucket fingerprint covers the arguments that shape the
+    output: an unchanged re-run skips every bucket, another --k re-runs
+    every bucket and replaces its output."""
+    from pyofs_spark import cli
+
+    out = str(tmp_path / "tiles")
+
+    def run(k: int) -> str:
+        cli.main(["tile-assign", "--n-pages", "200", "--buckets", "2", "--k", str(k), "--out", out])
+        return capsys.readouterr().out.strip().splitlines()[-1]
+
+    assert "ran=2 skipped=0" in run(3)
+    assert "ran=0 skipped=2" in run(3)
+    assert "ran=2 skipped=0" in run(2)
+    sizes = read_output(spark, out).selectExpr("size(knn_stations) AS n").distinct().collect()
+    assert [r.n for r in sizes] == [2]
+
+
 def test_arrow_payload_reads_like_spark_payload(spark, tmp_path):
     """A pyarrow Table payload (written by pyarrow) and the same rows as a
     DataFrame payload (written by Spark) read back with the same schema
@@ -90,7 +114,7 @@ def test_arrow_payload_reads_like_spark_payload(spark, tmp_path):
     out = {}
     for kind, build in builds.items():
         root = str(tmp_path / kind)
-        r = run_partitioned(spark, root, ["k1", "k2"], build)
+        r = run_partitioned(spark, root, ["k1", "k2"], build, _unchanged)
         assert {k: v["n_rows"] for k, v in r["lineage"].items()} == {"k1": 3, "k2": 3}
         out[kind] = read_output(spark, root)
     assert out["arrow"].schema == out["spark"].schema
@@ -189,7 +213,7 @@ def test_manifest_snapshot_isolation(spark):
     keys = [f"bucket_{i}" for i in range(2)]
     d = tempfile.mkdtemp()
     try:
-        run_partitioned(spark, d, keys, _build)
+        run_partitioned(spark, d, keys, _build, _unchanged)
         n_before = read_output(spark, d).count()
         m = Manifest(d)
         assert m.current()["version"] == 2  # one snapshot per commit
@@ -198,7 +222,7 @@ def test_manifest_snapshot_isolation(spark):
             os.path.join(d, "part_key=bucket_3")
         )
         assert read_output(spark, d).count() == n_before  # not visible
-        run_partitioned(spark, d, keys + ["bucket_3"], _build)
+        run_partitioned(spark, d, keys + ["bucket_3"], _build, _unchanged)
         assert read_output(spark, d).count() == n_before + 50
         assert m.current()["version"] == 3
         # history retained for time travel: v1..v3 all on disk
@@ -250,21 +274,6 @@ def test_streaming_dedup_first_seen(spark):
         assert set(keys) == {r.norm_key for r in docs.select("norm_key").distinct().collect()}
     finally:
         shutil.rmtree(src), shutil.rmtree(chk)
-
-
-def test_size_ordered_scheduling(spark):
-    """O3: pending partitions run largest-first when size_of is given;
-    resume skip-set is unaffected by the ordering."""
-    keys = [f"bucket_{i}" for i in range(4)]
-    sizes = {"bucket_0": 10, "bucket_1": 40, "bucket_2": 20, "bucket_3": 30}
-    d = tempfile.mkdtemp()
-    try:
-        r = run_partitioned(spark, d, keys, _build, size_of=lambda k: sizes[k])
-        assert r["ran"] == ["bucket_1", "bucket_3", "bucket_2", "bucket_0"]
-        r2 = run_partitioned(spark, d, keys, _build, size_of=lambda k: sizes[k])
-        assert r2["ran"] == [] and set(r2["skipped"]) == set(keys)
-    finally:
-        shutil.rmtree(d)
 
 
 def test_manifest_commit_cost_flat_at_1e4_partitions():
@@ -371,7 +380,7 @@ def test_read_output_hides_first_uncommitted_partition(spark, monkeypatch):
     try:
         monkeypatch.setattr(Manifest, "commit", crash)
         with pytest.raises(RuntimeError, match="k1"):
-            run_partitioned(spark, d, keys, lambda s, k: table)
+            run_partitioned(spark, d, keys, lambda s, k: table, _unchanged)
         monkeypatch.undo()
         assert os.listdir(os.path.join(d, "part_key=k1")) == ["part-00000.parquet"]
         assert Manifest(d).current() == {"version": 0, "partitions": {}}
@@ -381,8 +390,8 @@ def test_read_output_hides_first_uncommitted_partition(spark, monkeypatch):
             read_output(spark, clean)
         assert os.listdir(clean) == []  # a reader creates nothing
 
-        assert run_partitioned(spark, d, keys, lambda s, k: table)["ran"] == keys
-        run_partitioned(spark, clean, keys, lambda s, k: table)
+        assert run_partitioned(spark, d, keys, lambda s, k: table, _unchanged)["ran"] == keys
+        run_partitioned(spark, clean, keys, lambda s, k: table, _unchanged)
 
         def rows(root):
             return sorted(tuple(r) for r in read_output(spark, root).collect())

@@ -19,40 +19,108 @@ from pyofs_spark.plans.pipeline import geocode_pages, tile_assignment
 from pyofs_spark.synth import synth_pages
 
 
+def _spark_order(d2):
+    """Spark's ascending order of a dist2: NULL first, NaN after inf."""
+    return (0, 0.0) if d2 is None else (2, 0.0) if d2 != d2 else (1, d2)
+
+
 def _knn_brute_py(qs, ps, k):
+    """{query_id: [(point_id, dist2), ...]}: the k best points of each query
+    by (dist2 in Spark's order, point_id), over every point."""
     out = {}
     for qid, qx, qy in qs:
-        d = sorted(
-            ((qx - px) * (qx - px) + (qy - py) * (qy - py), pid) for pid, px, py in ps
-        )
+        d = [
+            (None if qx is None or qy is None else (qx - px) * (qx - px) + (qy - py) * (qy - py), pid)
+            for pid, px, py in ps
+        ]
+        d.sort(key=lambda e: (_spark_order(e[0]), e[1]))
         out[qid] = [(pid, d2) for d2, pid in d[:k]]
     return out
 
 
-def test_knn_rings_exact_vs_brute(spark, monkeypatch):
-    """Force the ring path and check exactness against pure-python brute
-    force, with a clustered + sparse points side (ring expansion + tail)."""
-    monkeypatch.setattr(knn, "INLINE_POINTS_THRESHOLD", 0)
-    rng = np.random.default_rng(7)
-    n_q, n_p = 400, 300
-    qs = [(i, float(x), float(y)) for i, (x, y) in enumerate(
-        zip(rng.uniform(-130, -110, n_q), rng.uniform(25, 50, n_q)))]
-    # clustered points + a few isolated
-    px = np.concatenate([rng.normal(-122, 0.5, n_p - 5), rng.uniform(60, 170, 5)])
-    py = np.concatenate([rng.normal(37, 0.5, n_p - 5), rng.uniform(-60, 60, 5)])
-    ps = [(f"p{i:03d}", float(x), float(y)) for i, (x, y) in enumerate(zip(px, py))]
+_SIZE = 180.0 / 64  # the cell edge at res 6, exact in binary
 
+
+def _rings_inputs(rng):
+    """Points and queries for the ring path at res 6 (cell edge _SIZE):
+    a dense cluster and sparse points within the points' ±80° band, points
+    on both sides of ±180°, points at inf, and small constructions whose
+    answers lie just past what ring 1 shows."""
+    ps = [(float(x), float(y)) for x, y in zip(rng.normal(-122, 0.5, 250), rng.normal(37, 0.5, 250))]
+    ps += [(float(x), float(y)) for x, y in zip(
+        np.concatenate([rng.uniform(-180, -140, 20), rng.uniform(140, 180, 20)]),
+        np.concatenate([rng.uniform(-80, 80, 20), rng.uniform(0, 80, 20)]))]
+    # both sides of the antimeridian near (±180, 10)
+    ps += [(179.5, 10.2), (-179.5, 10.1), (-179.7, 9.5), (-179.2, 11.0)]
+    # cell corner (x0, y0): points at exactly 1 and 2 cell edges, the two
+    # at 2 edges in different cells (a tie that the point id breaks)
+    x0, y0 = -180 + 85 * _SIZE, -90 + 18 * _SIZE
+    ps += [(x0 + _SIZE, y0), (x0, y0 + 2 * _SIZE), (x0 - 2 * _SIZE, y0)]
+    # ring 1 of (x1, y1) shows three points 1.5 edges away, but the nearest
+    # lies 1.1 edges away in a cell two columns over
+    x1, y1 = -180 + 99 * _SIZE + 0.01, -90 + 39 * _SIZE + 0.01
+    ps += [(x1 + d, y1 + 1.5 * _SIZE) for d in (0.0, 0.05, -0.05)] + [(x1 - 1.1 * _SIZE, y1)]
+    # seen from (0, 300), the three points at lat 80 are nearer than the
+    # three at lat 70, though their cells are twice as far away
+    ps += [(x, 70.0) for x in (0.0, 0.5, -0.5)] + [(x, 80.0) for x in (40.0, 41.0, 39.0)]
+    # points at inf lie in a border cell but outside it: the one at
+    # (inf, -45) is 3 cells from (169, -45), whose nearest point is 7 away
+    ps += [(150.0, -45.0), (float("inf"), -45.0), (170.0, float("-inf"))]
+    ps = [(f"p{i:03d}", x, y) for i, (x, y) in enumerate(ps)]
+    qs = [(float(x), float(y)) for x, y in zip(rng.uniform(-130, -110, 150), rng.uniform(25, 50, 150))]
+    qs += [(180.0, 10.0), (-180.0, 10.0), (179.9, -5.0), (-179.9, 75.0)]  # ±180°
+    qs += [(x0, y0), (x1, y1), (x0 + _SIZE / 2, y0 + _SIZE), (169.0, -45.0)]  # the constructions
+    qs += [(-120.0, 85.0), (10.0, 89.9), (-150.0, -88.0)]  # beyond the points' band
+    qs += [(0.0, 300.0), (200.0, 0.0), (-500.0, -100.0), (0.0, 95.0)]  # beyond ±90° / ±180°
+    nan, inf = float("nan"), float("inf")
+    qs += [(None, 1.0), (nan, 2.0), (inf, 3.0), (0.0, -inf), (None, None)]
+    return ps, [(i, x, y) for i, (x, y) in enumerate(qs)]
+
+
+@pytest.mark.parametrize(
+    "shape, k",
+    [
+        pytest.param("knn_join", 1, id="knn_join-k1"),
+        pytest.param("knn_join", 3, id="knn_join-k3"),
+        pytest.param("nn_value_join", 1, id="nn_value_join"),
+        pytest.param("k_above_points", 9, id="k-above-points"),
+    ],
+)
+def test_knn_rings_exact_vs_brute(spark, monkeypatch, shape, k):
+    """The ring path (forced) equals brute force over every point, with
+    the (dist2, point_id) tie-break: for queries at ±180° with points on
+    both sides, beyond the points' band, beyond ±90°/±180° (their cells
+    are clamped), a k-th distance of exactly 1 or 2 cell edges, ties
+    across cells, points at inf, k above the point count, and NULL, NaN
+    or infinite query coordinates (which rank every point). nn_value_join
+    carries its `carry` column from the same neighbour."""
+    monkeypatch.setattr(knn, "INLINE_POINTS_THRESHOLD", 0)
+    ps, qs = _rings_inputs(np.random.default_rng(7))
+    if shape == "k_above_points":
+        ps, qs = ps[-8:], qs[150:]
     qdf = spark.createDataFrame(qs, "query_id long, lon double, lat double")
+    want = _knn_brute_py(qs, ps, k)
+    if shape == "nn_value_join":
+        pdf = spark.createDataFrame(
+            [(*p, float(i), 3 * i) for i, p in enumerate(ps)],
+            "point_id string, lon double, lat double, val double, tag long",
+        )
+        got = nn_value_join(qdf, pdf, "val", res=6, carry=("tag",)).collect()
+        assert len(got) == len(qs)
+        index = {p[0]: i for i, p in enumerate(ps)}
+        for r in got:
+            assert _same([(r.point_id, r.dist2)], want[r.query_id]), f"query {r.query_id}"
+            assert (r.val, r.tag) == (float(index[r.point_id]), 3 * index[r.point_id])
+        return
     pdf = spark.createDataFrame(ps, "point_id string, lon double, lat double")
-    got = knn_join(qdf, pdf, k=3, res=6, max_ring=3).collect()
-    exp = _knn_brute_py(qs, ps, 3)
     got_by_q = {}
-    for r in got:
+    for r in knn_join(qdf, pdf, k=k, res=6).collect():
         got_by_q.setdefault(r.query_id, []).append((r.knn_rank, r.point_id, r.dist2))
-    assert len(got_by_q) == n_q
+    assert set(got_by_q) == set(want)
     for qid, rows in got_by_q.items():
         rows.sort()
-        assert [(pid, d2) for _, pid, d2 in rows] == exp[qid], f"query {qid}"
+        assert [rank for rank, _, _ in rows] == list(range(1, len(rows) + 1))
+        assert _same([(pid, d2) for _, pid, d2 in rows], want[qid]), f"query {qid}"
 
 
 @pytest.mark.parametrize(
@@ -90,7 +158,7 @@ def test_nn_regrid_matches_golden_kernel(spark, monkeypatch, source, path):
     q = spark.createDataFrame(
         pd.DataFrame({"query_id": np.arange(len(qlon)), "lon": qlon, "lat": qlat})
     )
-    got = nn_value_join(q, src, "val", res=8, max_ring=3, carry=("tag",)).collect()
+    got = nn_value_join(q, src, "val", res=8, carry=("tag",)).collect()
     got_map = {r.query_id: r.val for r in got}
     assert len(got_map) == len(qlon)
     for i in range(len(qlon)):

@@ -90,13 +90,16 @@ def test_geotiff_spark_scan_roundtrip(spark):
 
 
 def test_daily_job_netcdf_in_geotiff_out(spark):
-    """File-to-file loop: the daily job's NetCDF output re-ingested
-    through the Spark scan source reproduces the GeoTIFF it sat beside —
+    """File-to-file loop: the daily job's NetCDF output, re-ingested
+    through the Spark scan source, regridded by the job's lattice stage
+    and written by its GeoTIFF sink, reproduces the GeoTIFF it sat beside:
     1-NN regrid of a lattice onto itself is the identity at data cells."""
     from pyofs_spark.jobs.daily import (
-        build_day_raster, build_day_raster_from_netcdf,
+        LAT0, LON0, N_LAT, N_LON, STEP, build_day_raster, masked_cells, regrid_to_lattice,
     )
     from pyofs_spark.sources.geotiff import read_geotiff
+    from pyofs_spark.sources.scan import read_netcdf3_grid
+    from pyofs_spark.sources.sinks import cells_grid, export_raster_geotiff
 
     out = tempfile.mkdtemp()
     try:
@@ -104,12 +107,16 @@ def test_daily_job_netcdf_in_geotiff_out(spark):
         build_day_raster(spark, SF_DIR, "sst", "2024-01-02", rasters)
         orig = read_geotiff(os.path.join(rasters, "sst_2024-01-02.tif"))
 
-        northup = build_day_raster_from_netcdf(
-            spark, rasters, "sst", "2024-01-02", rasters
+        # the non-null cells of the job's NetCDF are the scatter points
+        field = read_netcdf3_grid(spark, rasters, variables=["sst"]).selectExpr(
+            "CAST(j AS BIGINT) * 4096 + i AS point_id", "lon", "lat", "value"
+        ).where("value IS NOT NULL")
+        path = os.path.join(out, "sst_2024-01-02_from_nc.tif")
+        northup = export_raster_geotiff(
+            cells_grid(masked_cells(regrid_to_lattice(spark, field)), N_LON, N_LAT),
+            path, west=LON0, south=LAT0, dx=STEP, dy=STEP,
         )
-        again = read_geotiff(
-            os.path.join(rasters, "sst_2024-01-02_from_nc.tif")
-        )
+        again = read_geotiff(path)
         np.testing.assert_array_equal(northup, again["data"])
         # wherever the original raster carried data, the nc-ingested rerun
         # reproduces it exactly (same lattice, same mask, self-NN)

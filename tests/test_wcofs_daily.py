@@ -72,6 +72,8 @@ def _read_ascending(path: str) -> np.ndarray:
 
 
 def test_wcofs_daily_e2e_matches_goldens_and_resumes(spark, tmp_path):
+    """Both days match the goldens; an unchanged re-run skips every day and
+    leaves the files as they were; a rewritten granule re-runs its day."""
     nc_dir, out_root = str(tmp_path / "nc"), str(tmp_path / "out")
     write_wcofs_archive(nc_dir, DAYS)
     summary = run_wcofs_daily(spark, nc_dir, out_root, DAYS)
@@ -112,6 +114,15 @@ def test_wcofs_daily_e2e_matches_goldens_and_resumes(spark, tmp_path):
     assert again["skipped"] == DAYS and not again["ran"]
     for f, payload in before.items():
         assert open(os.path.join(raster_dir, f), "rb").read() == payload, f
+
+    # a rewritten granule (here: day 0's fields under the second day's
+    # name) re-runs only its day, whose rasters then follow the new input
+    write_wcofs_archive(nc_dir, DAYS[1:])
+    third = run_wcofs_daily(spark, nc_dir, out_root, DAYS)
+    assert third["ran"] == DAYS[1:] and third["skipped"] == DAYS[:1]
+    exp_mag, _ = _expected_rasters(spark, 0, spec)
+    got_mag = _read_ascending(os.path.join(raster_dir, f"wcofs_mag_{DAYS[1]}.tif"))
+    np.testing.assert_allclose(got_mag, exp_mag, rtol=2e-6, atol=2e-6)
 
 
 def test_wcofs_streaming_twin_matches_batch(spark, tmp_path):
