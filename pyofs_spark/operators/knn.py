@@ -354,7 +354,7 @@ def _ranked(q: DataFrame, p: DataFrame, k: int, res: int, query_key: str, point_
     )
 
 
-def _count_disks(p: DataFrame, short: list, k: int, res: int) -> pa.Table:
+def _count_disks(points: DataFrame, short: list, k: int, res: int) -> pa.Table:
     """For each cell (_cx, _cy) of `short`, the extent (_x0, _x1, _y0, _y1)
     in degrees of the smallest clipped cell disk around it that holds k
     points inside their cells' extents, or NULLs when none does: a binary
@@ -367,7 +367,7 @@ def _count_disks(p: DataFrame, short: list, k: int, res: int) -> pa.Table:
         e = flit(size)
         inside = (f"lon BETWEEN _cx * {e} - 180 AND (_cx + 1) * {e} - 180"
                   f" AND lat BETWEEN _cy * {e} - 90 AND (_cy + 1) * {e} - 90")
-        for x, y, n in p.where(inside).groupBy("_cx", "_cy").count().collect():
+        for x, y, n in points.where(inside).groupBy("_cx", "_cy").count().collect():
             s[y + 1, x + 1] = n
         s = s.cumsum(0).cumsum(1)
 

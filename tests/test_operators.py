@@ -64,7 +64,8 @@ def _rings_inputs(rng):
     # three at lat 70, though their cells are twice as far away
     ps += [(x, 70.0) for x in (0.0, 0.5, -0.5)] + [(x, 80.0) for x in (40.0, 41.0, 39.0)]
     # points at inf lie in a border cell but outside it: the one at
-    # (inf, -45) is 3 cells from (169, -45), whose nearest point is 7 away
+    # (inf, -45) is 3 cells from (169, -45), whose nearest point is 7 cells
+    # away
     ps += [(150.0, -45.0), (float("inf"), -45.0), (170.0, float("-inf"))]
     ps = [(f"p{i:03d}", x, y) for i, (x, y) in enumerate(ps)]
     qs = [(float(x), float(y)) for x, y in zip(rng.uniform(-130, -110, 150), rng.uniform(25, 50, 150))]
@@ -96,7 +97,7 @@ def test_knn_rings_exact_vs_brute(spark, monkeypatch, shape, k):
     carries its `carry` column from the same neighbour."""
     monkeypatch.setattr(knn, "INLINE_POINTS_THRESHOLD", 0)
     ps, qs = _rings_inputs(np.random.default_rng(7))
-    if shape == "k_above_points":
+    if shape == "k_above_points":  # 8 points, two at inf; the edge queries
         ps, qs = ps[-8:], qs[150:]
     qdf = spark.createDataFrame(qs, "query_id long, lon double, lat double")
     want = _knn_brute_py(qs, ps, k)
