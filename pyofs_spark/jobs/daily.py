@@ -82,12 +82,21 @@ def field_for_day(
     nan-skipping mean per scattered source point (i, j indices reused as
     the scatter ids; lon/lat derived deterministically). One short chain
     of SQL-string calls: each DataFrame call is a py4j round trip and an
-    analysis of the plan so far."""
+    analysis of the plan so far. A scan of at most
+    `spark.sql.files.openCostInBytes` bytes is coalesced to one partition,
+    so the aggregate needs no shuffle and the field is one Spark job; a
+    larger scan keeps the shuffle (two jobs: AQE runs its map stage as a
+    job of its own)."""
     mod = {"sst": 0, "ssh": 1}[variable]
+    path = os.path.join(sf_dir, "events.parquet")
+    scan = spark.read.schema(EVENTS_SCHEMA).parquet(path)
+    if _scan_bytes(path) <= spark._jsparkSession.sessionState().conf().filesOpenCostInBytes():
+        # Spark prices reading this many bytes the same as opening one
+        # file: one partition, whose SinglePartition already satisfies the
+        # aggregate, so the plan has no Exchange and runs as one job
+        scan = scan.coalesce(1)
     return (
-        spark.read.schema(EVENTS_SCHEMA)
-        .parquet(os.path.join(sf_dir, "events.parquet"))
-        .where(f"to_date(ts) = to_date({slit(day)}) AND event_id % 2 = {mod}")
+        scan.where(f"to_date(ts) = to_date({slit(day)}) AND event_id % 2 = {mod}")
         .selectExpr(
             "pmod(user_id, 40) AS i",
             "pmod(user_id * 7 + 3, 30) AS j",
@@ -102,6 +111,13 @@ def field_for_day(
             f"{flit(LAT0)} + j * {flit(0.25)} AS lat",
         )
     )
+
+
+def _scan_bytes(path: str) -> int:
+    """Total bytes of the files under a parquet path (a file or a directory)."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    return sum(os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(path) for f in fs)
 
 
 def regrid_to_lattice(

@@ -5,6 +5,17 @@ Settings chosen for 100 TB scale-out semantics while testing on local[N]:
 - Arrow on (all custom kernels are pandas/Arrow UDFs, never per-row Python)
 - shuffle partitions sized to the local core count; on a real cluster this
   is overridden to ~2-3x total cores via spark-submit conf.
+
+`get_session` builds the session and does nothing else: it runs no query
+and starts no Python worker. Spark forks the Python worker pool on the
+first plan that runs Python (a pandas/Arrow UDF, `mapInArrow`), and
+`spark.python.worker.reuse` (on by default) keeps that pool for the rest
+of the session. A job that never runs Python, such as the daily raster
+job or the tile-assignment stage, never pays for the pool: forking one
+worker per core at session start and importing numpy, pandas and pyarrow
+in each cost about 420 MB of resident memory and 6 s of set-up per
+process (measured on a 4-core host, `perfbench` `daily_etl` and
+`tile_assign`).
 """
 
 from __future__ import annotations
@@ -12,71 +23,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-# app ids whose Python worker pool has already been import-warmed
-_PREWARMED: set[str] = set()
-
-
-def _prewarm_python_workers(spark: SparkSession) -> None:
-    """Fork the Arrow Python worker pool and import numpy/pandas/pyarrow in
-    each worker, once per application (guide §4.5 applied at session scope).
-
-    The first Arrow-UDF job of a session otherwise pays worker fork +
-    interpreter + numpy/pandas import INSIDE a timed query (measured:
-    sim_cosine_topk noop-sink 3.0 s cold vs 0.25 s warm — ~2.7 s of the
-    cold time was worker startup, not computation). Workers are reused
-    across jobs (spark.python.worker.reuse default), so paying this at
-    session creation — alongside JVM startup, which every caller already
-    treats as setup — removes it from every subsequent Arrow path. This
-    warms WORKERS only; no query, table or result is touched (no result
-    caching). Disable with PYOFS_NO_PREWARM=1."""
-    if os.environ.get("PYOFS_NO_PREWARM"):
-        return
-    app = spark.sparkContext.applicationId
-    if app in _PREWARMED:
-        return
-    _PREWARMED.add(app)
-
-    def _touch(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-
-        yield from batches
-
-    n = spark.sparkContext.defaultParallelism
-    try:
-        spark.range(n, numPartitions=n).mapInArrow(_touch, "id long").count()
-        # Generic Catalyst/codegen JIT warm (still zero table access): the
-        # first expression-rich query of a fresh JVM otherwise pays the
-        # parser/analyzer/optimizer/janino compilation of cold HotSpot
-        # paths (measured: first two headline queries -0.8 s after this).
-        # A long-running cluster driver has these warm permanently; the
-        # plans below are synthetic range() shapes, unrelated to any real
-        # query or data.
-        w = spark.range(1000).selectExpr(
-            "id",
-            "cast(id as double) AS x",
-            "least(9, greatest(0, cast(floor(id / 7.0e0) as bigint))) AS c",
-            "CASE WHEN id % 3 = 0 THEN 'a' WHEN id % 3 = 1 THEN 'b' "
-            "ELSE NULL END AS s",
-            "slice(sort_array(array(named_struct('d', id * 1.5e0, 'i', 0), "
-            "named_struct('d', 3.0e0, 'i', 1))), 1, 1) AS tk",
-        )
-        w.groupBy("c").agg({"x": "sum"}).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        a = spark.range(100).withColumnRenamed("id", "k")
-        b = spark.range(50).withColumnRenamed("id", "k")
-        a.join(b, "k").write.format("noop").mode("overwrite").save()
-        spark.sql(
-            "SELECT id, row_number() OVER (PARTITION BY id % 5 ORDER BY id) rn "
-            "FROM range(100)"
-        ).write.format("noop").mode("overwrite").save()
-    except Exception:
-        # prewarm is best-effort: a worker-pool hiccup here must never
-        # break session creation
-        pass
 
 
 def get_session(
@@ -122,9 +68,7 @@ def get_session(
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
-    _prewarm_python_workers(spark)
-    return spark
+    return b.getOrCreate()
 
 
 def materialize(df):

@@ -24,7 +24,10 @@ metric's bound, whether the medians differ by more than the parent's
 interquartile range, and whether the metric is unresolved: the parent's
 IQR/median exceeds the bound, so "no worse than the bound" cannot be told
 from noise, unless every change run beats every parent run. The held-out
-seed is summarised on its own. Per workload and side, `runs` counts the
+seed is summarised on its own. Each --claim METRIC/WORKLOAD gets
+`claim_met`: the change wins at least nine tenths of the pairs (ties count
+for neither side) and the medians differ, in the change's favour, by more
+than the parent's IQR. Per workload and side, `runs` counts the
 runs that failed, timed out or reported incorrect results; they have no
 metrics (or wrong ones), so the medians alone would hide them. With
 --traced, one traced run per side (`--trace 1`) records the per-layer
@@ -185,6 +188,27 @@ def summarise(runs: list[dict], end_to_end: list[dict], holdout: set[int]) -> di
     return out
 
 
+def claim_met(entry: dict) -> bool:
+    """The gain rule for one summarised metric: the change wins at least
+    nine tenths of the pairs (ties count for neither side) and its median
+    is better than the parent's by more than the parent's IQR."""
+    gain = entry["parent_median"] - entry["change_median"]
+    if entry["better"] != "lower":
+        gain = -gain
+    return entry["change_wins"] >= 0.9 * entry["pairs"] and gain > entry["parent_iqr"]
+
+
+def claims(summary: dict, claimed: list[str]) -> dict:
+    """{"METRIC/WORKLOAD": {"claim_met": bool}} for each claimed metric;
+    a metric with no paired runs yet is not met."""
+    out = {}
+    for c in claimed:
+        name, _, wl = c.partition("/")
+        entry = summary.get(wl, {}).get(name)
+        out[c] = {"claim_met": entry is not None and claim_met(entry)}
+    return out
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True, help="checkout of the parent commit")
@@ -194,6 +218,8 @@ def main(argv=None) -> int:
     ap.add_argument("--holdout", type=int, action="append", default=[],
                     help="held-out seed, one pair each (repeatable)")
     ap.add_argument("--traced", type=int, help="seed of one traced run per side")
+    ap.add_argument("--claim", action="append", default=[], metavar="METRIC/WORKLOAD",
+                    help="claimed gain, judged by the gain rule into `claims` (repeatable)")
     ap.add_argument("--out", required=True)
     args = ap.parse_args(argv)
 
@@ -211,12 +237,14 @@ def main(argv=None) -> int:
         "commits": {s: git_sha(d) for s, d in dirs.items()},
         "seconds": seconds,
         "summary": {},
+        "claims": {},
         "traced": {},
         "runs": [],
     }
 
     def save() -> None:
         doc["summary"] = summarise(doc["runs"], bench["end_to_end"], set(args.holdout))
+        doc["claims"] = claims(doc["summary"], args.claim)
         with open(args.out, "w") as fh:
             json.dump(doc, fh, indent=1)
 

@@ -45,3 +45,31 @@ def test_unresolved_needs_wide_parent_spread_and_overlap():
     assert not _summary(wide, [0.5, 0.6, 0.7, 0.8])["run_s"]["unresolved"]
     # a tight parent spread is resolved even when the runs overlap
     assert not _summary([1.0, 1.01, 1.02, 1.03], [1.0, 1.02, 1.01, 1.04])["run_s"]["unresolved"]
+
+
+def test_claim_needs_nine_tenths_of_the_pairs():
+    parent = [1.0 + 0.01 * i for i in range(10)]
+    nine = [v - 0.5 for v in parent[:9]] + [parent[9]]  # the last pair ties
+    s = _summary(parent, nine)
+    assert s["run_s"]["change_wins"] == 9
+    assert ab_pairs.claims({"w": s}, ["run_s/w"]) == {"run_s/w": {"claim_met": True}}
+    eight = [v - 0.5 for v in parent[:8]] + [parent[8] + 0.1, parent[9]]
+    assert not ab_pairs.claim_met(_summary(parent, eight)["run_s"])
+
+
+def test_claim_needs_medians_apart_by_more_than_the_parent_iqr():
+    parent = [1.0 + 0.1 * i for i in range(10)]  # IQR 0.45
+    assert ab_pairs.claim_met(_summary(parent, [v - 0.5 for v in parent])["run_s"])
+    # every pair won, but by less than the parent's own spread
+    assert not ab_pairs.claim_met(_summary(parent, [v - 0.3 for v in parent])["run_s"])
+
+
+def test_claim_follows_the_metrics_direction():
+    higher = {**BOUND, "better": "higher"}
+    runs = [_run("parent", i, 1.0 + 0.01 * i) for i in range(10)]
+    runs += [_run("change", i, 0.5 + 0.01 * i) for i in range(10)]
+    lower_is_worse = ab_pairs.summarise(runs, [higher], set())
+    assert ab_pairs.claims(lower_is_worse, ["run_s/w", "run_s/other"]) == {
+        "run_s/w": {"claim_met": False},
+        "run_s/other": {"claim_met": False},
+    }
