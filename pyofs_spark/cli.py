@@ -50,12 +50,24 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
-    from .lineage import input_fingerprint, run_partitioned
+    from .lineage import Manifest, input_fingerprint, run_partitioned
     from .plans.pipeline import tile_assignment
     from .session import get_session
     from .synth import synth_pages
 
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    if args.cmd != "daily":
+        # a commit only adds or replaces entries: buckets committed by a
+        # run with more --buckets would stay visible beside this run's
+        stale = [k for k in Manifest(args.out).current()["partitions"]
+                 if k.startswith("bucket_") and int(k.split("_")[1]) >= args.buckets]
+        if stale:
+            parser.error(
+                f"--out {args.out} has {', '.join(sorted(stale))} committed, beyond "
+                f"--buckets {args.buckets}; a run cannot remove them, so write to a "
+                "fresh --out"
+            )
     spark = get_session(app_name="pyofs-cli", master=args.master)
 
     if args.cmd == "daily":

@@ -21,8 +21,12 @@ its publish/resume machinery:
            the lattice, so a corrected input re-runs it.
 
 Like the reference, each day raster is computed ONCE and every output is
-written from it. Only the field scan and its aggregate run on executors:
+written from it. Only the field scan and its aggregate run on executors,
+as one Spark job per partition:
   - the events scan declares its schema, so no job infers it;
+  - an events scan of at most `spark.sql.files.openCostInBytes` bytes is
+    one partition, so the aggregate needs no shuffle (a larger scan
+    shuffles, and AQE runs the shuffle's map stage as a second job);
   - the aggregated field (dimension-sized: ≤ 512 scatter points here) is
     executed by the one collect that also sizes it for the kNN path
     (operators/knn._inline_rows) and carries its values;
@@ -82,18 +86,16 @@ def field_for_day(
     nan-skipping mean per scattered source point (i, j indices reused as
     the scatter ids; lon/lat derived deterministically). One short chain
     of SQL-string calls: each DataFrame call is a py4j round trip and an
-    analysis of the plan so far. A scan of at most
-    `spark.sql.files.openCostInBytes` bytes is coalesced to one partition,
-    so the aggregate needs no shuffle and the field is one Spark job; a
-    larger scan keeps the shuffle (two jobs: AQE runs its map stage as a
-    job of its own)."""
+    analysis of the plan so far."""
     mod = {"sst": 0, "ssh": 1}[variable]
     path = os.path.join(sf_dir, "events.parquet")
     scan = spark.read.schema(EVENTS_SCHEMA).parquet(path)
     if _scan_bytes(path) <= spark._jsparkSession.sessionState().conf().filesOpenCostInBytes():
         # Spark prices reading this many bytes the same as opening one
-        # file: one partition, whose SinglePartition already satisfies the
-        # aggregate, so the plan has no Exchange and runs as one job
+        # file. One partition (SinglePartition) already satisfies the
+        # aggregate, so the plan has no Exchange and runs as one job; a
+        # larger scan keeps the shuffle, whose map stage AQE runs as a job
+        # of its own
         scan = scan.coalesce(1)
     return (
         scan.where(f"to_date(ts) = to_date({slit(day)}) AND event_id % 2 = {mod}")

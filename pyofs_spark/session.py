@@ -13,8 +13,8 @@ first plan that runs Python (a pandas/Arrow UDF, `mapInArrow`), and
 of the session. A job that never runs Python, such as the daily raster
 job or the tile-assignment stage, never pays for the pool: forking one
 worker per core at session start and importing numpy, pandas and pyarrow
-in each cost about 420 MB of resident memory and 6 s of set-up per
-process (measured on a 4-core host, `perfbench` `daily_etl` and
+in each cost about 450 MB of resident memory and up to 6 s of set-up per
+process (measured on a 4-core host with `perfbench` `daily_etl` and
 `tile_assign`).
 """
 

@@ -150,19 +150,56 @@ def _jobs(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_day_raster_job_budget(spark, tmp_path):
-    """One day partition costs at most two Spark jobs: the shuffle of the
-    field aggregate and the collect that sizes and fetches the scatter
-    points. The events scan declares its schema (no inference job), the
-    lattice stage runs on the driver, and the lineage payload is written
-    by pyarrow."""
+def _day_outputs(out):
+    """Per output file of one sst day partition: the GeoTIFF and NetCDF
+    bytes, the GeoPackage coverage's array, and the payload's bits."""
+    from pyofs_spark.sources.gpkg import read_gpkg_raster
+
+    rasters = os.path.join(out, "rasters")
+    files = {}
+    for f in ("sst_2024-01-02.tif", "sst_2024-01-02.nc"):
+        with open(os.path.join(rasters, f), "rb") as fh:
+            files[f] = fh.read()
+    gpkg = read_gpkg_raster(os.path.join(rasters, "2024-01-02.gpkg"), "sst_cov")
+    payload = pq.read_table(os.path.join(out, "part_key=sst__2024-01-02"))
+    return files, np.asarray(gpkg["data"]).tobytes(), _bits(payload)
+
+
+def _daily_jobs(spark, out):
     from pyofs_spark.jobs.daily import run_daily_job
 
-    s, jobs = _jobs(spark, "daily-budget", lambda: run_daily_job(
-        spark, SF_DIR, str(tmp_path / "out"), ("sst",), DAYS
-    ))
+    s, jobs = _jobs(spark, out, lambda: run_daily_job(spark, SF_DIR, out, ("sst",), DAYS))
     assert s["ran"] == ["sst__2024-01-02"]
-    assert jobs <= 2
+    return jobs
+
+
+def test_day_raster_job_budget(spark, tmp_path):
+    """One day partition costs one Spark job: the collect of the field
+    aggregate, which sizes and fetches the scatter points. The events
+    file is smaller than spark.sql.files.openCostInBytes, so its scan is
+    one partition and the aggregate needs no shuffle. The events scan
+    declares its schema (no inference job), the lattice stage runs on the
+    driver, and the lineage payload is written by pyarrow."""
+    assert _daily_jobs(spark, str(tmp_path / "out")) == 1
+
+
+def test_larger_scan_keeps_the_shuffle_bit_identical(spark, tmp_path):
+    """With openCostInBytes below the events file's size the field
+    aggregate shuffles (2 jobs: AQE runs the map stage as a job of its
+    own), and the rasters and payload are the same bit for bit: the
+    fixture has one row group, so the sums add in the same order."""
+    small = str(tmp_path / "one_job")
+    assert _daily_jobs(spark, small) == 1
+    key = "spark.sql.files.openCostInBytes"
+    assert os.path.getsize(os.path.join(SF_DIR, "events.parquet")) > 1024
+    was = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        large = str(tmp_path / "two_jobs")
+        assert _daily_jobs(spark, large) == 2
+    finally:
+        spark.conf.set(key, was)
+    assert _day_outputs(large) == _day_outputs(small)
 
 
 def _field(spark):

@@ -98,6 +98,34 @@ def test_cli_tile_assign_reruns_when_its_arguments_change(spark, tmp_path, capsy
     assert [r.n for r in sizes] == [2]
 
 
+def test_cli_refuses_fewer_buckets_than_committed(spark, tmp_path, capsys):
+    """A run with fewer --buckets than the committed ones exits before any
+    write, naming the buckets it could not remove; the committed output
+    is unchanged and a same-arguments re-run still skips every bucket."""
+    from pyofs_spark import cli
+
+    out = str(tmp_path / "tiles")
+
+    def run(buckets: int) -> None:
+        cli.main(["tile-assign", "--n-pages", "300", "--buckets", str(buckets), "--out", out])
+
+    def rows():
+        return sorted(r.j for r in read_output(spark, out).selectExpr("to_json(struct(*)) AS j").collect())
+
+    run(3)
+    before = rows()
+    assert len(before) == 300
+    capsys.readouterr()
+    with pytest.raises(SystemExit) as e:
+        run(2)
+    assert e.value.code != 0
+    err = capsys.readouterr().err
+    assert "bucket_2" in err and "bucket_1" not in err and "fresh --out" in err
+    assert rows() == before
+    run(3)
+    assert "ran=0 skipped=3" in capsys.readouterr().out
+
+
 def test_arrow_payload_reads_like_spark_payload(spark, tmp_path):
     """A pyarrow Table payload (written by pyarrow) and the same rows as a
     DataFrame payload (written by Spark) read back with the same schema
