@@ -18,6 +18,7 @@ TIFF structure written (little-endian):
 
 from __future__ import annotations
 
+import itertools
 import struct
 
 import numpy as np
@@ -185,10 +186,14 @@ def read_aaigrid_bytes(text) -> dict:
         k, v = lines[i].split(maxsplit=1)
         hdr[k.lower()] = float(v)
         i += 1
-    data = np.array(
-        [[float(x) for x in line.split()] for line in lines[i:] if line.strip()]
-    )
-    assert data.shape == (int(hdr["nrows"]), int(hdr["ncols"]))
+    missing = known - {"nodata_value"} - hdr.keys()
+    if missing:
+        raise ValueError(f"AAIGrid header lacks {sorted(missing)}")
+    rows = [[float(x) for x in line.split()] for line in lines[i:] if line.strip()]
+    shape = (int(hdr["nrows"]), int(hdr["ncols"]))
+    if len(rows) != shape[0] or any(len(r) != shape[1] for r in rows):
+        raise ValueError(f"AAIGrid data does not fill its {shape} header")
+    data = np.array(rows)
     return {
         "data": data,
         "west": hdr["xllcorner"],
@@ -200,7 +205,8 @@ def read_aaigrid_bytes(text) -> dict:
 
 def read_geotiff(path: str) -> dict:
     """Parse the subset written above (plus enough TIFF generality to read
-    any little-endian single-strip uncompressed float32 GeoTIFF).
+    any little-endian uncompressed single-band float32 GeoTIFF whose
+    strips are contiguous); anything else raises ValueError.
     Returns {data, west, north, dx, dy, nodata, geokeys}."""
     with open(path, "rb") as fh:
         return read_geotiff_bytes(fh.read())
@@ -238,8 +244,18 @@ def read_geotiff_bytes(buf: bytes) -> dict:
     w, h = tags[256][0], tags[257][0]
     if tags.get(259, (1,))[0] != 1 or tags.get(339, (3,))[0] != 3:
         raise ValueError("only uncompressed float rasters supported")
-    strip_off, strip_len = tags[273][0], tags[279][0]
-    data = np.frombuffer(buf, "<f4", count=h * w, offset=strip_off).reshape(h, w)
+    # TIFF defaults: BitsPerSample 1, SamplesPerPixel 1
+    if tags.get(258, (1,)) != (32,) or tags.get(277, (1,)) != (1,):
+        raise ValueError("only single-band 32-bit rasters supported")
+    offsets = tags[273]
+    ends = list(itertools.accumulate(tags[279], initial=offsets[0]))
+    if (
+        list(offsets) != ends[:-1]
+        or ends[-1] - offsets[0] != h * w * 4
+        or ends[-1] > len(buf)
+    ):
+        raise ValueError("strips must hold h*w float32 cells contiguously")
+    data = np.frombuffer(buf, "<f4", count=h * w, offset=offsets[0]).reshape(h, w)
     dx, dy, _ = tags[33550]
     _, _, _, west, north, _ = tags[33922]
     nodata = float(tags[42113][0]) if 42113 in tags else None

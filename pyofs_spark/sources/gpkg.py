@@ -12,8 +12,8 @@ no fiona/GDAL needed; any OGC reader opens these files.
 
 Layers are dimension-sized by contract (station points, contour polygons —
 same as the reference), so the write is a driver-side collect; a
-petabyte-scale vector OUTPUT would go to parquet/Iceberg instead
-(write_vector_points in sinks.py remains that path).
+petabyte-scale vector OUTPUT would go to a partitioned parquet/Iceberg
+table instead.
 """
 
 from __future__ import annotations
@@ -220,7 +220,8 @@ def read_gpkg_layer(path: str, layer: str) -> list[dict]:
         for row in con.execute(f'SELECT * FROM "{layer}"'):
             rec = dict(zip(cols, row))
             blob = rec.pop("geom")
-            assert blob[:2] == b"GP"
+            if not blob or blob[:2] != b"GP":
+                raise ValueError(f"{layer}: geometry is not a GeoPackage blob")
             flags = blob[3]
             env_len = {0: 0, 1: 32, 2: 48, 3: 48, 4: 64}[(flags >> 1) & 0x7]
             wkb = blob[8 + env_len :]

@@ -1,5 +1,5 @@
-"""Sinks: tile tables with the reference's raster-write semantics, vector
-point layers, and the dir-index manifest.
+"""Sinks: tile tables with the reference's raster-write semantics, the
+real-format raster exports, and the dir-index manifest.
 
 Reference semantics preserved exactly (SURVEY §4 "physical execution
 notes"):
@@ -75,14 +75,6 @@ def write_tile_table(
         F.coalesce(F.col("mean_val"), F.lit(NODATA)).cast("float"),
     )
     out.write.mode(mode).partitionBy("variable", "day", "level").parquet(path)
-
-
-def write_vector_points(
-    points: DataFrame, path: str, layer_col: str = "day", mode: str = "overwrite"
-) -> None:
-    """Vector point-layer sink (ref: per-cell GPKG point layers,
-    wcofs.py:713-835): one partition per layer key, unmasked rows only."""
-    points.write.mode(mode).partitionBy(layer_col).parquet(path)
 
 
 def dir_index_json(path: str) -> str:

@@ -20,10 +20,11 @@ batch plan — one (i, j) shuffle + broadcast grid join per day.
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.scan import binary_files
 
 _DAY_RE = re.compile(r"_(\d{4}-\d{2}-\d{2})\.nc$")
 
@@ -48,21 +49,6 @@ def wcofs_streaming_etl(
 
     lat0, lon0, lstep, n_lon, n_lat = lattice_spec
 
-    # the stream only carries ARRIVAL events (paths); decode happens in
-    # the per-day batch job so each day runs the audited batch plan
-    arrivals = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.nc")
-    )
-    if max_files_per_trigger is not None:
-        arrivals = arrivals.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         days = sorted(
             {
@@ -77,8 +63,11 @@ def wcofs_streaming_etl(
                 lat0, lon0, lstep, n_lon, n_lat,
             )
 
+    # the stream only carries ARRIVAL events (paths); decode happens in
+    # the per-day batch job so each day runs the audited batch plan
     ws = (
-        arrivals.load(nc_dir)
+        binary_files(spark, nc_dir, "*.nc", stream=True,
+                     max_files_per_trigger=max_files_per_trigger)
         .select("path")
         .writeStream.foreachBatch(_process)
         .option("checkpointLocation", checkpoint_dir)
