@@ -7,7 +7,7 @@ Arrow-batched mapInPandas decode that exposes each granule as long-form
 cell rows, closing the S1–S7 loop at the file-format level: users can
 point the engine at an existing NetCDF/GeoTIFF archive directly.
 
-Scale shape: `spark.read.format("binaryFile")` yields one row per file
+Scale shape: a batch binaryFile scan yields one row per file
 (path, content) and Spark assigns files to tasks — the per-granule
 parallelism the reference gets from its thread pool, but distributed and
 elastic. Decode happens inside the executors (mapInPandas; the pure
