@@ -93,14 +93,16 @@ def main(argv: list[str] | None = None) -> int:
 
     def build_bucket(s, key: str):
         b = int(key.split("_")[1])
-        pages = load_pages(s).filter(F.pmod("page_id", F.lit(args.buckets)) == b)
-        return tile_assignment(s, pages, k=args.k)
+        # a NULL page_id has no pmod; bucket 0 holds those pages
+        bucket = F.coalesce(F.pmod("page_id", F.lit(args.buckets)), F.lit(0))
+        return tile_assignment(s, load_pages(s).filter(bucket == b), k=args.k)
 
     # the pages (the --input files, or the synthetic count), k and the
-    # bucketing shape every bucket's output
+    # bucketing shape every bucket's output; the tag names the bucketing
+    # rule, so outputs committed when NULL keys were dropped re-run
     inputs = input_fingerprint(
         [args.input] if args.input else [],
-        [None if args.input else args.n_pages, args.k, args.buckets],
+        [None if args.input else args.n_pages, args.k, args.buckets, "null-key-bucket-0"],
     )
     keys = [f"bucket_{i}" for i in range(args.buckets)]
     summary = run_partitioned(spark, args.out, keys, build_bucket, lambda key: inputs)

@@ -16,13 +16,68 @@ worker per core at session start and importing numpy, pandas and pyarrow
 in each cost about 450 MB of resident memory and up to 6 s of set-up per
 process (measured on a 4-core host with `perfbench` `daily_etl` and
 `tile_assign`).
+
+The driver JVM starts from a dynamic class-data-sharing (CDS) archive:
+the classes the JVM loaded in an earlier run, already parsed and
+verified, mapped from one file. Loading and verifying Spark's classes is
+most of session start, and the archive takes about a third off it
+(perfbench `setup_s` on a 4-core host, in paired runs). The first run on a machine has
+no archive; its JVM records one at exit (`-XX:ArchiveClassesAtExit` into a
+temp file), which costs that run about 5 s at start and 14-15 s at exit
+to write 140-170 MB. The process that launched the JVM waits for it at
+exit and publishes the file as `<key>.jsa` only after a clean exit, so an
+interrupted or killed JVM leaves no archive. Every later run passes
+`-XX:SharedArchiveFile`.
+
+- Key: a hash of the java binary, its `lib/modules` and the Spark jars'
+  names and sizes; a new JDK or Spark records a new archive, and
+  publishing it deletes the others.
+- Location: `$XDG_CACHE_HOME/pyofs_spark/cds/`, else
+  `~/.cache/pyofs_spark/cds/`. The key depends on neither the checkout
+  nor the job, so every checkout and run on the machine shares the one
+  archive, and a fresh checkout or a wiped Spark local dir does not pay
+  for recording again.
+- Flags go in `spark.driver.defaultJavaOptions`, which Spark puts before
+  `spark.driver.extraJavaOptions`, with CDS logging off, so no JVM line
+  reaches stdout.
+- JDK 17 refuses to archive a classpath holding a non-empty directory,
+  and Spark's launcher puts `$SPARK_HOME/conf` first. When
+  `SPARK_CONF_DIR` is unset and that directory holds only `*.template`
+  files, the launch points `SPARK_CONF_DIR` at an empty directory in the
+  cache and then restores the environment.
+- Fallbacks: the session starts without an archive when `SPARK_CONF_DIR`
+  is set or Spark's conf directory holds real files, when the cache
+  cannot be created or written, and when the driver JVM is already
+  running (nothing is touched then). A published archive ends in a
+  trailer holding its length; a file without an intact trailer (garbage,
+  or cut short: JDK 17 maps a truncated archive and dies of SIGBUS) is
+  never passed to the JVM, and the run records a new one.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
+import itertools
 import os
+import shutil
+import struct
+import subprocess
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+# how long the process that launched a driver JVM waits for it at exit; a
+# JVM recording the archive spends 14-15 s writing it
+JVM_EXIT_TIMEOUT_S = 180
+_RECORDINGS = itertools.count()
+# appended to a published archive: a marker and the archive's length. JDK 17
+# ignores trailing bytes, but maps a truncated archive and dies of SIGBUS, so
+# a file without an intact trailer is never passed to the JVM.
+_TRAILER = struct.Struct("<8sQ")
+_MARK = b"pyofscds"
 
 
 def get_session(
@@ -68,7 +123,133 @@ def get_session(
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return b.getOrCreate()  # the driver JVM is already running
+    launch = _archive_launch()
+    if launch is None:
+        return b.getOrCreate()
+    flags, conf_dir, archive, tmp = launch
+    user_flags = (extra_conf or {}).get("spark.driver.defaultJavaOptions")
+    b = b.config("spark.driver.defaultJavaOptions", f"{flags} {user_flags or ''}".strip())
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        spark = b.getOrCreate()
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.remove(tmp or "")
+        raise
+    finally:
+        del os.environ["SPARK_CONF_DIR"]
+    atexit.register(_end_jvm, SparkContext._gateway.proc, tmp, archive)
+    return spark
+
+
+def _cache_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME", "")
+    if not os.path.isabs(base):
+        base = os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "pyofs_spark", "cds")
+
+
+def _archive_key(spark_home: str) -> str | None:
+    """The archive's name: a hash of the java binary Spark's launcher runs
+    (`$JAVA_HOME/bin/java`, else the one on PATH), the size and mtime of its
+    `lib/modules`, and the names and sizes of the Spark jars."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    if not java:
+        return None
+    java = os.path.realpath(java)
+    modules = os.stat(os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "modules"))
+    jars = os.path.realpath(os.path.join(spark_home, "jars"))
+    h = hashlib.sha256(f"{java}\0{modules.st_size}\0{modules.st_mtime_ns}\0{jars}".encode())
+    for e in sorted(os.scandir(jars), key=lambda e: e.name):
+        h.update(f"\0{e.name}\0{e.stat().st_size}".encode())
+    return h.hexdigest()[:20]
+
+
+def _archive_launch() -> tuple[str, str, str, str | None] | None:
+    """(JVM flags, empty conf dir, archive path, temp path) for a driver JVM
+    that maps the archive (temp path None) or records it into the temp path;
+    None when it must start without one."""
+    if "SPARK_CONF_DIR" in os.environ:
+        return None
+    try:
+        spark_home = _find_spark_home()
+        conf = os.path.join(spark_home, "conf")
+        if any(not n.endswith(".template") for n in (os.listdir(conf) if os.path.isdir(conf) else [])):
+            return None
+        key = _archive_key(spark_home)
+        if key is None:
+            return None
+        cache = _cache_dir()
+        conf_dir = os.path.join(cache, "conf")
+        os.makedirs(conf_dir, exist_ok=True)
+        if os.listdir(conf_dir):
+            return None
+        archive = os.path.join(cache, f"{key}.jsa")
+        if _intact(archive):
+            return f"-XX:SharedArchiveFile={archive} -Xlog:cds=off", conf_dir, archive, None
+        if not os.access(cache, os.W_OK):
+            return None
+    except OSError:
+        return None
+    tmp = os.path.join(cache, f"{key}.{os.getpid()}-{next(_RECORDINGS)}.tmp")
+    return f"-XX:ArchiveClassesAtExit={tmp} -Xlog:cds=off", conf_dir, archive, tmp
+
+
+def _end_jvm(proc: subprocess.Popen, tmp: str | None, archive: str) -> None:
+    """At exit: end the driver JVM this process launched and wait for it.
+    A recorded archive is published only after a clean exit."""
+    with contextlib.suppress(OSError):
+        proc.stdin.close()  # the gateway exits normally on EOF
+    try:
+        rc = proc.wait(timeout=JVM_EXIT_TIMEOUT_S)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        rc = proc.wait()
+    if tmp is None:
+        return
+    with contextlib.suppress(OSError):
+        size = os.path.getsize(tmp)
+        if rc != 0 or not size:
+            os.remove(tmp)
+            return
+        os.chmod(tmp, 0o644)  # the JVM writes it read-only
+        with open(tmp, "ab") as fh:
+            fh.write(_TRAILER.pack(_MARK, size))
+        os.replace(tmp, archive)
+        _prune(archive)
+
+
+def _intact(archive: str) -> bool:
+    """Whether `archive` ends in the trailer that publishing appends."""
+    try:
+        with open(archive, "rb") as fh:
+            size = fh.seek(0, os.SEEK_END) - _TRAILER.size
+            if size <= 0:
+                return False
+            fh.seek(size)
+            return _TRAILER.unpack(fh.read(_TRAILER.size)) == (_MARK, size)
+    except OSError:
+        return False
+
+
+def _prune(archive: str) -> None:
+    """Delete archives with other keys and temp files of dead processes."""
+    for e in os.scandir(os.path.dirname(archive)):
+        if e.name.endswith(".tmp"):
+            try:
+                os.kill(int(e.name.split(".")[1].split("-")[0]), 0)
+                continue
+            except ProcessLookupError:
+                pass
+            except (OSError, ValueError, IndexError):
+                continue
+        elif not e.name.endswith(".jsa") or e.path == archive:
+            continue
+        with contextlib.suppress(OSError):
+            os.remove(e.path)
 
 
 def materialize(df):

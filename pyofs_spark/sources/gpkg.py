@@ -30,6 +30,11 @@ _WGS84_WKT = (
 )
 
 
+def _quoted(name: str) -> str:
+    """`name` as an SQLite identifier: in double quotes, each `"` doubled."""
+    return '"' + name.replace('"', '""') + '"'
+
+
 def _gp_header(srs_id: int = 4326) -> bytes:
     # magic GP, version 0, flags 0b00000001 (little-endian, no envelope)
     return b"GP" + bytes([0, 0x01]) + struct.pack("<i", srs_id)
@@ -106,9 +111,9 @@ def write_gpkg_points(
     con = sqlite3.connect(path)
     try:
         _init_gpkg(con)
-        cols = ", ".join(f'"{n}" {t}' for n, t in props)
+        cols = ", ".join(f"{_quoted(n)} {t}" for n, t in props)
         con.execute(
-            f'CREATE TABLE "{layer}" (fid INTEGER PRIMARY KEY AUTOINCREMENT, '
+            f"CREATE TABLE {_quoted(layer)} (fid INTEGER PRIMARY KEY AUTOINCREMENT, "
             f"geom BLOB{', ' + cols if cols else ''})"
         )
         xs = [float(r[lon]) for r in rows]
@@ -128,7 +133,7 @@ def write_gpkg_points(
         hdr = _gp_header()
         ph = ", ".join("?" for _ in props)
         stmt = (
-            f'INSERT INTO "{layer}" (geom{"".join("," + chr(34) + n + chr(34) for n, _ in props)})'
+            f"INSERT INTO {_quoted(layer)} (geom{''.join(', ' + _quoted(n) for n, _ in props)})"
             f" VALUES (?{', ' + ph if props else ''})"
         )
         con.executemany(
@@ -180,10 +185,10 @@ def write_gpkg_polygons(
     con = sqlite3.connect(path)
     try:
         _init_gpkg(con)
-        cols = "".join(f', "{n}" {t}' for n, t in prop_cols)
+        cols = "".join(f", {_quoted(n)} {t}" for n, t in prop_cols)
         con.execute(
-            f'CREATE TABLE "{layer}" (fid INTEGER PRIMARY KEY AUTOINCREMENT, '
-            f'geom BLOB, "{id_col}" REAL, "{step_col}" INTEGER{cols})'
+            f"CREATE TABLE {_quoted(layer)} (fid INTEGER PRIMARY KEY AUTOINCREMENT, "
+            f"geom BLOB, {_quoted(id_col)} REAL, {_quoted(step_col)} INTEGER{cols})"
         )
         con.execute(
             "INSERT OR REPLACE INTO gpkg_contents "
@@ -198,8 +203,8 @@ def write_gpkg_polygons(
         ph = "".join(", ?" for _ in prop_cols)
         for (cid, step), verts in sorted(groups.items()):
             con.execute(
-                f'INSERT INTO "{layer}" (geom, "{id_col}", "{step_col}"'
-                f'{"".join("," + chr(34) + n + chr(34) for n, _ in prop_cols)}) '
+                f"INSERT INTO {_quoted(layer)} (geom, {_quoted(id_col)}, {_quoted(step_col)}"
+                f"{''.join(', ' + _quoted(n) for n, _ in prop_cols)}) "
                 f"VALUES (?, ?, ?{ph})",
                 (hdr + wkb_polygon([verts]), float(cid), int(step))
                 + prop_map.get((cid, step), tuple(None for _ in prop_cols)),
@@ -215,9 +220,9 @@ def read_gpkg_layer(path: str, layer: str) -> list[dict]:
     + WKB point/polygon geometries with stdlib struct."""
     con = sqlite3.connect(path)
     try:
-        cols = [r[1] for r in con.execute(f'PRAGMA table_info("{layer}")')]
+        cols = [r[1] for r in con.execute(f"PRAGMA table_info({_quoted(layer)})")]
         out = []
-        for row in con.execute(f'SELECT * FROM "{layer}"'):
+        for row in con.execute(f"SELECT * FROM {_quoted(layer)}"):
             rec = dict(zip(cols, row))
             blob = rec.pop("geom")
             if not blob or blob[:2] != b"GP":
@@ -243,6 +248,8 @@ def read_gpkg_layer(path: str, layer: str) -> list[dict]:
                 rec["geometry"] = rings
             out.append(rec)
         return out
+    except sqlite3.DatabaseError as e:
+        raise ValueError(f"{path}: layer {layer!r}: {e}") from e
     finally:
         con.close()
 
@@ -328,7 +335,7 @@ def write_gpkg_raster(
         _init_gpkg_raster_meta(con)
         # idempotent overwrite of the layer (resume/crash re-run semantics
         # of run_partitioned: re-writing a partition must not fail)
-        con.execute(f'DROP TABLE IF EXISTS "{layer}"')
+        con.execute(f"DROP TABLE IF EXISTS {_quoted(layer)}")
         con.execute(
             "DELETE FROM gpkg_extensions WHERE table_name = ?", (layer,)
         )
@@ -337,7 +344,7 @@ def write_gpkg_raster(
             (layer,),
         )
         con.execute(
-            f'CREATE TABLE "{layer}" (id INTEGER PRIMARY KEY AUTOINCREMENT, '
+            f"CREATE TABLE {_quoted(layer)} (id INTEGER PRIMARY KEY AUTOINCREMENT, "
             "zoom_level INTEGER NOT NULL, tile_column INTEGER NOT NULL, "
             "tile_row INTEGER NOT NULL, tile_data BLOB NOT NULL, "
             "UNIQUE (zoom_level, tile_column, tile_row))"
@@ -402,7 +409,7 @@ def write_gpkg_raster(
                     dx, dy, nodata=nodata,
                 )
                 cur = con.execute(
-                    f'INSERT INTO "{layer}" (zoom_level, tile_column,'
+                    f"INSERT INTO {_quoted(layer)} (zoom_level, tile_column,"
                     " tile_row, tile_data) VALUES (0, ?, ?, ?)",
                     (tc, tr, blob),
                 )
@@ -435,25 +442,28 @@ def read_gpkg_raster(path: str, layer: str) -> dict:
 
     con = sqlite3.connect(path)
     try:
-        (mw, mh, tw, th, dx, dy) = con.execute(
+        def one(sql: str) -> tuple:
+            row = con.execute(sql, (layer,)).fetchone()
+            if row is None:
+                raise ValueError(f"{path}: no coverage layer {layer!r}")
+            return row
+
+        (mw, mh, tw, th, dx, dy) = one(
             "SELECT matrix_width, matrix_height, tile_width, tile_height,"
             " pixel_x_size, pixel_y_size FROM gpkg_tile_matrix"
-            " WHERE table_name = ? AND zoom_level = 0",
-            (layer,),
-        ).fetchone()
-        (west, south, east, north) = con.execute(
+            " WHERE table_name = ? AND zoom_level = 0"
+        )
+        (west, south, east, north) = one(
             "SELECT min_x, min_y, max_x, max_y FROM gpkg_contents"
-            " WHERE table_name = ?",
-            (layer,),
-        ).fetchone()
-        (nodata,) = con.execute(
+            " WHERE table_name = ?"
+        )
+        (nodata,) = one(
             "SELECT data_null FROM gpkg_2d_gridded_coverage_ancillary"
-            " WHERE tile_matrix_set_name = ?",
-            (layer,),
-        ).fetchone()
+            " WHERE tile_matrix_set_name = ?"
+        )
         full = np.full((mh * th, mw * tw), nodata, np.float32)
         for tc, tr, blob in con.execute(
-            f'SELECT tile_column, tile_row, tile_data FROM "{layer}"'
+            f"SELECT tile_column, tile_row, tile_data FROM {_quoted(layer)}"
             " WHERE zoom_level = 0"
         ):
             t = read_geotiff_bytes(bytes(blob))
@@ -464,5 +474,7 @@ def read_gpkg_raster(path: str, layer: str) -> dict:
             "data": full[:h, :w], "west": west, "north": north,
             "dx": dx, "dy": dy, "nodata": nodata,
         }
+    except sqlite3.DatabaseError as e:
+        raise ValueError(f"{path}: layer {layer!r}: {e}") from e
     finally:
         con.close()

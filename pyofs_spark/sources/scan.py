@@ -291,14 +291,17 @@ def _staged_gpkg(content: bytes, data_type: str, layer: str | None):
     try:
         with os.fdopen(fd, "wb") as f:
             f.write(content)
-        with closing(sqlite3.connect(db)) as con:
-            names = [
-                r[0]
-                for r in con.execute(
-                    "SELECT table_name FROM gpkg_contents WHERE data_type = ?",
-                    (data_type,),
-                )
-            ]
+        try:
+            with closing(sqlite3.connect(db)) as con:
+                names = [
+                    r[0]
+                    for r in con.execute(
+                        "SELECT table_name FROM gpkg_contents WHERE data_type = ?",
+                        (data_type,),
+                    )
+                ]
+        except sqlite3.DatabaseError as e:
+            raise ValueError(f"not a GeoPackage: {e}") from e
         yield db, [n for n in names if layer in (None, n)]
     finally:
         os.unlink(db)

@@ -10,7 +10,10 @@ own `pyofs_spark`. A checkout with modified tracked files is refused: the
 recorded sha would not name the code that ran. For every workload and seed
 the two sides run back to back, and the side that goes first alternates
 with the pair index (parent first on even pairs), so a drift of the shared
-host's speed lands on both sides equally. Runs are sequential: two JVMs at once would contend for the
+host's speed lands on both sides equally. Before pair 0, each side runs
+each workload once unrecorded (kept under `priming`, in no pair or
+median), so no pair pays for a cache that a first run builds, such as the
+driver JVM's class-data-sharing archive. Runs are sequential: two JVMs at once would contend for the
 cores being measured. Every run lasts BENCHMARK.json's `run_seconds`, the
 run length the benchmark fixes.
 
@@ -232,13 +235,15 @@ def main(argv=None) -> int:
             f"Alternating parent/change pairs of `python3 perfbench/run.py --workload W "
             f"--seed S --seconds {seconds:g} --trace 0`, parent first on even pairs; "
             f"steal_frac/contaminated per run as perfbench reports them (contaminated = "
-            f"steal >= 2% of host CPU); medians and IQRs cover every run."
+            f"steal >= 2% of host CPU); medians and IQRs cover every run but the "
+            f"priming runs, one per side and workload before pair 0."
         ),
         "commits": {s: git_sha(d) for s, d in dirs.items()},
         "seconds": seconds,
         "summary": {},
         "claims": {},
         "traced": {},
+        "priming": [],
         "runs": [],
     }
 
@@ -248,7 +253,15 @@ def main(argv=None) -> int:
         with open(args.out, "w") as fh:
             json.dump(doc, fh, indent=1)
 
-    plan = [(wl, seed) for wl in args.workload for seed in parse_seeds(args.seeds)]
+    seeds = parse_seeds(args.seeds)
+    for wl in args.workload:
+        for side in ("parent", "change"):
+            r = run_once(dirs[side], wl, seeds[0], seconds, 0)
+            r.update(workload=wl, seed=seeds[0], side=side, trace=0)
+            doc["priming"].append(r)
+            print(f"priming {wl} {side}: rc={r['rc']}", flush=True)
+            save()
+    plan = [(wl, seed) for wl in args.workload for seed in seeds]
     plan += [(wl, seed) for wl in args.workload for seed in args.holdout]
     for pair, (wl, seed) in enumerate(plan):
         order = ("parent", "change") if pair % 2 == 0 else ("change", "parent")

@@ -5,6 +5,7 @@ unresolved unless every change run beats every parent run."""
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 
 _PATH = os.path.join(os.path.dirname(__file__), os.pardir, "scripts", "ab_pairs.py")
@@ -73,3 +74,32 @@ def test_claim_follows_the_metrics_direction():
         "run_s/w": {"claim_met": False},
         "run_s/other": {"claim_met": False},
     }
+
+
+def test_priming_runs_are_in_no_pair_and_no_median(tmp_path, monkeypatch):
+    dirs = {}
+    for side in ("parent", "change"):
+        dirs[side] = tmp_path / side
+        dirs[side].mkdir()
+        (dirs[side] / "BENCHMARK.json").write_text(
+            json.dumps({"run_seconds": 1, "end_to_end": [BOUND]}))
+    calls = []
+
+    def run_once(checkout, workload, seed, seconds, trace):
+        calls.append(checkout)
+        first = calls.count(checkout) == 1  # a side's first run builds its caches
+        return {"rc": 0, "correct": True, "metrics": {"run_s": 100.0 if first else 1.0}}
+
+    monkeypatch.setattr(ab_pairs, "run_once", run_once)
+    monkeypatch.setattr(ab_pairs, "git_sha", lambda checkout: "sha")
+    out = tmp_path / "ab.json"
+    ab_pairs.main(["--parent", str(dirs["parent"]), "--change", str(dirs["change"]),
+                   "--workload", "w", "--seeds", "1-4", "--out", str(out)])
+    doc = json.loads(out.read_text())
+    assert [(r["side"], r["metrics"]["run_s"]) for r in doc["priming"]] == [
+        ("parent", 100.0), ("change", 100.0)]
+    assert len(doc["runs"]) == 8
+    assert {r["metrics"]["run_s"] for r in doc["runs"]} == {1.0}
+    entry = doc["summary"]["w"]["run_s"]
+    assert entry["pairs"] == 4
+    assert entry["parent_median"] == entry["change_median"] == 1.0

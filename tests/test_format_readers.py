@@ -13,7 +13,7 @@ import pytest
 from pyofs_spark.sources.geotiff import (
     geotiff_bytes, read_aaigrid_bytes, read_geotiff_bytes,
 )
-from pyofs_spark.sources.gpkg import read_gpkg_layer
+from pyofs_spark.sources.gpkg import read_gpkg_layer, read_gpkg_raster
 
 
 def _patch_tag(buf: bytes, tag: int, count: int, value: int) -> bytes:
@@ -81,3 +81,11 @@ def test_gpkg_layer_reader_rejects_a_non_gpkg_geometry(tmp_path):
     con.close()
     with pytest.raises(ValueError):
         read_gpkg_layer(db, "pts")
+
+
+def test_gpkg_readers_raise_value_error_for_a_missing_layer(tmp_path):
+    db = str(tmp_path / "empty.gpkg")
+    sqlite3.connect(db).close()
+    for read in (read_gpkg_layer, read_gpkg_raster):
+        with pytest.raises(ValueError):
+            read(db, 'no"such')

@@ -98,6 +98,24 @@ def test_cli_tile_assign_reruns_when_its_arguments_change(spark, tmp_path, capsy
     assert [r.n for r in sizes] == [2]
 
 
+def test_cli_tile_assign_keeps_pages_with_a_null_page_id(spark, tmp_path, capsys):
+    """A --input page whose page_id is NULL lands in bucket 0, as
+    tile_assignment keeps it: every input page is one output row."""
+    from pyofs_spark import cli
+    from pyofs_spark.synth import synth_pages
+
+    pages = str(tmp_path / "pages")
+    synth_pages(spark, 100, 2).selectExpr(
+        "* EXCEPT (page_id)", "IF(page_id % 10 = 3, NULL, page_id) AS page_id"
+    ).write.parquet(pages)
+    out = str(tmp_path / "tiles")
+    cli.main(["tile-assign", "--input", pages, "--buckets", "3", "--out", out])
+    assert "ran=3 skipped=0" in capsys.readouterr().out
+    got = read_output(spark, out)
+    assert got.count() == 100
+    assert got.where("page_id IS NULL").count() == 10
+
+
 def test_cli_refuses_fewer_buckets_than_committed(spark, tmp_path, capsys):
     """A run with fewer --buckets than the committed ones exits before any
     write, naming the buckets it could not remove; the committed output

@@ -328,6 +328,35 @@ def test_gpkg_vector_spark_scan_roundtrip(spark):
         shutil.rmtree(d)
 
 
+def test_gpkg_layer_names_holding_a_double_quote_round_trip(spark):
+    """A layer named `a"b` is written and read back by every GPKG writer,
+    byte-level reader and Spark scan."""
+    import numpy as np
+
+    from pyofs_spark.sources.gpkg import (
+        read_gpkg_layer, read_gpkg_raster, write_gpkg_points, write_gpkg_raster,
+    )
+    from pyofs_spark.sources.scan import read_gpkg_coverage, read_gpkg_vector
+
+    d = tempfile.mkdtemp()
+    try:
+        gp = os.path.join(d, "day.gpkg")
+        pts = spark.createDataFrame([(-125.0, 40.0, 1)], "lon double, lat double, n int")
+        write_gpkg_points(pts, gp, 'a"b')
+        a = np.array([[1.0, 2.0], [3.0, 4.0]], np.float32)
+        write_gpkg_raster(gp, 'c"d', a, west=-126.0, north=41.0, dx=0.5, dy=0.5)
+
+        (rec,) = read_gpkg_layer(gp, 'a"b')
+        assert rec["geometry"] == (-125.0, 40.0) and rec["n"] == 1
+        assert np.array_equal(read_gpkg_raster(gp, 'c"d')["data"], a)
+        (row,) = read_gpkg_vector(spark, d, layer='a"b').collect()
+        assert (row.layer, row.lon, row.lat) == ('a"b', -125.0, 40.0)
+        cells = read_gpkg_coverage(spark, d).collect()
+        assert {r.variable for r in cells} == {'c"d'} and len(cells) == 4
+    finally:
+        shutil.rmtree(d)
+
+
 def test_gpkg_coverage_spark_scan_roundtrip(spark):
     """write_gpkg_raster → Spark coverage scan → identical cells through
     the same long-form schema as the GeoTIFF scan (nodata → NULL, j
