@@ -98,8 +98,7 @@ def main(argv: list[str] | None = None) -> int:
         return tile_assignment(s, load_pages(s).filter(bucket == b), k=args.k)
 
     # the pages (the --input files, or the synthetic count), k and the
-    # bucketing shape every bucket's output; the tag names the bucketing
-    # rule, so outputs committed when NULL keys were dropped re-run
+    # bucketing (its rule named by the tag) shape every bucket's output
     inputs = input_fingerprint(
         [args.input] if args.input else [],
         [None if args.input else args.n_pages, args.k, args.buckets, "null-key-bucket-0"],

@@ -134,10 +134,6 @@ def get_session(
     os.environ["SPARK_CONF_DIR"] = conf_dir
     try:
         spark = b.getOrCreate()
-    except BaseException:
-        with contextlib.suppress(OSError):
-            os.remove(tmp or "")
-        raise
     finally:
         del os.environ["SPARK_CONF_DIR"]
     atexit.register(_end_jvm, SparkContext._gateway.proc, tmp, archive)
@@ -151,15 +147,12 @@ def _cache_dir() -> str:
     return os.path.join(base, "pyofs_spark", "cds")
 
 
-def _archive_key(spark_home: str) -> str | None:
+def _archive_key(spark_home: str) -> str:
     """The archive's name: a hash of the java binary Spark's launcher runs
     (`$JAVA_HOME/bin/java`, else the one on PATH), the size and mtime of its
     `lib/modules`, and the names and sizes of the Spark jars."""
     home = os.environ.get("JAVA_HOME")
-    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
-    if not java:
-        return None
-    java = os.path.realpath(java)
+    java = os.path.realpath(os.path.join(home, "bin", "java") if home else shutil.which("java") or "")
     modules = os.stat(os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "modules"))
     jars = os.path.realpath(os.path.join(spark_home, "jars"))
     h = hashlib.sha256(f"{java}\0{modules.st_size}\0{modules.st_mtime_ns}\0{jars}".encode())
@@ -180,8 +173,6 @@ def _archive_launch() -> tuple[str, str, str, str | None] | None:
         if any(not n.endswith(".template") for n in (os.listdir(conf) if os.path.isdir(conf) else [])):
             return None
         key = _archive_key(spark_home)
-        if key is None:
-            return None
         cache = _cache_dir()
         conf_dir = os.path.join(cache, "conf")
         os.makedirs(conf_dir, exist_ok=True)
@@ -226,11 +217,8 @@ def _intact(archive: str) -> bool:
     """Whether `archive` ends in the trailer that publishing appends."""
     try:
         with open(archive, "rb") as fh:
-            size = fh.seek(0, os.SEEK_END) - _TRAILER.size
-            if size <= 0:
-                return False
-            fh.seek(size)
-            return _TRAILER.unpack(fh.read(_TRAILER.size)) == (_MARK, size)
+            size = fh.seek(-_TRAILER.size, os.SEEK_END)
+            return size > 0 and _TRAILER.unpack(fh.read()) == (_MARK, size)
     except OSError:
         return False
 

@@ -83,9 +83,13 @@ def test_gpkg_layer_reader_rejects_a_non_gpkg_geometry(tmp_path):
         read_gpkg_layer(db, "pts")
 
 
-def test_gpkg_readers_raise_value_error_for_a_missing_layer(tmp_path):
+def test_gpkg_readers_raise_value_error_for_a_missing_layer_or_file(tmp_path):
+    from pyofs_spark.sources.scan import _staged_gpkg
+
     db = str(tmp_path / "empty.gpkg")
     sqlite3.connect(db).close()
     for read in (read_gpkg_layer, read_gpkg_raster):
         with pytest.raises(ValueError):
             read(db, 'no"such')
+    with pytest.raises(ValueError), _staged_gpkg(b"not a database file" * 64, "features", None):
+        pass

@@ -133,7 +133,7 @@ def _java_alive(pid: int) -> bool:
 
 
 _CONF = os.path.join(session._find_spark_home(), "conf")
-pytestmark_archive = pytest.mark.skipif(
+needs_template_conf = pytest.mark.skipif(
     any(not n.endswith(".template") for n in (os.listdir(_CONF) if os.path.isdir(_CONF) else [])),
     reason="Spark's own conf dir holds real files, so no archive can be recorded",
 )
@@ -145,7 +145,7 @@ def recorded(tmp_path_factory):
     return cache, _start(cache)
 
 
-@pytestmark_archive
+@needs_template_conf
 def test_first_start_records_the_archive_and_waits_for_the_jvm(recorded):
     cache, first = recorded
     assert _files(cache) == [os.path.basename(_archive(cache))]
@@ -155,7 +155,7 @@ def test_first_start_records_the_archive_and_waits_for_the_jvm(recorded):
     assert first["conf_dir"] is None
 
 
-@pytestmark_archive
+@needs_template_conf
 def test_second_start_maps_the_archive(recorded):
     cache, _ = recorded
     second = _start(cache)
@@ -163,7 +163,7 @@ def test_second_start_maps_the_archive(recorded):
     assert not _java_alive(second["pid"])
 
 
-@pytestmark_archive
+@needs_template_conf
 @pytest.mark.parametrize("damage", ["garbage", "truncated"])
 def test_a_damaged_archive_still_gives_a_working_session(recorded, tmp_path, damage):
     good = _archive(recorded[0])
@@ -187,7 +187,7 @@ def test_spark_conf_dir_with_a_real_file_turns_the_archive_off(tmp_path):
     assert _files(tmp_path) == []
 
 
-@pytestmark_archive
+@needs_template_conf
 def test_a_recording_jvm_killed_before_exit_leaves_no_archive(tmp_path):
     result = _start(tmp_path, "kill")
     assert _archive(tmp_path) not in result["maps"]
